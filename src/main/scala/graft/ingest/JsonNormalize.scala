@@ -39,8 +39,11 @@ object JsonNormalize {
       graft.functions.JsonUnwrap(
         org.apache.spark.sql.graftshim.ColumnBridge.expression(c)))
 
-  /** P1: tolerant parse. PERMISSIVE from_json → null struct on corrupt
-    * input; caller filters nulls (the reference drops silently,
+  /** P1: tolerant parse. On Spark 4, PERMISSIVE from_json returns a
+    * struct of all-null fields for malformed input, not a null struct, so
+    * `t.isNotNull` does not drop it. Callers that must tell corrupt
+    * records apart use [[graft.ingest.KafkaTelemetrySource.taggedTelemetry]],
+    * which marks them in `__corrupt` (the reference drops them silently,
     * `TelematicsViolationDeriverJob.java:111-114`). */
   def parseTolerant(c: Column, schema: StructType): Column =
     from_json(unwrapNative(c), schema, Map("mode" -> "PERMISSIVE"))

@@ -2,16 +2,20 @@ package graft.schema
 
 import org.apache.spark.sql.types._
 
-/** Canonical schema for raw vehicle telemetry.
+/** Parse schema for raw vehicle telemetry.
   *
-  * Mirrors the reference's wire format: generator
-  * `/root/reference/mqtt_publish.js:236-284`, documented shape
-  * `/root/reference/README.md:439-475`, consumed tolerant-JSON-style by
-  * `/root/reference/TelematicsViolationDeriverJob.java:106-214`.
+  * The wire format comes from the reference's generator
+  * (`mqtt_publish.js:236-284`; documented shape `README.md:439-475`).
+  * SURVEY §1.3 maps its full 30-field shape to Spark types.
   *
-  * Schema-on-read: `from_json` in PERMISSIVE mode yields null for absent /
-  * malformed fields, matching the reference's `has()`-guarded access
-  * (`TelematicsViolationDeriverJob.java:208-214`).
+  * [[telemetry]] holds only the fields the derivers read, the way the
+  * reference's job reads what it emits and ignores the rest
+  * (`FAIL_ON_UNKNOWN_PROPERTIES=false`, `has()`-guarded access,
+  * `TelematicsViolationDeriverJob.java:106-214`).
+  * Every other field is skipped by the parser: it is not converted, not
+  * projected, and not cached by the demux's per-batch `persist`, and a
+  * wrongly typed unread field does not make a record corrupt. An absent
+  * or null read field parses to null (`from_json` in PERMISSIVE mode).
   */
 object TelemetrySchema {
 
@@ -35,29 +39,7 @@ object TelemetrySchema {
     StructField("device_uuid", StringType),
     StructField("mqtt_sent_at_ms", LongType),
     StructField("timestamp", LongType),                    // epoch seconds
-    StructField("fix_quality", StringType),
-    StructField("temp_C", DoubleType),
-    StructField("accel_x", DoubleType),
-    StructField("accel_y", DoubleType),
-    StructField("accel_z", DoubleType),
-    StructField("gyro_x", DoubleType),
-    StructField("gyro_y", DoubleType),
-    StructField("gyro_z", DoubleType),
-    StructField("cpu_temp", IntegerType),
-    StructField("soc_temp", IntegerType),
-    StructField("main_board_temp", DoubleType),
-    StructField("sim_iccid", StringType),
-    StructField("sim_imsi", StringType),
-    StructField("signal_strength_percent", IntegerType),
-    StructField("imu_is_stopped", BooleanType),
     StructField("dashcam_power_source", StringType),       // "battery"|"external"
-    StructField("battery_capacity", IntegerType),
-    StructField("lat_dir", StringType),
-    StructField("lon_dir", StringType),
-    StructField("location_changed", StringType),           // int OR bool on wire
-    StructField("speed_kph", DoubleType),
-    StructField("speed_mph", DoubleType),
-    StructField("ontrip", BooleanType),
     StructField("location", locationType),
     StructField("vehicle_id", StringType),
     StructField("account_id", StringType),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, File, FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
 
@@ -71,6 +71,10 @@ object FileLog {
 
   val SegmentPrefix = "seg-"
 
+  /** Segment stream buffer: `readInt`/`writeInt` on a bare file stream
+    * cost one syscall per byte. */
+  val IoBufferBytes: Int = 64 * 1024
+
   def topicDir(root: String, topic: String) = new File(root, topic)
   def partDir(root: String, topic: String, p: Int) =
     new File(topicDir(root, topic), s"p$p")
@@ -95,30 +99,20 @@ object FileLog {
     else (java.util.Arrays.hashCode(key) & Int.MaxValue) % numPartitions
 
   /** Driver-side producer client (single writer per topic): appends one
-    * committed segment per call — the send+flush of a Kafka producer.
-    * Records route by key hash exactly like the DSv2 write path, so
-    * per-key ordering holds across both producers. */
+    * committed segment per routed partition per call — the send+flush of
+    * a Kafka producer. It stages and publishes through the DSv2 write
+    * path, so routing and per-key ordering are the same for both. */
   def produce(root: String, topic: String,
               records: Seq[(Array[Byte], Array[Byte])],
-              numPartitions: Int = 4): Unit =
-    records.groupBy(r => route(r._1, numPartitions)).foreach { case (p, recs) =>
-      val dir = partDir(root, topic, p)
-      dir.mkdirs()
-      val base = endOffset(dir)
-      val tmp = new File(dir, s".tmp-${UUID.randomUUID()}")
-      val out = new DataOutputStream(new FileOutputStream(tmp))
-      val nowMicros = System.currentTimeMillis() * 1000L
-      recs.foreach { case (k, v) =>
-        def blob(b: Array[Byte]): Unit =
-          if (b == null) out.writeInt(-1)
-          else { out.writeInt(b.length); out.write(b) }
-        blob(k); blob(v); out.writeLong(nowMicros)
-      }
-      out.close()
-      Files.move(tmp.toPath,
-        new File(dir, f"$SegmentPrefix$base%020d-${recs.length}").toPath,
-        StandardCopyOption.ATOMIC_MOVE)
-    }
+              numPartitions: Int = 4): Unit = {
+    val spec = FileLogWriteSpec(root, topic, numPartitions, keyIdx = 0,
+      keyIsString = false, valIdx = 1, valIsString = false, tsIdx = 2)
+    val writer = new FileLogDataWriter(spec)
+    val nowMicros = System.currentTimeMillis() * 1000L
+    records.foreach { case (k, v) =>
+      writer.write(new GenericInternalRow(Array[Any](k, v, nowMicros))) }
+    FileLogCommit.publish(spec, Array(writer.commit()))
+  }
 
   /** Options helper: topic is required; partitions has a default. */
   def topicOf(o: CaseInsensitiveStringMap): String = {
@@ -317,23 +311,19 @@ class FileLogPartitionReader(p: FileLogInputPartition)
         if (!segs.hasNext) return false
         val (b, c, f) = segs.next()
         segBase = b; segCount = c; idx = 0
-        in = new DataInputStream(new FileInputStream(f))
+        in = new DataInputStream(
+          new BufferedInputStream(new FileInputStream(f), FileLog.IoBufferBytes))
       }
       if (idx >= segCount || segBase + idx >= p.to) {
         in.close(); in = null
       } else {
-        val keyLen = in.readInt()
-        val key = if (keyLen < 0) null else {
-          val a = new Array[Byte](keyLen); in.readFully(a); a
-        }
-        val valLen = in.readInt()
-        val value = if (valLen < 0) null else {
-          val a = new Array[Byte](valLen); in.readFully(a); a
-        }
-        val tsMicros = in.readLong()
         val off = segBase + idx
         idx += 1
-        if (off >= p.from) {
+        val keep = off >= p.from
+        val key = blob(keep)
+        val value = blob(keep)
+        val tsMicros = in.readLong()
+        if (keep) {
           row = new GenericInternalRow(Array[Any](
             key, value, topicUtf8, p.partition, off, tsMicros))
           return true
@@ -341,6 +331,15 @@ class FileLogPartitionReader(p: FileLogInputPartition)
       }
     }
     false
+  }
+
+  /** Next length-prefixed blob; a record before `from` is skipped, not
+    * allocated. */
+  private def blob(keep: Boolean): Array[Byte] = {
+    val len = in.readInt()
+    if (len < 0) null
+    else if (!keep) { in.skipBytes(len); null }
+    else { val a = new Array[Byte](len); in.readFully(a); a }
   }
 
   override def get(): InternalRow = row
@@ -419,7 +418,12 @@ class FileLogStreamingWriterFactory(spec: FileLogWriteSpec)
   * driver-side commit assigns offsets and publishes via atomic rename. */
 class FileLogDataWriter(spec: FileLogWriteSpec)
     extends DataWriter[InternalRow] {
-  private val tmp = scala.collection.mutable.Map[Int, (File, DataOutputStream, Long)]()
+  private final class Staged(val file: File) {
+    val out = new DataOutputStream(
+      new BufferedOutputStream(new FileOutputStream(file), FileLog.IoBufferBytes))
+    var count = 0L
+  }
+  private val tmp = new Array[Staged](spec.numPartitions)
 
   private def bytes(row: InternalRow, idx: Int, isString: Boolean): Array[Byte] =
     if (row.isNullAt(idx)) null
@@ -433,28 +437,29 @@ class FileLogDataWriter(spec: FileLogWriteSpec)
       if (spec.tsIdx >= 0 && !row.isNullAt(spec.tsIdx)) row.getLong(spec.tsIdx)
       else System.currentTimeMillis() * 1000L
     val p = FileLog.route(key, spec.numPartitions)
-    val (_, out, count) = tmp.getOrElseUpdate(p, {
+    if (tmp(p) == null) {
       val dir = FileLog.partDir(spec.root, spec.topic, p)
       dir.mkdirs()
-      val f = new File(dir, s".tmp-${UUID.randomUUID()}")
-      (f, new DataOutputStream(new FileOutputStream(f)), 0L)
-    })
-    def writeBlob(b: Array[Byte]): Unit =
-      if (b == null) out.writeInt(-1)
-      else { out.writeInt(b.length); out.write(b) }
-    writeBlob(key); writeBlob(value); out.writeLong(ts)
-    tmp(p) = (tmp(p)._1, out, count + 1)
+      tmp(p) = new Staged(new File(dir, s".tmp-${UUID.randomUUID()}"))
+    }
+    val s = tmp(p)
+    def blob(b: Array[Byte]): Unit =
+      if (b == null) s.out.writeInt(-1)
+      else { s.out.writeInt(b.length); s.out.write(b) }
+    blob(key); blob(value); s.out.writeLong(ts)
+    s.count += 1
   }
+
+  private def staged = tmp.zipWithIndex.filter(_._1 != null).toSeq
 
   override def commit(): WriterCommitMessage = {
-    tmp.values.foreach(_._2.close())
+    staged.foreach(_._1.out.close())
     FileLogCommitMessage(
-      tmp.map { case (p, (f, _, c)) => (p, f.getAbsolutePath, c) }.toSeq)
+      staged.map { case (s, p) => (p, s.file.getAbsolutePath, s.count) })
   }
 
-  override def abort(): Unit = {
-    tmp.values.foreach { case (f, out, _) => out.close(); f.delete() }
-  }
+  override def abort(): Unit =
+    staged.foreach { case (s, _) => s.out.close(); s.file.delete() }
 
   override def close(): Unit = ()
 }

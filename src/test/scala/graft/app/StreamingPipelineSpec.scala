@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.derive.ViolationDeriver
 import graft.ingest.{JsonNormalize, KafkaTelemetrySource}
 import graft.schema.TelemetrySchema
 import graft.sink.KafkaEventSink
@@ -72,10 +73,20 @@ class StreamingPipelineSpec extends SparkTestBase {
   }
 
   test("dead letters: corrupt non-blank inputs are captured, not dropped") {
-    val tagged = KafkaTelemetrySource.taggedTelemetry(inputs.toDF("value"))
-    val dead = KafkaTelemetrySource.deadLetters(tagged)
+    // a wrongly typed field the derivers never read is ignored, as in the
+    // reference; a wrongly typed field they read still makes the record corrupt
+    val hotTemp = """{"temp_C":"hot",""" +
+      telemetryJson("d4", 400, "external", Seq("harsh_brake")).drop(1)
+    val badTs = telemetryJson("d5", 500, "battery", Seq("harsh_accel"))
+      .replaceFirst(""""timestamp":500""", """"timestamp":"abc"""")
+    val values = (inputs :+ hotTemp :+ badTs).toDF("value")
+    val dead = KafkaTelemetrySource.deadLetters(
+      KafkaTelemetrySource.taggedTelemetry(values))
       .select($"raw").as[String].collect().toSeq
-    assert(dead == Seq("corrupt {{{"))
+    assert(dead.sorted == Seq("corrupt {{{", badTs).sorted)
+    val derived = ViolationDeriver(KafkaTelemetrySource.parsedTelemetry(values))
+      .select($"device_uuid").as[String].collect().toSeq
+    assert(derived.sorted == Seq("d1", "d2", "d4"))
   }
 
   test("Kafka record shape: device_uuid key, null fields omitted from JSON") {

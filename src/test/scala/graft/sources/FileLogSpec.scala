@@ -53,6 +53,36 @@ class FileLogSpec extends SparkTestBase {
         s"offsets not contiguous in p$p") }
   }
 
+  test("exact bytes round trip through both producers, read from inside a segment") {
+    val root = newRoot()
+    val big = Array.tabulate[Byte](FileLog.IoBufferBytes * 2 + 7)(i => (i * 31).toByte)
+    val recs: Seq[(Array[Byte], Array[Byte])] = Seq(
+      ("k1".getBytes, "small".getBytes), (null, "no key".getBytes),
+      ("k2".getBytes, null), ("k3".getBytes, big), ("k4".getBytes, Array.emptyByteArray))
+    // one partition: offsets 0-4 from produce, 5-9 from one DSv2 write task
+    FileLog.produce(root, "rt", recs, numPartitions = 1)
+    recs.toDF("key", "value").coalesce(1).write.format("filelog")
+      .option("path", root).option("topic", "rt").option("numPartitions", "1")
+      .mode("append").save()
+    assert(FileLog.segments(FileLog.partDir(root, "rt", 0)).map(_._1) == Seq(0L, 5L))
+
+    def bytes(b: Array[Byte]) = Option(b).map(_.toSeq)
+    val expected = (recs ++ recs).map { case (k, v) => (bytes(k), bytes(v)) }
+    def read(from: Long, to: Long) = {
+      val r = new FileLogPartitionReader(FileLogInputPartition(root, "rt", 0, from, to))
+      val out = mutable.Buffer[(Long, Option[Seq[Byte]], Option[Seq[Byte]])]()
+      try while (r.next()) {
+        val row = r.get()
+        out += ((row.getLong(4), bytes(row.getBinary(0)), bytes(row.getBinary(1))))
+      } finally r.close()
+      out.toSeq
+    }
+    for ((from, to) <- Seq((0L, 10L), (4L, 10L), (2L, 8L))) {
+      val want = (from until to).map(o => (o, expected(o.toInt)._1, expected(o.toInt)._2))
+      assert(read(from, to) == want, s"offsets [$from, $to)")
+    }
+  }
+
   private def telemetryJson(dev: String, ts: Long, power: String,
                             vTypes: Seq[String]): String = {
     val vs = vTypes.map(t =>
