@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Bench main (driver contract): one JSON line with per-query seconds at
   * SPARK_GRAFT_SF_DIR.
@@ -253,14 +252,9 @@ object Bench {
         val (so50, so95, _) =
           graft.metrics.LatencyBench.runStateful(spark, 100L, withStore = false)
         val (sp50, sp95, _) = graft.metrics.LatencyBench.runStateful(spark, 250L)
-        // the transformWithState/RocksDB operator family's latency row
-        // (sessionize as the representative), same trigger as `sess`
-        val (st50, st95, _) = graft.metrics.LatencyBench
-          .runStateful(spark, 100L, withStore = false, useTws = true)
         val stateful =
           s""""sess":{"p50":${num(so50)},"p95":${num(so95)}},""" +
-            s""""sess_store":{"p50":${num(sp50)},"p95":${num(sp95)}},""" +
-            s""""sess_tws":{"p50":${num(st50)},"p95":${num(st95)}}"""
+            s""""sess_store":{"p50":${num(sp50)},"p95":${num(sp95)}}"""
         val (cp50, cp95, _) = graft.metrics.LatencyBench.runContinuous(spark)
         val cont = s""""cont":{"p50":${num(cp50)},"p95":${num(cp95)}}"""
         s""","latency":{$per,$stateful,$cont,"ref":{"p50":8,"p95":26}}"""

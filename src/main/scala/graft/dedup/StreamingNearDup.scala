@@ -84,7 +84,7 @@ object StreamingNearDup {
     * values). */
   def bandKeys(sig: Array[Long]): Seq[String] =
     (0 until Bands).map { b =>
-      b + ":" + (0 until Rows).map(r => sig(b * Rows + r)).mkString("_")
+      s"$b:" + (0 until Rows).map(r => sig(b * Rows + r)).mkString("_")
     }
 
   /** One bucket's bounded signature store. Emits a candidate pair per

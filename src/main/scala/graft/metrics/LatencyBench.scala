@@ -86,7 +86,7 @@ object LatencyBench {
     def hashed(df: DataFrame): DataFrame = {
       val derived = ViolationDeriver(df)
       derived.select($"mqtt_sent_at_ms",
-        xxhash64(struct(derived.columns.map(col): _*)).as("row_hash"))
+        xxhash64(struct(derived.columns.map(col).toIndexedSeq: _*)).as("row_hash"))
     }
     val lats = mutable.Buffer[Long]()
     val streamed =
@@ -171,16 +171,10 @@ object LatencyBench {
     * MERGE-capable table format) — Bench publishes both numbers so the
     * decomposition is measured, not asserted.
     */
-  /** `useTws=true` swaps the flatMapGroupsWithState sessionizer for the
-    * Spark-4 `transformWithState` form ([[graft.session.SessionizeTws]])
-    * on the RocksDB state store — the latency row for the TWS operator
-    * family (near-dup, funnel, dedup twins share the same machinery),
-    * measured at its supported trigger rather than asserted equal. */
   def runStateful(spark: SparkSession, triggerMs: Long,
                   sendEveryMs: Long = 50,
                   durationMs: Long = 15000,
-                  withStore: Boolean = true,
-                  useTws: Boolean = false): (Double, Double, Int) = {
+                  withStore: Boolean = true): (Double, Double, Int) = {
     import spark.implicits._
     import graft.schema.TelemetryModel.{SessionDoc, StatusEvent}
     import graft.sources.FileLog
@@ -255,14 +249,7 @@ object LatencyBench {
     // the session default right after.
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(ProviderKey)
-    if (useTws) spark.conf.set(ProviderKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val sessions =
-      if (useTws) graft.session.SessionizeTws.stateful(events)
-      else graft.session.Sessionize.stateful(events)
-    val q = sessions.writeStream
+    val q = Sessionize.stateful(events).writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", s"$root/ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[SessionDoc], _: Long) =>
@@ -295,10 +282,6 @@ object LatencyBench {
     try Thread.sleep(durationMs)
     finally {
       producing = false; producer.join(); q.stop()
-      if (useTws) prevProvider match {
-        case Some(v) => spark.conf.set(ProviderKey, v)
-        case None    => spark.conf.unset(ProviderKey)
-      }
     }
 
     // Batch replay of the full topic through the SAME sessionizer (fMGWS

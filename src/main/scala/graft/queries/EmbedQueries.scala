@@ -1203,7 +1203,6 @@ object EmbedQueries {
   // a cell overflows only past ~2^23 vectors; at that scale the
   // documented path is per-partition partial Grams over a sample, or a
   // DECIMAL(38) accumulator — same plan, wider cell).
-  private val GramDims = 64
 
   private[graft] def gramMatrix(s: SparkSession, d: String): DataFrame = {
     val comps = Similarity
@@ -1646,7 +1645,6 @@ object EmbedQueries {
   }
 
   private def whitenCheckSql = {
-    val T = PcaPower.Iters
     val K = PcaPower.NumComponents
     val sh = PcaPower.RayShift
     val lam =
@@ -1837,7 +1835,7 @@ object EmbedQueries {
   }
 
   private def whitenGateRp(s: SparkSession, d: String,
-                           thr: String = WhitenForceThr): DataFrame = {
+                           thr: String): DataFrame = {
     val share = graft.SharedStages.pcaTopK(s, d).head.evRatio
     val abtt = share >= thr.toDouble
     val pairs = if (abtt) graft.SharedStages.abttRpPairs(s, d)

@@ -229,8 +229,6 @@ object MultimodalQueries {
   // planted twin fixture (below), so the pair path produces real rows
   // at every SF instead of hash-matching empty sets below sf0.1.
   private val PhBands = 4
-  private val PhBandBits = 16
-  private val PhBandMask = (1L << PhBandBits) - 1
   private val PhHammingMax = PhBands - 1
 
   /** ADAPTIVE BAND WIDTH (the mm_phash 100 TB lever, the RpLsh.widthFor
@@ -238,7 +236,7 @@ object MultimodalQueries {
     * random-collision candidate mass is 4·C(n,2)/2^16 — quadratic in
     * the corpus, and measured live at the sf10 surrogate (500k blobs →
     * 8.8M popcount candidates, 4.4× the 4n budget and growing with n²;
-    * MmPhashMass records the curve). The ladder
+    * BENCH_NOTES.md "mm_phash cost curve" records it). The ladder
     * keeps the mass ≤ 4n by construction: at n = 2^17 exactly,
     * 4·(n²/2)/2^16 = 4n, so 2^17 is the largest corpus the 16-bit tier
     * serves at linear cost; past it the 128-cell hash's 32-bit bands
@@ -300,12 +298,12 @@ object MultimodalQueries {
   }
 
   /** Band-collision candidates at an explicit width — the pre-Hamming
-    * stage of [[mmPhashPairsAt]], exposed separately so the cost-curve
-    * tool ([[graft.tools.MmPhashMass]]) can measure the ACTUAL
-    * candidate mass each tier produces against the ladder's 4n budget
-    * (the BandLadder arithmetic is about random collisions; the
-    * measured mass includes the corpus's real near-dup structure). */
-  private[graft] def mmPhashCandAt(docs: DataFrame, bandBits: Int): DataFrame = {
+    * stage of [[mmPhashPairsAt]]. BENCH_NOTES.md's "mm_phash cost
+    * curve" table is the ACTUAL candidate mass each tier produced
+    * against the ladder's 4n budget (the BandLadder arithmetic is about
+    * random collisions; the measured mass includes the corpus's real
+    * near-dup structure). */
+  private def mmPhashCandAt(docs: DataFrame, bandBits: Int): DataFrame = {
     val hashed =
       if (bandBits == 16)
         Multimodal.perceptualHashes(docs, "doc_id", "blob").toDF()
@@ -410,8 +408,7 @@ object MultimodalQueries {
     * chunk→md5-byte→exact-integer-threshold structure; the BIGINT
     * minimum literal spells each long's sign bit (DuckDB refuses
     * 1<<63). */
-  private def phashCtes2(cells: Int, p: String,
-                         src: String = "documents"): String =
+  private def phashCtes2(cells: Int, p: String, src: String): String =
     s"""${p}cells AS (
        |  SELECT doc_id, CAST(u.i AS BIGINT) AS i,
        |    CAST(concat('0x', substr(md5(substring(text,

@@ -22,7 +22,7 @@ object Relational {
     * double out. All money columns in the test data carry 2-decimal
     * values (deviation < 1e-9), so the decimal cast is unambiguous and
     * identical across engines. */
-  private def decSum(c: Column, scale: Int = 10): Column =
+  private def decSum(c: Column, scale: Int): Column =
     sum(c.cast(DecimalType(38, scale))).cast("double")
 
   // Exact decimal factors for money arithmetic. Products of decimals are

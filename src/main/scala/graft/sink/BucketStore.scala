@@ -161,7 +161,7 @@ object BucketStore {
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
 
-    val existing = readMany(spark, path, touched, batch.schema)
+    val existing = readMany(spark, path, touched.toIndexedSeq, batch.schema)
     val merged = existing
       .join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
       .unionByName(batch)

@@ -27,7 +27,7 @@ object KafkaEventSink {
     events.select(
       graft.ingest.JsonNormalize
         .deviceKeyOrDefault(col("device_uuid").cast("string")).as("key"),
-      to_json(struct(events.columns.map(col): _*),
+      to_json(struct(events.columns.map(col).toIndexedSeq: _*),
         Map("ignoreNullFields" -> "true")).as("value"))
 
   /** Write a batch DataFrame to a Kafka topic (used inside foreachBatch;

@@ -150,7 +150,7 @@ object FileLogOffset {
 
 class FileLogTable(options: CaseInsensitiveStringMap)
     extends Table with SupportsRead with SupportsWrite {
-  private val root  = FileLog.rootOf(options)
+  FileLog.rootOf(options) // fails a load() without a 'path' option up front
   private val topic = FileLog.topicOf(options)
 
   override def name(): String = s"filelog:$topic"

@@ -137,9 +137,6 @@ object UnigramTrain {
 
   // ------------------------------------------------------------ oracle
 
-  private def td(x: String, dv: String): String =
-    s"CASE WHEN ($x) < 0 THEN -((-($x)) // ($dv)) ELSE ($x) // ($dv) END"
-
   /** Power-of-two lookup table 2^0..2^53 (msb extraction without
     * float log2 — the ProbeTrain powers-table discipline). The `pfx`
     * parameter namespaces every generated CTE so the DEEP trainer

@@ -67,8 +67,8 @@ object ConcurrentBench {
     def contentHash(name: String): (String, Long) = {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val r = df.select(
-        sum(xxhash64(struct(df.columns.map(col): _*)).cast("decimal(38,0)")).as("h"),
-        count(lit(1)).as("n")).head
+        sum(xxhash64(struct(df.columns.map(col).toIndexedSeq: _*)).cast("decimal(38,0)")).as("h"),
+        count(lit(1)).as("n")).head()
       (if (r.isNullAt(0)) "0" else r.getDecimal(0).toBigInteger.toString,
         r.getLong(1))
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-data scale-up: derive an sf-N× surrogate from an existing SF
@@ -75,7 +75,7 @@ object ScaleUp {
     // k unguarded — slice() threw on negative lengths for k ≥ d (= 64),
     // which silently killed the embeddings write at factor 100.
     val dim = spark.read.parquet(s"$src/embeddings.parquet")
-      .selectExpr("size(embedding)").head.getInt(0)
+      .selectExpr("size(embedding)").head().getInt(0)
     require(factor < 2 * dim,
       s"embedding isometries exhausted: factor $factor needs < ${2 * dim}")
     copies("embeddings") { (df, k) =>

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.functions._
 
 /** Behavior specs for the round-7 user-behavior analytics operators at
   * sf0.001 (value-level cross-engine gate = DuckDB oracle at sf0.01). */

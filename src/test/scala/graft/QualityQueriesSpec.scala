@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 
 /** Behavior specs for the round-5 quality operators at sf0.001 (the
   * value-level cross-engine gate is the DuckDB oracle at sf0.01). */

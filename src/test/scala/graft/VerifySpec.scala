@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Pins the correctness-dump failure contract: a throwing query must be
   * LOUD in the artifacts (round 9 silently lost 7 oracle rows when the

@@ -4,9 +4,8 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.derive.ViolationDeriver

@@ -26,7 +26,7 @@ class StreamingComponentsSpec extends SparkTestBase {
 
   /** Drive batches through near-dup detection + labeling, return every
     * emitted label row. */
-  private def run(batches: Seq[Seq[DocEvent]], minSim: Double = 0.5,
+  private def run(batches: Seq[Seq[DocEvent]], minSim: Double,
                   horizonSec: Long = 600): Seq[CompLabel] = {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption(ProviderKey)

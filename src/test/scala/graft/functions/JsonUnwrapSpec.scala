@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.ingest.JsonNormalize

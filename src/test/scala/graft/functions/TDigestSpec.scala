@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.functions.TDigestSketch.{Quantiles, State}
+import graft.functions.TDigestSketch.Quantiles
 
 class TDigestSpec extends SparkTestBase {
   import spark.implicits._

@@ -51,31 +51,52 @@ class RocksDbStateSpec extends SparkTestBase {
         .format("parquet").option("path", outDir)
         .start()
 
-      // batch 1: open sessions on two devices, then close d1 explicitly
+      def sessions() = spark.read.parquet(outDir).as[SessionDoc].collect()
+        .map(d => (d.device_uuid, d.start_timestamp, d.end_timestamp,
+          d.n_touches, d.closed_by)).sorted.toSeq
+
       val q1 = start()
       try {
+        // batch 1: open sessions on two devices; d1 merges two touches
         input.addData(ev("d1", 1000, "touch"), ev("d1", 1050, "touch"),
           ev("d2", 1020, "touch"))
         q1.processAllAvailable()
+        // batch 2: explicit clear closes d1 immediately
         input.addData(ev("d1", 1100, "clear"))
         q1.processAllAvailable()
+        // batch 3: a d2 touch past the gap meets the session read back
+        // from the state store → the old one closes as ttl and a new one
+        // opens; d3 opens
+        input.addData(ev("d2", 1500, "touch"), ev("d3", 1510, "touch"))
+        q1.processAllAvailable()
+        // batches 4-5: a watermark far past everyone's end+gap fires
+        // the event-time timeouts (d9 stays open)
+        input.addData(ev("d9", 9000, "touch"))
+        q1.processAllAvailable()
+        input.addData(ev("d9", 9001, "touch"))
+        q1.processAllAvailable()
       } finally q1.stop()
+      assert(sessions() == Seq(
+        ("d1", 1000L, 1050L, 2L, "clear"),
+        ("d2", 1020L, 1020L, 1L, "ttl"),
+        ("d2", 1500L, 1500L, 1L, "ttl"),
+        ("d3", 1510L, 1510L, 1L, "ttl")),
+        s"unexpected sessions before restart: ${sessions()}")
 
-      // restart from checkpoint: RocksDB state (d2's open session) must
+      // restart from checkpoint: RocksDB state (d9's open session) must
       // reload; a later clear closes it with the full touch history
       val q2 = start()
       try {
-        input.addData(ev("d2", 1200, "touch"), ev("d2", 1300, "clear"))
+        input.addData(ev("d9", 9100, "touch"), ev("d9", 9200, "clear"))
         q2.processAllAvailable()
       } finally q2.stop()
-
-      val sessions = spark.read.parquet(outDir).as[SessionDoc].collect()
-        .map(d => (d.device_uuid, d.start_timestamp, d.end_timestamp,
-          d.n_touches, d.closed_by)).sorted.toSeq
-      assert(sessions == Seq(
+      assert(sessions() == Seq(
         ("d1", 1000L, 1050L, 2L, "clear"),
-        ("d2", 1020L, 1200L, 2L, "clear")),
-        s"unexpected sessions: $sessions")
+        ("d2", 1020L, 1020L, 1L, "ttl"),
+        ("d2", 1500L, 1500L, 1L, "ttl"),
+        ("d3", 1510L, 1510L, 1L, "ttl"),
+        ("d9", 9000L, 9100L, 3L, "clear")),
+        s"unexpected sessions: ${sessions()}")
     } finally {
       prev match {
         case Some(v) => spark.conf.set(ProviderKey, v)

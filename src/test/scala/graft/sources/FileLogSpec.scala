@@ -4,9 +4,8 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 import graft.ingest.KafkaTelemetrySource
@@ -51,6 +50,13 @@ class FileLogSpec extends SparkTestBase {
     got.groupBy(_._3).foreach { case (p, rs) =>
       assert(rs.map(_._4).sorted.toSeq == (0L until rs.length).toSeq,
         s"offsets not contiguous in p$p") }
+  }
+
+  test("load() without a path option fails up front, naming 'path'") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("filelog").option("topic", "t").load()
+    }
+    assert(e.getMessage.contains("'path'"), e.getMessage)
   }
 
   test("exact bytes round trip through both producers, read from inside a segment") {

@@ -24,7 +24,7 @@ class StreamingEncodeSpec extends SparkTestBase {
   test("per-micro-batch encodings equal the batch receipts") {
     val wordTable = TextQueries.encodeWordTable(spark, sf).localCheckpoint()
     val chosen = graft.SparkEntry.queries("tok_gate")(spark, sf)
-      .select("chosen").head.getString(0)
+      .select("chosen").head().getString(0)
 
     val docs = Tables.documents(spark, sf)
       .select($"doc_id", $"text").as[EncDocRow]

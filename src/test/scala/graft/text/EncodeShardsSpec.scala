@@ -18,7 +18,7 @@ class EncodeShardsSpec extends SparkTestBase {
     val chosen = out.map(_.getAs[String]("chosen")).distinct
     assert(chosen.length === 1)
     val gate = graft.SparkEntry.queries("tok_gate")(spark, sf)
-      .select("chosen").head.getString(0)
+      .select("chosen").head().getString(0)
     assert(chosen.head === gate)
     // totals: every tokenized doc in exactly one shard; OOV bounded by
     // words; pieces only from encodable (non-OOV) words, so a fully-OOV
@@ -32,7 +32,7 @@ class EncodeShardsSpec extends SparkTestBase {
       .select(graft.text.TextFunctions.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)
       .agg(count(lit(1)).as("n"), sum(size(col("t"))).as("w"))
-      .head
+      .head()
     assert(nDocs === tokenized.getLong(0))
     assert(nWords === tokenized.getLong(1))
     assert(nOov <= nWords)
