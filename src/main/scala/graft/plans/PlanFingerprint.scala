@@ -26,6 +26,12 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   - expression/exchange ids (`#123`, `[id=#45]`, `plan_id=7`),
   *   - JVM object addresses and lambda class names,
+  *   - the numeric suffix of higher-order-function lambda variables
+  *     (`lambda x_17` — drawn from a JVM-global counter, so it depends
+  *     on how many lambdas the JVM built before this query),
+  *   - RDD call sites (`MapPartitionsRDD[x] at localCheckpoint at
+  *     SharedStages.scala:168` — a line moves whenever code above the
+  *     call does),
   *   - filesystem paths and UUIDs (scan locations, checkpoint dirs),
   *   - statistics (`sizeInBytes=…`, `rowCount=…` — data-dependent, not
   *     shape).
@@ -61,6 +67,9 @@ object PlanFingerprint {
     // JVM noise: object addresses, lambda class names
     ("""@[0-9a-f]{6,}""".r, "@x"),
     ("""\$\$Lambda(\$\d+)?(/0x[0-9a-f]+)?""".r, "\\$\\$Lambda"),
+    ("""\blambda (\w+)_\d+""".r, "lambda $1_n"),
+    // source positions of RDD call sites
+    ("""\bat \w+\.(?:scala|java):\d+""".r, "at <callsite>"),
     // identifiers that embed a UUID (temp views, checkpoint dirs)
     ("""[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}""".r,
       "<uuid>"),

@@ -24,7 +24,8 @@ import graft.plans.PlanFingerprint
 class PlanLedgerSpec extends SparkTestBase {
   private val sf = "/root/testdata/sf0.001"
   private val sf01 = "/root/testdata/sf0.1"
-  private val ledgerPath = "/root/repo/PLANS.json"
+  // the checkout under test: sbt forks the suite JVM in the project dir
+  private val ledgerPath = Paths.get("PLANS.json").toAbsolutePath.toString
 
   // minimal parse of PlanLedger's flat JSON (no deps): top-level keys
   // map to {"fp": "...", "fp01": "...", ...}; _meta is skipped.
@@ -87,5 +88,26 @@ class PlanLedgerSpec extends SparkTestBase {
     val c = PlanFingerprint.of(
       df.repartition(8, $"v").groupBy($"v").agg(sum($"k").as("s")))
     assert(a.fp != c.fp, "a plan-shape change must change the fingerprint")
+
+    // what the raw plan text carries, before normalization
+    def raw(d: org.apache.spark.sql.DataFrame): String =
+      d.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    // a higher-order function built twice draws two lambda-variable
+    // names from the JVM-global counter (`lambda x_17`, `lambda x_18`)
+    def incr = df.select(transform(array($"k", $"k"), e => e + 1).as("a"))
+    val (l1, l2) = (incr, incr)
+    assert(raw(l1) != raw(l2), "the lambda counter must show in the raw plan")
+    assert(PlanFingerprint.of(l1).fp == PlanFingerprint.of(l2).fp,
+      "lambda-variable numbering must not change the fingerprint")
+    // the same checkpointed scan taken on two source lines embeds two
+    // RDD call sites (`... at localCheckpoint at PlanLedgerSpec.scala:NN`)
+    val ck1 = df.localCheckpoint()
+    val ck2 = df.localCheckpoint()
+    assert(raw(ck1).replaceAll("#\\d+|RDD\\[\\d+\\]", "") !=
+      raw(ck2).replaceAll("#\\d+|RDD\\[\\d+\\]", ""),
+      "the call-site line must show in the raw plan")
+    assert(PlanFingerprint.of(ck1).fp == PlanFingerprint.of(ck2).fp,
+      "an RDD call site's source line must not change the fingerprint")
   }
 }

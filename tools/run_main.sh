@@ -6,7 +6,8 @@
 #   env: SPARK_DRIVER_MEM (default 8g) and the usual SPARK_GRAFT_* vars
 set -eu
 MAIN=$1; shift
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "$0")/.." && pwd)" # the checkout this script lives in
+CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS="java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
 java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
 java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
