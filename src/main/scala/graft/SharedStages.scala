@@ -13,10 +13,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * split_leakage. At 100 TB a pipeline materializes that pass ONCE as
   * an intermediate table and fans the reports out from it — recomputing
   * the corpus-wide hash pass per report would dominate every one of
-  * them. This memo is the single-session rendering of that
-  * materialization: the first caller pays the pass and localCheckpoints
-  * the result (tiny — one row per document); later callers reuse the
-  * materialized RDD.
+  * them. Every stage here is the single-session rendering of such a
+  * materialization: the first caller pays the build, later callers
+  * reuse the result.
+  *
+  * One memo holds every stage, keyed by (session, dir, stage name).
+  * A stage's value is one of four kinds:
+  *   - a checkpointed DataFrame — localCheckpoint for output-bounded
+  *     stages, [[reliableCheckpoint]] for corpus-proportional ones;
+  *   - a corpus scalar ([[docCount]], [[embedCount]]), boxed;
+  *   - a driver-side model trained once ([[gramUpper]], [[pcaTopK]],
+  *     [[probe]], the BPE and unigram trainers);
+  *   - an on-disk store ([[noveltyGramStore]]), whose directory is
+  *     deleted when the memo drops it.
+  *
+  * Builds run OUTSIDE the map lock (see [[stage]]). Every build records
+  * its OWN wall seconds in the build ledger: time spent building a
+  * nested stage is charged to that stage, not to its caller.
   *
   * Two deliberate properties, learned from rounds 5/6:
   *   - Deterministic reuse. The previous discipline leaned on the
@@ -25,19 +38,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     first — and one caller's unpersist() silently dropped the entry
   *     everyone else was reusing (the round-6 bench saw a 5× swing on
   *     dup_cluster_sizes from exactly that).
-  *   - Construction-time execution. localCheckpoint is eager: the first
-  *     `queries(...)` call for any family member executes the signature
-  *     job before returning the DataFrame. Callers that only want the
+  *   - Construction-time execution. Checkpoints are eager: the first
+  *     `queries(...)` call for any family member executes the stage's
+  *     jobs before returning the DataFrame. Callers that only want the
   *     plan/schema of a family query pay it too — acceptable for a
   *     materialized-intermediate seam, but worth knowing in plan tests.
-  *
-  * On a real cluster with executor loss in play, swap localCheckpoint
-  * for a checkpoint-dir-backed `.checkpoint()` (same contract,
-  * reliable storage) — or an actual intermediate table.
   */
 object SharedStages {
   private val memo =
-    new ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
+
+  /** An on-disk stage's directory, deleted when the memo drops it. */
+  private final case class Scratch(path: String)
+
+  private def release(v: AnyRef): Unit = v match {
+    case Scratch(p) => discardScratch(p)
+    case _          => () // checkpointed blocks go when their RDDs are GC'd
+  }
 
   // ------------------------------------------------ build-cost ledger
   // One-time stage builds are real pipeline cost that min-of-N warm
@@ -45,14 +62,32 @@ object SharedStages {
   // doesn't). Round 13's lmDocBits build was 16.2 s at sf0.1 — ~23% of
   // the warm registry total — and lived only in BENCH_NOTES prose,
   // invisible to an artifact diff. Every stage build therefore records
-  // its wall seconds here, keyed by (dir, stage), and graft.Bench emits
-  // the map for its SF dir as `stage_build_sec` in BENCH_DETAIL.json
-  // next to the warm numbers. merge-accumulate: a stage rebuilt after
-  // clear() adds up (the honest total paid in the JVM's lifetime).
+  // its own wall seconds here, keyed by (dir, stage), and graft.Bench
+  // emits the map for its SF dir as `stage_build_sec` in
+  // BENCH_DETAIL.json next to the warm numbers. Own seconds exclude
+  // nested stage builds, so the entries add up to the wall time paid.
+  // merge-accumulate: a stage rebuilt after clear() adds up (the honest
+  // total paid in the JVM's lifetime).
   private val buildLedger = new ConcurrentHashMap[(String, String), Double]()
 
   private def recordBuild(dir: String, name: String, sec: Double): Unit =
     buildLedger.merge((dir, name), sec, (a, b) => Double.box(a + b))
+
+  /** Nanoseconds this thread has spent in nested stage builds since the
+    * enclosing build started. */
+  private val nestedNanos = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  /** Runs `build` and returns its value with its own nanoseconds: wall
+    * time minus the nested stage builds it ran on this thread. */
+  private def ownTimed[T](build: => T): (T, Long) = {
+    val outer: Long = nestedNanos.get
+    nestedNanos.set(0L)
+    val t0 = System.nanoTime()
+    try {
+      val v = build
+      (v, System.nanoTime() - t0 - nestedNanos.get)
+    } finally nestedNanos.set(outer + (System.nanoTime() - t0))
+  }
 
   // Row-count telemetry for stages whose footprint is NOT bounded by a
   // threshold (rpScored memoizes every bucket-collision pair because
@@ -71,9 +106,9 @@ object SharedStages {
     rowLedger.asScala.collect { case ((d, n), r) if d == dir => n -> r }.toMap
   }
 
-  /** Wall-seconds of every one-time stage build paid for `dir` in this
-    * JVM (stage name → seconds). Duplicate concurrent builds both count
-    * — they were both paid. */
+  /** Own wall-seconds of every one-time stage build paid for `dir` in
+    * this JVM (stage name → seconds). Duplicate concurrent builds both
+    * count — they were both paid. */
   def buildSeconds(dir: String): Map[String, Double] = {
     import scala.jdk.CollectionConverters._
     buildLedger.asScala.collect { case ((d, n), s) if d == dir => n -> s }.toMap
@@ -85,18 +120,17 @@ object SharedStages {
   // whenever the keys land in the same bin — a hash-placement-dependent
   // failure that surfaced only when the key set grew. Build OUTSIDE the
   // map lock; a concurrent duplicate build is deterministic and merely
-  // discarded by putIfAbsent.
-  private def stage(s: SparkSession, dir: String, name: String)
-                   (build: => DataFrame): DataFrame = {
+  // discarded by putIfAbsent (and released).
+  private def stage[T <: AnyRef](s: SparkSession, dir: String, name: String)
+                                (build: => T): T = {
     val key = (s, dir, name)
     val existing = memo.get(key)
-    if (existing != null) existing
+    if (existing != null) existing.asInstanceOf[T]
     else {
-      val t0 = System.nanoTime()
-      val built = build
-      recordBuild(dir, name, (System.nanoTime() - t0) / 1e9)
+      val (built, own) = ownTimed(build)
+      recordBuild(dir, name, own / 1e9)
       val prev = memo.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      if (prev == null) built else { release(built); prev.asInstanceOf[T] }
     }
   }
 
@@ -135,29 +169,16 @@ object SharedStages {
     * ladder, mm_phash_pairs' tier, tfidf's N): one count job per
     * (session, dir) instead of one per consumer invocation. */
   def docCount(s: SparkSession, dir: String): Long =
-    scalarStage(s, dir, "docCount")(Tables.documents(s, dir).count())
+    stage[java.lang.Long](s, dir, "docCount") {
+      Long.box(Tables.documents(s, dir).count())
+    }
 
   /** Materialized row count of `embeddings(dir)` (lsh_width's decision
     * input and [[rpBuckets]]' width gate). */
   def embedCount(s: SparkSession, dir: String): Long =
-    scalarStage(s, dir, "embedCount")(Tables.embeddings(s, dir).count())
-
-  private val scalarMemo =
-    new ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-
-  private def scalarStage(s: SparkSession, dir: String, name: String)
-                         (build: => Long): Long = {
-    val key = (s, dir, name)
-    val existing = scalarMemo.get(key)
-    if (existing != null) existing.longValue()
-    else {
-      val t0 = System.nanoTime()
-      val built = build
-      recordBuild(dir, name, (System.nanoTime() - t0) / 1e9)
-      val prev = scalarMemo.putIfAbsent(key, java.lang.Long.valueOf(built))
-      if (prev != null) prev.longValue() else built
+    stage[java.lang.Long](s, dir, "embedCount") {
+      Long.box(Tables.embeddings(s, dir).count())
     }
-  }
 
   /** Materialized MinHash signatures of `documents(dir)`:
     * (doc_id, sh: distinct shingle hashes, sig: array[16]). */
@@ -521,166 +542,67 @@ object SharedStages {
       out
     }
 
-  // --------------------------------------------------- PCA component
-  // The fixed-point power-iteration component over the distributed
-  // Gram matrix ([[graft.embed.PcaPower]]) — d·(d+1)/2 bounded cells
-  // collected once per (session, dir), shared by the pca_power report
-  // and the pca_project projection scan. Same build-outside-the-lock
-  // discipline as [[stage]] (the Gram aggregation is deterministic, so
-  // a concurrent duplicate build is merely discarded).
-  private val gramMemo =
-    new ConcurrentHashMap[(SparkSession, String), Seq[(Int, Int, Long)]]()
-
-  /** Collected upper-triangle Gram rows — d(d+1)/2 = 2 080 cells
-    * regardless of corpus size; shared by the PCA component and the
-    * linear probe so the distributed aggregation runs once. */
-  def gramUpper(s: SparkSession, dir: String): Seq[(Int, Int, Long)] = {
-    val key = (s, dir)
-    val existing = gramMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val rows = graft.queries.EmbedQueries.gramMatrix(s, dir).collect()
+  /** Collected upper-triangle Gram rows of `embeddings(dir)` —
+    * d(d+1)/2 = 2 080 cells regardless of corpus size; shared by the
+    * PCA component and the linear probe so the distributed aggregation
+    * runs once. */
+  def gramUpper(s: SparkSession, dir: String): Seq[(Int, Int, Long)] =
+    stage(s, dir, "gramUpper") {
+      graft.queries.EmbedQueries.gramMatrix(s, dir).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-      recordBuild(dir, "gramUpper", (System.nanoTime() - t0) / 1e9)
-      val prev = gramMemo.putIfAbsent(key, rows)
-      if (prev != null) prev else rows
     }
-  }
 
-  private val pcaMemo =
-    new ConcurrentHashMap[(SparkSession, String), Seq[graft.embed.PcaPower.Component]]()
-
-  /** Top-[[graft.embed.PcaPower.NumComponents]] deflated components —
-    * shared by pca_power/pca_topk, the k-component projection
-    * (pca_project) and the full-ABTT residual pass (abtt_pairs).
-    * Driver work on the collected Gram; computed once per
-    * (session, dir). */
-  def pcaTopK(s: SparkSession, dir: String): Seq[graft.embed.PcaPower.Component] = {
-    val key = (s, dir)
-    val existing = pcaMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val built = graft.embed.PcaPower.powerK(gramUpper(s, dir),
+  /** Top-[[graft.embed.PcaPower.NumComponents]] deflated components of
+    * the fixed-point power iteration over [[gramUpper]]
+    * ([[graft.embed.PcaPower]]) — shared by pca_power/pca_topk, the
+    * k-component projection (pca_project) and the full-ABTT residual
+    * pass (abtt_pairs). Driver work on the collected Gram. */
+  def pcaTopK(s: SparkSession, dir: String): Seq[graft.embed.PcaPower.Component] =
+    stage(s, dir, "pcaTopK") {
+      graft.embed.PcaPower.powerK(gramUpper(s, dir),
         graft.embed.PcaPower.NumComponents)
-      recordBuild(dir, "pcaTopK", (System.nanoTime() - t0) / 1e9)
-      val prev = pcaMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
     }
-  }
 
   /** The dominant component — head of [[pcaTopK]] (bit-identical to the
     * standalone top-1 power iteration). */
   def pcaComponent(s: SparkSession, dir: String): graft.embed.PcaPower.Component =
     pcaTopK(s, dir).head
 
-  // ---------------------------------------------------- linear probe
-  // Ridge probe trained from the shared Gram + one Xᵀy aggregation
-  // ([[graft.embed.ProbeTrain]]) — trained once per (session, dir),
-  // shared by the weight report (linear_probe) and the scoring/accuracy
-  // report (probe_eval).
-  private val probeMemo =
-    new ConcurrentHashMap[(SparkSession, String), graft.embed.ProbeTrain.Probe]()
+  /** Ridge probe trained from the shared Gram + one Xᵀy aggregation
+    * ([[graft.embed.ProbeTrain]]) — shared by the weight report
+    * (linear_probe) and the scoring/accuracy report (probe_eval). */
+  def probe(s: SparkSession, dir: String): graft.embed.ProbeTrain.Probe =
+    stage(s, dir, "probe")(graft.queries.EmbedQueries.trainProbe(s, dir))
 
-  def probe(s: SparkSession, dir: String): graft.embed.ProbeTrain.Probe = {
-    val key = (s, dir)
-    val existing = probeMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val built = graft.queries.EmbedQueries.trainProbe(s, dir)
-      recordBuild(dir, "probe", (System.nanoTime() - t0) / 1e9)
-      val prev = probeMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
+  /** The iterated BPE vocabulary ([[graft.text.BpeTrain]]) — NMerges
+    * distributed top-1 rounds, shared by the merge-table report
+    * (bpe_train) and the learned-vocabulary report (bpe_tokenize). */
+  def bpeTrained(s: SparkSession, dir: String): graft.text.BpeTrain.Trained =
+    stage(s, dir, "bpeTrained")(graft.text.BpeTrain.train(s, dir))
+
+  /** The realistic-depth BPE trainer ([[graft.text.BpeDeep]]): one
+    * distributed corpus pass builds the capped candidate table, then
+    * DeepMerges driver-side argmax rounds — shared by bpe_train_deep and
+    * bpe_deep_encode. */
+  def bpeDeepTrained(s: SparkSession, dir: String): graft.text.BpeDeep.DeepTrained =
+    stage(s, dir, "bpeDeepTrained")(graft.text.BpeDeep.train(s, dir))
+
+  /** The EM-trained unigram tokenizer ([[graft.text.UnigramTrain]]) —
+    * two segmentation passes + vocab-sized collects, shared by
+    * unigram_train and unigram_tokenize. */
+  def unigramTrained(s: SparkSession, dir: String): graft.text.UnigramTrain.Trained =
+    stage(s, dir, "unigramTrained")(graft.text.UnigramTrain.train(s, dir))
+
+  /** The depth-matched EM-trained unigram tokenizer
+    * ([[graft.text.UnigramDeep]]) — driver-side over the SAME capped
+    * chunk table [[bpeDeepTrained]] built (recovered from its
+    * finalWords, so the corpus pass is paid once), shared by
+    * unigram_train_deep / unigram_deep_encode / tok_deep_gate. */
+  def unigramDeepTrained(s: SparkSession, dir: String): graft.text.UnigramDeep.DeepTrained =
+    stage(s, dir, "unigramDeepTrained") {
+      graft.text.UnigramDeep.trainFromChunks(
+        graft.text.UnigramDeep.chunksFrom(bpeDeepTrained(s, dir)))
     }
-  }
-
-  // --------------------------------------------------- BPE training
-  // The iterated BPE vocabulary ([[graft.text.BpeTrain]]) — NMerges
-  // distributed top-1 rounds, trained once per (session, dir) and
-  // shared by the merge-table report (bpe_train) and the
-  // learned-vocabulary report (bpe_tokenize).
-  private val bpeMemo =
-    new ConcurrentHashMap[(SparkSession, String), graft.text.BpeTrain.Trained]()
-
-  def bpeTrained(s: SparkSession, dir: String): graft.text.BpeTrain.Trained = {
-    val key = (s, dir)
-    val existing = bpeMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val built = graft.text.BpeTrain.train(s, dir)
-      recordBuild(dir, "bpeTrained", (System.nanoTime() - t0) / 1e9)
-      val prev = bpeMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  // ---------------------------------------------- deep BPE training
-  // The realistic-depth trainer ([[graft.text.BpeDeep]]): one
-  // distributed corpus pass builds the capped candidate table, then
-  // DeepMerges driver-side argmax rounds — trained once per
-  // (session, dir), shared by bpe_train_deep and bpe_deep_encode.
-  private val bpeDeepMemo =
-    new ConcurrentHashMap[(SparkSession, String), graft.text.BpeDeep.DeepTrained]()
-
-  def bpeDeepTrained(s: SparkSession, dir: String): graft.text.BpeDeep.DeepTrained = {
-    val key = (s, dir)
-    val existing = bpeDeepMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val built = graft.text.BpeDeep.train(s, dir)
-      recordBuild(dir, "bpeDeepTrained", (System.nanoTime() - t0) / 1e9)
-      val prev = bpeDeepMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  // --------------------------------------------- unigram-LM training
-  // The EM-trained unigram tokenizer ([[graft.text.UnigramTrain]]) —
-  // two segmentation passes + vocab-sized collects, trained once per
-  // (session, dir) and shared by unigram_train and unigram_tokenize.
-  private val unigramMemo =
-    new ConcurrentHashMap[(SparkSession, String), graft.text.UnigramTrain.Trained]()
-
-  def unigramTrained(s: SparkSession, dir: String): graft.text.UnigramTrain.Trained = {
-    val key = (s, dir)
-    val existing = unigramMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
-      val built = graft.text.UnigramTrain.train(s, dir)
-      recordBuild(dir, "unigramTrained", (System.nanoTime() - t0) / 1e9)
-      val prev = unigramMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
-
-  // ---------------------------------------- DEEP unigram-LM training
-  // The depth-matched EM-trained unigram tokenizer
-  // ([[graft.text.UnigramDeep]]) — driver-side over the SAME capped
-  // chunk table bpeDeepTrained built (recovered from its finalWords,
-  // so the corpus pass is paid once), shared by unigram_train_deep /
-  // unigram_deep_encode / tok_deep_gate.
-  private val unigramDeepMemo =
-    new ConcurrentHashMap[(SparkSession, String), graft.text.UnigramDeep.DeepTrained]()
-
-  def unigramDeepTrained(s: SparkSession, dir: String): graft.text.UnigramDeep.DeepTrained = {
-    val key = (s, dir)
-    val existing = unigramDeepMemo.get(key)
-    if (existing != null) existing
-    else {
-      val bpe = bpeDeepTrained(s, dir) // memoized corpus pass
-      val t0 = System.nanoTime()
-      val built = graft.text.UnigramDeep.trainFromChunks(
-        graft.text.UnigramDeep.chunksFrom(bpe))
-      recordBuild(dir, "unigramDeepTrained", (System.nanoTime() - t0) / 1e9)
-      val prev = unigramDeepMemo.putIfAbsent(key, built)
-      if (prev != null) prev else built
-    }
-  }
 
   // ------------------------------------------------- on-disk scratch
   // Per-JVM scratch root for query-internal stores (the BucketStore
@@ -712,9 +634,6 @@ object SharedStages {
   def discardScratch(dir: String): Unit =
     deleteRecursive(java.nio.file.Paths.get(dir))
 
-  private val storeMemo =
-    new ConcurrentHashMap[(SparkSession, String, String), String]()
-
   /** The STANDING prior-gram store of `documents(dir)` (even doc_ids'
     * distinct n-gram hashes in a hash-bucketed
     * [[graft.sink.BucketStore]]), built ONCE per (session, dir) — the
@@ -724,36 +643,15 @@ object SharedStages {
     * At 100 TB this is a persistent table maintained by the ingest
     * pipeline; the memo is its single-session rendering. */
   def noveltyGramStore(s: SparkSession, dir: String,
-                       n: Int, numBuckets: Int): String = {
-    val key = (s, dir, s"noveltyStore_${n}_$numBuckets")
-    val existing = storeMemo.get(key)
-    if (existing != null) existing
-    else {
-      val t0 = System.nanoTime()
+                       n: Int, numBuckets: Int): String =
+    stage(s, dir, s"noveltyGramStore_${n}_$numBuckets") {
       val path = newScratchDir("novelty_store")
       graft.sink.BucketStore.upsert(s, priorGramSet(s, dir, n), path,
         Seq("h"), numBuckets)
-      recordBuild(dir, s"noveltyGramStore_${n}_$numBuckets",
-        (System.nanoTime() - t0) / 1e9)
-      val prev = storeMemo.putIfAbsent(key, path)
-      if (prev != null) { discardScratch(path); prev } else path
-    }
-  }
+      Scratch(path)
+    }.path
 
-  /** Drop every memoized stage (end of a batch run / test isolation).
-    * The checkpointed blocks are freed when the RDDs are GC'd; on-disk
-    * scratch stores are removed eagerly. */
-  def clear(): Unit = {
-    memo.clear()
-    scalarMemo.clear()
-    gramMemo.clear()
-    pcaMemo.clear()
-    probeMemo.clear()
-    bpeMemo.clear()
-    bpeDeepMemo.clear()
-    unigramMemo.clear()
-    import scala.jdk.CollectionConverters._
-    storeMemo.values().asScala.foreach(discardScratch)
-    storeMemo.clear()
-  }
+  /** Drop every memoized stage (end of a batch run / test isolation). */
+  def clear(): Unit =
+    memo.keySet().forEach(k => Option(memo.remove(k)).foreach(release))
 }

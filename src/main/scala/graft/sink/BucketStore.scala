@@ -88,11 +88,17 @@ object BucketStore {
     * lost keys mid-promote"). With a single writer, dst is absent
     * only inside the two-rename window, so a written bucket resolves
     * within a probe or two; a genuinely unwritten bucket pays a few
-    * cheap exists calls and resolves to nothing. A resolved dir can
-    * still vanish between resolution and the scan's file listing —
-    * that surfaces as a loud read ERROR (the documented
-    * recovery-not-atomicity contract: callers retry), never as silent
-    * data loss. */
+    * cheap exists calls and resolves to nothing.
+    *
+    * A resolved dir can still vanish between resolution and the scan's
+    * file listing, and Spark lists a root that vanished after its
+    * existence check as EMPTY (HadoopFSUtils: "was not found. Was it
+    * deleted very recently?"). Every promoted bucket holds at least one
+    * part-file, so a resolved dir with no file in the scan's listing
+    * raced a promote: the read re-resolves, and after a few such races
+    * fails loudly (the documented recovery-not-atomicity contract:
+    * callers retry) — never a silent loss of the bucket's rows. A file
+    * that vanishes after the listing fails the scan itself. */
   private def readMany(spark: SparkSession, path: String, buckets: Seq[Int],
                        schema: StructType): DataFrame = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -138,11 +144,23 @@ object BucketStore {
         None
       } finally note()
     }
-    val dirs = buckets.flatMap(resolve)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(dirs: _*)
+    def dirOf(p: org.apache.hadoop.fs.Path) = fs.makeQualified(p).toUri.getPath
+    def scan(attempt: Int): DataFrame = {
+      val dirs = buckets.flatMap(resolve)
+      if (dirs.isEmpty)
+        return spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      val df = spark.read.schema(schema).parquet(dirs: _*)
+      val listed = df.inputFiles.map(f =>
+        dirOf(new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)).toSet
+      val vanished = dirs.filterNot(d => listed(dirOf(new org.apache.hadoop.fs.Path(d))))
+      if (vanished.isEmpty) df
+      else if (attempt < 3) scan(attempt + 1)
+      else throw new IllegalStateException(
+        s"BucketStore read of $path raced a promote: ${vanished.mkString(", ")} " +
+          "listed no files")
+    }
+    scan(0)
   }
 
   /** Replace-on-key upsert touching only the batch's hash buckets.

@@ -46,4 +46,36 @@ class SharedStagesSpec extends SparkTestBase {
       assert(labeled == pairs)
     } finally SharedStages.clear()
   }
+
+  test("clear() drops driver-side models and deletes on-disk stores") {
+    SharedStages.clear()
+    try {
+      // booleans, not `eq` inside assert: a failure would print the model
+      val u = SharedStages.unigramDeepTrained(spark, d)
+      val memoized = u eq SharedStages.unigramDeepTrained(spark, d)
+      assert(memoized, "second call must return the memoized model")
+      val store = java.nio.file.Paths.get(SharedStages.noveltyGramStore(spark, d, 5, 8))
+      assert(java.nio.file.Files.isDirectory(store))
+      SharedStages.clear()
+      assert(!java.nio.file.Files.exists(store), "clear() must delete the on-disk store")
+      val rebuilt = !(u eq SharedStages.unigramDeepTrained(spark, d))
+      assert(rebuilt, "clear() must drop driver-side models")
+    } finally SharedStages.clear()
+  }
+
+  test("the build ledger charges each stage its own seconds, not its nested builds'") {
+    SharedStages.clear()
+    try {
+      val chain = Seq("sigs", "cands", "pairs05")
+      val before = SharedStages.buildSeconds(d)
+      val t0 = System.nanoTime()
+      SharedStages.verifiedPairs(spark, d) // cold: builds sigs → cands → pairs05
+      val wall = (System.nanoTime() - t0) / 1e9
+      val paid = SharedStages.buildSeconds(d).map { case (n, sec) =>
+        n -> (sec - before.getOrElse(n, 0.0)) }.filter(_._2 > 0)
+      assert(chain.forall(paid.contains), s"cold call must build $chain, built $paid")
+      assert(paid.values.sum <= wall,
+        f"stage build seconds ${paid.values.sum}%.3f exceed the call's wall $wall%.3f s: $paid")
+    } finally SharedStages.clear()
+  }
 }

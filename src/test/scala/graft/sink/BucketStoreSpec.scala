@@ -78,6 +78,20 @@ class BucketStoreSpec extends SparkTestBase {
     assert(new File(s"$dir/b$b").exists())
   }
 
+  test("a resolved bucket whose listing finds no part-file fails the read, never drops it") {
+    // What the scan sees when a promote removes the resolved dir between
+    // the existence check and the file listing: a bucket with no files.
+    val dir = Files.createTempDirectory("bstore_gone").toString + "/docs"
+    val b1 = Seq(("d1", 10L, 1L), ("d2", 20L, 1L)).toDF("dev", "end_ts", "v")
+    BucketStore.upsert(spark, b1, dir, Seq("dev"), N)
+    val b = spark.range(1).select(
+      pmod(hash(lit("d1")), lit(N)).as("b")).as[Int].head()
+    new File(s"$dir/b$b").listFiles().foreach(f => assert(f.delete()))
+    val e = intercept[IllegalStateException](
+      BucketStore.read(spark, dir, b1.schema, N).collect())
+    assert(e.getMessage.contains(s"b$b"))
+  }
+
   test("evict: retention keeps only matching rows, empties dead buckets") {
     val dir = Files.createTempDirectory("bevict").toString + "/docs"
     val rows = (1 to 200).map(i => (s"dev-$i", i.toLong, 1L))
