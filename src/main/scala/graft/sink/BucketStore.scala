@@ -148,17 +148,19 @@ object BucketStore {
     def scan(attempt: Int): DataFrame = {
       val dirs = buckets.flatMap(resolve)
       if (dirs.isEmpty)
-        return spark.createDataFrame(
+        spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      val df = spark.read.schema(schema).parquet(dirs: _*)
-      val listed = df.inputFiles.map(f =>
-        dirOf(new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)).toSet
-      val vanished = dirs.filterNot(d => listed(dirOf(new org.apache.hadoop.fs.Path(d))))
-      if (vanished.isEmpty) df
-      else if (attempt < 3) scan(attempt + 1)
-      else throw new IllegalStateException(
-        s"BucketStore read of $path raced a promote: ${vanished.mkString(", ")} " +
-          "listed no files")
+      else {
+        val df = spark.read.schema(schema).parquet(dirs: _*)
+        val listed = df.inputFiles.map(f =>
+          dirOf(new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)).toSet
+        val vanished = dirs.filterNot(d => listed(dirOf(new org.apache.hadoop.fs.Path(d))))
+        if (vanished.isEmpty) df
+        else if (attempt < 3) scan(attempt + 1)
+        else throw new IllegalStateException(
+          s"BucketStore read of $path raced a promote: ${vanished.mkString(", ")} " +
+            "listed no files")
+      }
     }
     scan(0)
   }
