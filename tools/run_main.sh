@@ -7,7 +7,10 @@
 set -eu
 MAIN=$1; shift
 ROOT="$(cd "$(dirname "$0")/.." && pwd)" # the checkout this script lives in
-CP="$ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
+# the Spark jars the build compiles against (build.sbt's unmanagedBase)
+JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' "$ROOT/build.sbt")
+[ -n "$JARS" ] || { echo "run_main.sh: no unmanagedBase in $ROOT/build.sbt" >&2; exit 1; }
+CP="$ROOT/target/scala-2.13/classes:$JARS/*"
 OPENS="java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
 java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \
 java.base/java.util.concurrent java.base/java.util.concurrent.atomic \
