@@ -11,7 +11,14 @@ import org.apache.spark.sql.SparkSession
   * oracle parity.
   */
 object GraftSession {
-  def builder(cpus: String): SparkSession.Builder =
+
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else every core this
+    * JVM may use. Tests and the plan ledger pin "4" instead, because the
+    * ledger's fingerprints embed partition counts. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  def builder(cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")

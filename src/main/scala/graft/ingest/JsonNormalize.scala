@@ -2,7 +2,6 @@ package graft.ingest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** Tolerant JSON ingestion (SURVEY §2.3 P1/P2).
   *
@@ -12,7 +11,8 @@ import org.apache.spark.sql.types.StructType
   * `/root/reference/mqttToKafka.js:47-52`,
   * `/root/reference/kafkaConsumer.js:61-66`; and parses tolerantly —
   * malformed input → record silently dropped
-  * (`TelematicsViolationDeriverJob.java:111-114`).
+  * (`TelematicsViolationDeriverJob.java:111-114`). The parse itself is
+  * [[KafkaTelemetrySource.parsedTelemetry]], the one every path uses.
   *
   * Everything here is pure `Column` expressions → stays inside
   * whole-stage codegen; no UDFs.
@@ -38,15 +38,6 @@ object JsonNormalize {
     org.apache.spark.sql.graftshim.ColumnBridge.column(
       graft.functions.JsonUnwrap(
         org.apache.spark.sql.graftshim.ColumnBridge.expression(c)))
-
-  /** P1: tolerant parse. On Spark 4, PERMISSIVE from_json returns a
-    * struct of all-null fields for malformed input, not a null struct, so
-    * `t.isNotNull` does not drop it. Callers that must tell corrupt
-    * records apart use [[graft.ingest.KafkaTelemetrySource.taggedTelemetry]],
-    * which marks them in `__corrupt` (the reference drops them silently,
-    * `TelematicsViolationDeriverJob.java:111-114`). */
-  def parseTolerant(c: Column, schema: StructType): Column =
-    from_json(unwrapNative(c), schema, Map("mode" -> "PERMISSIVE"))
 
   /** P15/P16: key default — missing/blank device_uuid → "unknown-device"
     * (`/root/reference/mqttToKafka.js:60-64`). */

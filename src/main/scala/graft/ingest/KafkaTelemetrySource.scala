@@ -5,13 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.schema.TelemetrySchema
 
-/** Kafka stream sources (SURVEY §2.1 S1/S2).
+/** Kafka telemetry source and its parse (SURVEY §2.1 S1, §2.3 P1).
   *
   * Reference: the Flink job subscribes `telemetry.raw` with value-only
   * string deserialization and NO watermarks
-  * (`TelematicsViolationDeriverJob.java:51-56,78`); the consumer
-  * subscribes both event topics in one group
-  * (`kafkaConsumer.js:359,371-374`).
+  * (`TelematicsViolationDeriverJob.java:51-56,78`).
   *
   * The parsing stage ([[parsedTelemetry]]) is a pure transform over any
   * DataFrame with a string `value` column, so the identical plan runs
@@ -29,15 +27,6 @@ object KafkaTelemetrySource {
       .option("kafka.bootstrap.servers", bootstrap)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
-      .load()
-
-  /** S2: one source over both derived-event topics; callers branch on the
-    * built-in `topic` column (F9) instead of two consumers. */
-  def eventsStream(spark: SparkSession, bootstrap: String): DataFrame =
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", "violations.events,device-status.events")
-      .option("startingOffsets", "latest")
       .load()
 
   /** Kafka record → parsed telemetry rows. Carries the broker ingest

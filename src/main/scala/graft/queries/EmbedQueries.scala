@@ -286,7 +286,12 @@ object EmbedQueries {
   private def ivfSearch(s: SparkSession, d: String): DataFrame =
     graft.SharedStages.ivfSearchTopK(s, d)
 
-  private[graft] def buildIvfSearch(s: SparkSession, d: String): DataFrame = {
+  /** The IVF coarse quantizer shared by ivf_search, the nprobe frontier
+    * and ivf_pq_search: the quantized corpus `(vec_id, q, nq)` and a
+    * ranker that scores rows of it against every centroid, `rn` = 1 for
+    * the nearest cell (ties to the lowest seed id). */
+  private def ivfCells(s: SparkSession, d: String)
+  : (DataFrame, DataFrame => DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
       .select(col("vec_id"), col("q"), col("nq"))
@@ -299,6 +304,11 @@ object EmbedQueries {
         .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
         .withColumn("rn", row_number().over(w))
     }
+    (qd, cellRank)
+  }
+
+  private[graft] def buildIvfSearch(s: SparkSession, d: String): DataFrame = {
+    val (qd, cellRank) = ivfCells(s, d)
     val assign = cellRank(qd).filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
     val probes = cellRank(qd.filter(col("vec_id") < 10))
@@ -432,19 +442,8 @@ object EmbedQueries {
     * materialization, the way a deployment prices the sweep once and
     * tunes from the stored table. */
   private[graft] def buildAnnFrontier(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val seeds = graft.SharedStages.ivfCentroids(s, d)
-    def cellRank(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("seed_id"))
-      df.crossJoin(broadcast(seeds)) // bounded: ≤8 broadcast codebook rows
-        .withColumn("dot", Similarity.dotQ("q", "sq"))
-        .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-        .withColumn("rn", row_number().over(w))
-    }
+    val (qd, cellRank) = ivfCells(s, d)
     val assign = cellRank(qd).filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
     val probes = cellRank(qd.filter(col("vec_id") < 10))
@@ -906,18 +905,7 @@ object EmbedQueries {
   // broadcasts — the codes scan and the final point lookups stay
   // map-only; nothing corpus-sized shuffles.
   private def ivfPqSearch(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val seeds = graft.SharedStages.ivfCentroids(s, d)
-    def cellRank(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("seed_id"))
-      df.crossJoin(broadcast(seeds)) // bounded: ≤8 broadcast codebook rows
-        .withColumn("dot", Similarity.dotQ("q", "sq"))
-        .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-        .withColumn("rn", row_number().over(w))
-    }
+    val (qd, cellRank) = ivfCells(s, d)
     val assign = cellRank(qd).filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"))
     val probes = cellRank(qd.filter(col("vec_id") < 10))

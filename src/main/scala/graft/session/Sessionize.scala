@@ -125,9 +125,9 @@ object Sessionize {
         // Spark 4's getCurrentWatermarkMs THROWS rather than returning
         // -1 — fall back to -1 there: batch timeouts never fire, the
         // clamp base is irrelevant, and this keeps the documented
-        // batch≡stream contract actually runnable in batch (caught by
-        // LatencyBench's stateful content gate, which replays the topic
-        // through this operator in batch mode).
+        // batch≡stream contract actually runnable in batch
+        // (PipelineRestartSpec's batch recompute runs this operator in
+        // batch mode and compares it with the restarted stream's store).
         val target = (s.end + gapSeconds) * 1000L
         val wmMs = try state.getCurrentWatermarkMs()
                    catch { case _: UnsupportedOperationException => -1L }

@@ -11,15 +11,15 @@ import org.apache.spark.sql.types.StructType
   *
   * Layout: `<path>/b<k>/` — one parquet directory per hash bucket of
   * the key. An upsert rewrites ONLY the buckets containing the batch's
-  * keys: per-batch cost is O(batch + touched-bucket bytes), not
-  * O(store) like [[EventStoreSink.upsertParquet]]'s full rewrite. With
+  * keys: per-batch cost is O(batch + touched-bucket bytes), not the
+  * O(store) of a whole-store rewrite. With
   * `numBuckets` sized so each bucket fits executor memory, a
   * micro-batch touching d devices rewrites at most min(d, numBuckets)
   * buckets regardless of store size; untouched buckets are never read.
   *
-  * Each touched bucket promotes through the same rename-aside protocol
-  * as the flat store (`b<k>_old` kept until the new generation is
-  * live), so a crash mid-promote loses no prior rows — the in-flight
+  * Each touched bucket promotes through a rename-aside protocol
+  * ([[promote]]: `b<k>_old` kept until the new generation is live),
+  * so a crash mid-promote loses no prior rows — the in-flight
   * micro-batch is replayed from the streaming checkpoint. Single
   * writer; readers go through [[read]] for recovery.
   *
@@ -29,6 +29,20 @@ import org.apache.spark.sql.types.StructType
 object BucketStore {
 
   private def bucketDir(path: String, b: Int) = s"$path/b$b"
+
+  /** Promote staged `tmp` to `path` without a window in which both the
+    * old and the new generation are unreachable: the live generation is
+    * renamed aside to `path_old`, not deleted, until the new one is
+    * live. Single writer per path; readers recover via [[readMany]]. */
+  private def promote(fs: org.apache.hadoop.fs.FileSystem, tmp: String,
+                      path: String): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val old = new org.apache.hadoop.fs.Path(path + "_old")
+    fs.delete(old, true) // stale backup from a completed promote
+    if (fs.exists(dst)) fs.rename(dst, old)
+    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.delete(old, true)
+  }
 
   private def bucketCol(keyCols: Seq[String], numBuckets: Int) =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets))
@@ -79,7 +93,7 @@ object BucketStore {
     *
     * Per-bucket resolution RE-PROBES the live dir after an `_old`
     * miss, in a bounded loop: the promote protocol
-    * ([[KafkaEventSink.promote]]: dst→_old, tmp→dst, delete _old) has
+    * ([[promote]]: dst→_old, tmp→dst, delete _old) has
     * a window where a single exists(dst)-then-exists(_old) pass sees
     * NEITHER — dst checked between the two renames, _old checked
     * after the final delete — and a one-pass reader would silently
@@ -203,7 +217,7 @@ object BucketStore {
     touched.foreach { b =>
       val staged = s"$tmpRoot/__bucket=$b"
       if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        EventStoreSink.promote(fs, staged, bucketDir(path, b))
+        promote(fs, staged, bucketDir(path, b))
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
   }
@@ -336,7 +350,7 @@ object BucketStore {
     live.foreach { b =>
       val staged = s"$tmpRoot/__bucket=$b"
       if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        EventStoreSink.promote(fs, staged, bucketDir(path, b))
+        promote(fs, staged, bucketDir(path, b))
       else {
         fs.delete(new org.apache.hadoop.fs.Path(bucketDir(path, b)), true)
         fs.delete(new org.apache.hadoop.fs.Path(bucketDir(path, b) + "_old"), true)
@@ -386,7 +400,7 @@ object BucketStore {
     (0 until toBuckets).foreach { b =>
       val staged = s"$tmpRoot/__bucket=$b"
       if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        EventStoreSink.promote(fs, staged, bucketDir(newPath, b))
+        promote(fs, staged, bucketDir(newPath, b))
     }
     fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
   }

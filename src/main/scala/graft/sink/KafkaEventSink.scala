@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -58,61 +58,4 @@ object KafkaEventSink {
         } finally { batch.unpersist(); () }
       }
       .start()
-}
-
-/** K3/K4: document-store sinks. The reference appends one Mongo doc per
-  * violation (`kafkaConsumer.js:213-226`) and upserts session docs by id
-  * (`:304-307`). Without a transactional table format on the classpath,
-  * the append path writes parquet partitions; the upsert path is
-  * read-merge-write keyed by `keyCols` (swap for Delta/Iceberg MERGE in
-  * production — the call shape is identical). */
-object EventStoreSink {
-  import org.apache.hadoop.fs.{FileSystem, Path}
-
-  def appendParquet(batch: DataFrame, path: String): Unit =
-    batch.write.mode("append").parquet(path)
-
-  private def hadoopFs(spark: SparkSession): FileSystem =
-    FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
-  /** Read the store, recovering from a crash mid-promote: a promote
-    * renames the live generation aside to `path_old` before moving the
-    * new one in, so if `path` is missing the previous generation is
-    * still intact at `path_old` (the in-flight batch is lost but the
-    * streaming checkpoint replays it — no prior row is ever lost). */
-  def readStore(spark: SparkSession, path: String,
-                schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = hadoopFs(spark)
-    if (fs.exists(new Path(path))) spark.read.parquet(path)
-    else if (fs.exists(new Path(path + "_old"))) spark.read.parquet(path + "_old")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  /** Promote `tmp` to `path` without a window in which both the old and
-    * new generation are unreachable: old is renamed aside, not deleted,
-    * until the new generation is live. Single-writer (the streaming
-    * sink); concurrent readers should go through [[readStore]]. */
-  private[sink] def promote(fs: FileSystem, tmp: String, path: String): Unit = {
-    val dst = new Path(path); val old = new Path(path + "_old")
-    fs.delete(old, true) // stale backup from a completed promote
-    if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(new Path(tmp), dst)
-    fs.delete(old, true)
-  }
-
-  /** Idempotent replace-on-key upsert: final state per key equals the
-    * reference's final Mongo doc (§7.6.5 — equivalence on final state,
-    * not write sequence). O(store) per call — fine for small stores and
-    * tests; the scale path is [[BucketStore]] (cost ∝ touched buckets). */
-  def upsertParquet(spark: SparkSession, batch: DataFrame, path: String,
-                    keyCols: Seq[String]): Unit = {
-    val existing = readStore(spark, path, batch.schema)
-    val merged = existing
-      .join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-      .unionByName(batch)
-    val tmp = path + "_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    promote(hadoopFs(spark), tmp, path)
-  }
 }

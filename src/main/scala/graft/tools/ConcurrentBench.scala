@@ -44,8 +44,7 @@ object ConcurrentBench {
     val tenantCounts = (if (args.length > 1 && !args(1).startsWith("--")) args(1)
                         else "1,2,4")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.builder(cpus)
+    val spark = graft.GraftSession.builder()
       .config("spark.scheduler.mode", "FAIR")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -200,13 +199,6 @@ object ConcurrentBench {
       System.err.println(f"[concurrent] n=$n wall=${walls(n)}%.1f s parity=$parity")
     }
 
-    val sha = try {
-      val p = new ProcessBuilder("git", "-C", "/root/repo",
-        "rev-parse", "--short", "HEAD").redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-      if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
-    } catch { case _: Throwable => "unknown" }
-
     def dec(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val tj = walls.map { case (n, s) => s""""$n":${dec(s)}""" }.mkString("{", ",", "}")
     val load = s""""load":{"start":${dec(loadStart)},"end":${dec(graft.Bench.loadAvg())},"host_cpus":${Runtime.getRuntime.availableProcessors}}"""
@@ -223,6 +215,6 @@ object ConcurrentBench {
       s""","store_probes":{"resolves":${ps.resolves},"reprobes":${ps.reProbes},"max_reprobe":${ps.maxReProbes}}"""
     spark.sparkContext.setLogLevel("OFF")
     try spark.stop() catch { case _: Throwable => () }
-    println(s"""{"metric":"concurrent","sf":"$sfDir","tenants":$tj,"parity":$parity,"queries":${names.size},"sha":"$sha",$load$writerJson$probeJson}""")
+    println(s"""{"metric":"concurrent","sf":"$sfDir","tenants":$tj,"parity":$parity,"queries":${names.size},"sha":"${graft.Checkout.sha}",$load$writerJson$probeJson}""")
   }
 }

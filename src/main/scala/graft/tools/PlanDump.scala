@@ -29,8 +29,7 @@ object PlanDump {
       val unknown = sel -- SparkEntry.queries.keySet
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Files.createDirectories(Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted

@@ -81,14 +81,7 @@ object PlanLedger {
     val rows01 = collect(spark, sf01Dir).toMap
     val errs = rows.collect { case (n, Left(m)) => (n, m) } ++
       rows01.toSeq.sortBy(_._1).collect { case (n, Left(m)) => (n, s"[sf0.1] $m") }
-    // the sha of the checkout these classes were compiled in
-    val sha = try {
-      val classes = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-      val p = new ProcessBuilder("git", "-C", classes.toString,
-        "rev-parse", "--short", "HEAD").redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
-      if (p.waitFor() == 0 && out.nonEmpty) out else "unknown"
-    } catch { case _: Throwable => "unknown" }
+    val sha = graft.Checkout.sha
 
     val body = new StringBuilder
     body ++= "{\n"

@@ -36,8 +36,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorStr) = args
     val factor = factorStr.toInt
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def write(df: DataFrame, t: String): Unit =

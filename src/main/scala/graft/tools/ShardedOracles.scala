@@ -46,8 +46,7 @@ object ShardedOracles {
     val unknown = wanted.filterNot(registry.contains)
     require(unknown.isEmpty, s"not shardable: ${unknown.mkString(",")}")
 
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val labels = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("label").distinct().collect().map(_.getInt(0).toLong).sorted

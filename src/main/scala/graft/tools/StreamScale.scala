@@ -33,8 +33,7 @@ object StreamScale {
     val n = if (args.length > 1) args(1).toInt else 6
     val horizon = if (args.length > 2) Some(args(2).toLong) else None
     val minTokens = 8
-    val spark = graft.GraftSession
-      .builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val work = Files.createTempDirectory("streamscale").toString

@@ -9,11 +9,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * stay valid JSON while trimming. */
 class BenchLineSpec extends AnyFunSuite {
 
-  private val lat =
-    ""","latency":{"t100":{"p50":153,"p95":210},"t1000":{"p50":580,"p95":1081},""" +
-      """"sess":{"p50":265,"p95":346},"sess_store":{"p50":728,"p95":968},""" +
-      """"cont":{"p50":1,"p95":4},"ref":{"p50":8,"p95":26}}"""
-
   private def parseable(line: String): Boolean = {
     // minimal structural JSON check without a JSON dependency: balanced
     // braces outside strings, and the line is a single object
@@ -39,7 +34,7 @@ class BenchLineSpec extends AnyFunSuite {
     // need revisiting
     val results = SparkEntry.queries.keys.toSeq.sorted.zipWithIndex
       .map { case (n, i) => (n, 0.1 + (i % 40) * 0.09) }
-    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1", lat)
+    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1")
     assert(line.getBytes("UTF-8").length <= Bench.LineBudgetBytes)
     val omitted = """"omitted_fastest":(\d+)""".r
       .findFirstMatchIn(line).map(_.group(1).toInt).getOrElse(0)
@@ -57,7 +52,7 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("200-query line trims the fastest, keeps the slowest, stays parseable") {
     val results = (1 to 200).map(i => (f"some_longer_query_name_$i%03d", i * 0.031))
-    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1", lat)
+    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1")
     assert(line.getBytes("UTF-8").length <= Bench.LineBudgetBytes, line.length.toString)
     assert(line.contains("omitted_fastest"))
     assert(parseable(line))
@@ -71,7 +66,7 @@ class BenchLineSpec extends AnyFunSuite {
     // "successes" with no failure marker anywhere in the artifact. The
     // failed list renders even when the query map is heavily trimmed.
     val results = (1 to 200).map(i => (f"query_name_number_$i%03d", i * 0.031))
-    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1", lat,
+    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1",
       failed = Seq("viol_derive", "detect_geofence"))
     assert(parseable(line))
     assert(line.getBytes("UTF-8").length <= Bench.LineBudgetBytes)
@@ -84,7 +79,7 @@ class BenchLineSpec extends AnyFunSuite {
     // fails nearly everything — the artifact must stay parseable and
     // carry the true count even though the name list is capped
     val failed = (1 to 120).map(i => f"some_failed_query_name_$i%03d")
-    val line = Bench.compactLine(1.0, Seq("ok_query" -> 1.0), "sf0.1", lat,
+    val line = Bench.compactLine(1.0, Seq("ok_query" -> 1.0), "sf0.1",
       failed = failed)
     assert(parseable(line))
     assert(line.getBytes("UTF-8").length <= Bench.LineBudgetBytes)
@@ -94,7 +89,7 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("no failures -> no failed key (artifact stays minimal)") {
-    val line = Bench.compactLine(1.0, Seq("q1" -> 1.0), "sf0.1", lat)
+    val line = Bench.compactLine(1.0, Seq("q1" -> 1.0), "sf0.1")
     assert(parseable(line))
     assert(!line.contains("failed"))
   }
@@ -122,10 +117,10 @@ class BenchLineSpec extends AnyFunSuite {
   test("degenerate case: even a single kept query renders within budget") {
     val results = (1 to 400).map(i =>
       (s"an_extremely_long_query_name_padding_padding_$i", i * 0.01))
-    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1", lat)
+    val line = Bench.compactLine(results.map(_._2).sum, results, "sf0.1")
     assert(parseable(line))
     // trim floor is 1 query; with absurd names the line may exceed the
-    // budget only through the single irreducible entry + latency block
+    // budget only through the single irreducible entry
     assert(line.getBytes("UTF-8").length <= Bench.LineBudgetBytes)
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkTestBase
-import graft.sink.EventStoreSink
 
 /** ST5: checkpointed offset tracking across a query restart (SURVEY
   * §2.7 — Structured Streaming's upgrade over the reference's
@@ -34,7 +33,7 @@ class CheckpointRestartSpec extends SparkTestBase {
         .writeStream
         .option("checkpointLocation", ckpt)
         .foreachBatch { (b: DataFrame, _: Long) =>
-          if (!b.isEmpty) EventStoreSink.appendParquet(b, outDir)
+          if (!b.isEmpty) b.write.mode("append").parquet(outDir)
         }
         .start()
       try q.processAllAvailable() finally q.stop()

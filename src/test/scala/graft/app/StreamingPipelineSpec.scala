@@ -9,8 +9,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkTestBase
 import graft.derive.ViolationDeriver
-import graft.ingest.{JsonNormalize, KafkaTelemetrySource}
-import graft.schema.TelemetrySchema
+import graft.ingest.KafkaTelemetrySource
 import graft.sink.KafkaEventSink
 
 /** Batch ≡ streaming parity for the main path (SURVEY §3.1): the same
@@ -55,9 +54,7 @@ class StreamingPipelineSpec extends SparkTestBase {
     } finally q.stop()
 
     // batch run of identical rows through identical transforms
-    val batchParsed = inputs.toDF("value")
-      .select(JsonNormalize.parseTolerant($"value", TelemetrySchema.telemetry).as("t"))
-      .filter($"t".isNotNull).select("t.*")
+    val batchParsed = KafkaTelemetrySource.parsedTelemetry(inputs.toDF("value"))
     val (bv, bs) = DerivePipeline.runBatch(batchParsed)
 
     assert(violations.map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted ==

@@ -4,7 +4,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.SparkTestBase
-import graft.ingest.JsonNormalize
+import graft.ingest.KafkaTelemetrySource
 import graft.schema.TelemetrySchema
 
 /** Property-based derivation tests (SURVEY §5.2.3), with a generator
@@ -48,9 +48,7 @@ class DeriverPropertySpec extends SparkTestBase {
   }
 
   private def derive(recs: Seq[TRec]) = {
-    val parsed = recs.map(toJson).toDF("value")
-      .select(JsonNormalize.parseTolerant($"value", TelemetrySchema.telemetry).as("t"))
-      .filter($"t".isNotNull).select("t.*")
+    val parsed = KafkaTelemetrySource.parsedTelemetry(recs.map(toJson).toDF("value"))
     (ViolationDeriver(parsed), StatusDeriver(parsed))
   }
 

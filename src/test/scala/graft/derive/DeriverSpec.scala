@@ -1,11 +1,9 @@
 package graft.derive
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
-import graft.ingest.JsonNormalize
-import graft.schema.TelemetrySchema
+import graft.ingest.KafkaTelemetrySource
 
 /** Golden + quirk tests for the core derivation path (SURVEY §5.2.1-2),
   * using the reference README's own payloads
@@ -13,11 +11,9 @@ import graft.schema.TelemetrySchema
 class DeriverSpec extends SparkTestBase {
   import spark.implicits._
 
+  /** The production parse, as the streaming demux query runs it. */
   private def parse(jsons: Seq[String]): DataFrame =
-    jsons.toDF("value")
-      .select(JsonNormalize.parseTolerant(col("value"), TelemetrySchema.telemetry).as("t"))
-      .filter(col("t").isNotNull)
-      .select("t.*")
+    KafkaTelemetrySource.parsedTelemetry(jsons.toDF("value"))
 
   /** Underscore-typed telemetry: the shape the live generator produces
     * (`/root/reference/mqtt_publish.js:236-284`). */
@@ -109,6 +105,8 @@ class DeriverSpec extends SparkTestBase {
   test("P1: corrupt / empty / non-object JSON is silently dropped") {
     val rows = Seq("", "   ", "not json", "[1,2,3]", "42",
       underscoreViolation)
+    // dropped at the parse, not only at the deriver's device gate
+    assert(parse(rows).count() == 1)
     assert(ViolationDeriver(parse(rows)).count() == 1)
   }
 
