@@ -12,10 +12,10 @@ import org.apache.spark.sql.types.StructType
   * Layout: `<path>/b<k>/` — one parquet directory per hash bucket of
   * the key. An upsert rewrites ONLY the buckets containing the batch's
   * keys: per-batch cost is O(batch + touched-bucket bytes), not the
-  * O(store) of a whole-store rewrite. With
-  * `numBuckets` sized so each bucket fits executor memory, a
-  * micro-batch touching d devices rewrites at most min(d, numBuckets)
-  * buckets regardless of store size; untouched buckets are never read.
+  * O(store) of a whole-store rewrite. With `numBuckets` sized so each
+  * bucket fits executor memory, a micro-batch touching d devices
+  * rewrites at most min(d, numBuckets) buckets regardless of store
+  * size; untouched buckets are never read.
   *
   * Each touched bucket promotes through a rename-aside protocol
   * ([[promote]]: `b<k>_old` kept until the new generation is live),
