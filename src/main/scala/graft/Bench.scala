@@ -96,13 +96,34 @@ object Bench {
       prior.get(n).collect { case p if p > floor && v / p > ratio => n -> (v / p) }
     }.sortBy(-_._2)
 
+  /** The header fields that make a prior's timings comparable with this
+    * run: the scale (last path component of `sf`), the rep count
+    * (min-of-3 and a single pass are different statistics) and the host
+    * core count. Returns the fields that differ or are missing from the
+    * prior, in that order; an absent prior has nothing to compare. A
+    * 4-core sf0.001 single-pass run diffed against the committed sf0.1,
+    * 32-core, 3-rep BENCH_DETAIL.json flagged five queries at
+    * 1.6–2.4× that no code change caused. */
+  def diffVoid(priorTxt: String, sf: String, reps: Int,
+               hostCpus: Int): Seq[String] =
+    if (priorTxt.isEmpty) Nil
+    else {
+      def field(key: String): Option[String] =
+        s""""$key":"?([^",}]*)""".r.findFirstMatchIn(priorTxt).map(_.group(1))
+      def scale(dir: String): String = dir.split('/').last
+      Seq("sf" -> scale(sf), "reps" -> reps.toString,
+        "host_cpus" -> hostCpus.toString).collect {
+        case (k, v) if !field(k).map(scale).contains(v) => k
+      }
+    }
+
   /** 1-minute system load average (as /proc/loadavg), -1 if unavailable.
     * Recorded at bench start AND end: a contended box (driver run
     * alongside other tenants) is then machine-readable in the artifact
     * itself — round 17's 86.8 s driver run vs 81.1 s idle-box run on
     * identical code needed a manual reconciliation that these two
     * numbers answer directly. */
-  def loadAvg(): Double = {
+  private def loadAvg(): Double = {
     val v = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     if (v < 0) -1.0 else v
@@ -120,10 +141,8 @@ object Bench {
 
     // Dev/scale loop: SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the bench
     // to named queries (the driver never sets it — full registry by
-    // default; the sf10 surrogate spot-bench uses it so the 100×-decade
-    // evidence doesn't require a multi-hour full-registry run). Unknown
-    // names fail loudly — a misspelled name would otherwise silently
-    // shrink the artifact.
+    // default). Unknown names fail loudly — a misspelled name would
+    // otherwise silently shrink the artifact.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { sel =>
@@ -205,11 +224,14 @@ object Bench {
     // of requiring judge arithmetic. Queries new this round have no
     // prior and are skipped. The prior and the output are the artifact of
     // the checkout these classes were compiled in, so a run from another
-    // clone reads and writes its own copy.
+    // clone reads and writes its own copy. Against a prior at another
+    // scale, rep count or core count (`diffVoid`) no flag is written.
     val detailPath = Checkout.dir.resolve("BENCH_DETAIL.json")
     val priorTxt: String =
       try new String(java.nio.file.Files.readAllBytes(detailPath), "UTF-8")
       catch { case _: Throwable => "" }
+    val hostCpus = Runtime.getRuntime.availableProcessors
+    val void = diffVoid(priorTxt, sfDir, reps, hostCpus)
     val prior = priorSection(priorTxt, "queries")
     val regressions = diffGt(prior, results)
     // Stage-build regressions flag themselves too (r19 verdict: a
@@ -268,15 +290,21 @@ object Bench {
     // core count — "contended box or regression?" answerable from the
     // artifact alone (idle box ⇒ load ≈ the bench's own threads).
     val loadJson =
-      s""","load":{"start":${dec(loadStart, 1)},"end":${dec(loadAvg(), 1)},"host_cpus":${Runtime.getRuntime.availableProcessors}}"""
+      s""","load":{"start":${dec(loadStart, 1)},"end":${dec(loadAvg(), 1)},"host_cpus":$hostCpus}"""
     // readMany resolve-loop cost of the store-backed queries this run
     // (r18 race fix): 0 reprobes on an uncontended box — any nonzero
     // count here is the measured price of the re-probe, per VERDICT #5.
     val ps = graft.sink.BucketStore.probeStats()
     val probeJson = if (ps.resolves == 0L) "" else
       s""","store_probes":{"resolves":${ps.resolves},"reprobes":${ps.reProbes},"max_reprobe":${ps.maxReProbes}}"""
+    val voidJson =
+      if (void.isEmpty) "" else s""","diff_void":"${void.mkString(",")}""""
+    val stageDiffField =
+      if (void.isEmpty) s""","stage_diff_gt1.5x":$stageDiffJson""" else ""
+    val benchDiffField =
+      if (void.isEmpty) s""","bench_diff_gt1.5x":$diffFull""" else voidJson
     val fullJson =
-      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$fullQs,"sf":"$sfDir"$shaJson$loadJson$probeJson,"reps":$reps,"stat":"min","interleaved":true,"failed":$fullFailed,"stage_build_sec":$stageJson,"stage_build_total":${sec3(stageTotal)},"stage_rows":$stageRowsJson,"stage_diff_gt1.5x":$stageDiffJson,"warm_plus_cold_total":${sec3(total + stageTotal)},"samples":$fullSamples,"bench_diff_gt1.5x":$diffFull}"""
+      s"""{"metric":"total","value":${sec3(total)},"unit":"sec","queries":$fullQs,"sf":"$sfDir"$shaJson$loadJson$probeJson,"reps":$reps,"stat":"min","interleaved":true,"failed":$fullFailed,"stage_build_sec":$stageJson,"stage_build_total":${sec3(stageTotal)},"stage_rows":$stageRowsJson$stageDiffField,"warm_plus_cold_total":${sec3(total + stageTotal)},"samples":$fullSamples$benchDiffField}"""
     println(fullJson)
     try java.nio.file.Files.write(detailPath, (fullJson + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
@@ -285,7 +313,8 @@ object Bench {
     // budget), capped at the 5 worst so a pathological round cannot
     // blow the line budget.
     val diffJson =
-      if (regressions.isEmpty) ""
+      if (void.nonEmpty) voidJson
+      else if (regressions.isEmpty) ""
       else regressions.take(5).map { case (n, r) => "\"" + n + "\":" + dec(r, 2) }
         .mkString(""","diff_gt1.5x":{""", ",", "}")
     // sha + load ride the diffJson slot (all ","-prefixed fragments) so

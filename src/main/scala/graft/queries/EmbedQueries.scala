@@ -589,18 +589,12 @@ object EmbedQueries {
     graft.SharedStages.embedLabels(s, d)
       .select(col("id").as("vec_id"), col("root").as("canonical_id"))
 
-  private val dedupEmbedSql: String = dedupEmbedSqlShard(None)
-
-  // Shardable by label (see [[shardedOracleSql]]): edges REQUIRE
-  // a.label = b.label, so every connected component lives inside one
-  // label cell and the transitive closure decomposes exactly into
-  // independent per-label closures.
-  private def dedupEmbedSqlShard(shard: Option[Long]) =
+  private val dedupEmbedSql: String =
     s"""WITH RECURSIVE ${Similarity.duckdbQuantizedCte},
        |pairs AS (
        |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
        |  FROM qv a JOIN qv b ON a.label = b.label AND a.vec_id < b.vec_id
-       |  WHERE ${shard.map(l => s"a.label = $l\n    AND ").getOrElse("")}CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
+       |  WHERE CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
        |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) >= CAST(0.35 AS DOUBLE)),
        |edges AS (
        |  SELECT a_id AS src, b_id AS dst FROM pairs
@@ -1523,21 +1517,10 @@ object EmbedQueries {
     * components (`ar0` = comp → `ar$k` = final residual rows), in
     * lockstep with [[graft.functions.AbttResidual.residual]] — shared
     * by the abtt_pairs oracle and the whiten_check residual Gram. */
-  private def abttResidualCtes(k: Int, shardLabel: Option[Long] = None): String = {
+  private def abttResidualCtes(k: Int): String = {
     val T = PcaPower.Iters
     val resCtes = new StringBuilder
-    // Label-sharded replay (the sf10 oracle decomposition — see
-    // [[shardedOracleSql]]): the residual chain is per-vector
-    // independent (ap/ash/ar key every step by vec_id; only the PCA
-    // component vectors c*v* are corpus-global, and those CTEs are NOT
-    // touched here), so restricting ar0 to one label cell reproduces
-    // exactly the full chain's rows for that cell.
-    val ar0Src = shardLabel match {
-      case Some(l) => "SELECT c.vec_id, c.i, c.qi AS r FROM comp c " +
-        s"JOIN qv ON qv.vec_id = c.vec_id AND qv.label = $l"
-      case None => "SELECT vec_id, i, qi AS r FROM comp"
-    }
-    resCtes.append(s"ar0 AS MATERIALIZED ($ar0Src)")
+    resCtes.append("ar0 AS MATERIALIZED (SELECT vec_id, i, qi AS r FROM comp)")
     for (c <- 0 until k) {
       resCtes.append(
         s""",
@@ -1560,18 +1543,12 @@ object EmbedQueries {
     resCtes.toString
   }
 
-  private def abttPairsSql: String = abttPairsSqlShard(None)
-
-  private def abttPairsSqlShard(shard: Option[Long]) = {
+  private def abttPairsSql: String = {
     val K = PcaPower.NumComponents
-    val resCtes = abttResidualCtes(K, shard)
+    val resCtes = abttResidualCtes(K)
     val dot = Similarity.duckdbDot("a.r", "b.r")
     val cos = s"CAST($dot AS DOUBLE)" +
       " / sqrt(CAST(a.nr AS DOUBLE) * CAST(b.nr AS DOUBLE))"
-    // belt-and-braces: ar0's restriction already confines rv to the
-    // shard's cell; the explicit predicate keeps the shard SQL
-    // self-evidently label-local for the rollup audit
-    val shardPred = shard.map(l => s"\n  AND a.label = $l").getOrElse("")
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |$gramCompCte,
        |$gramUpperCte,
@@ -1586,7 +1563,7 @@ object EmbedQueries {
        |SELECT a.label AS cell, a.vec_id AS a_id, b.vec_id AS b_id,
        |  $cos AS cos
        |FROM rv a JOIN rv b ON a.label = b.label AND a.vec_id < b.vec_id
-       |WHERE a.nr > 0 AND b.nr > 0$shardPred
+       |WHERE a.nr > 0 AND b.nr > 0
        |  AND $cos >= CAST($AbttTau AS DOUBLE)""".stripMargin
   }
 
@@ -1699,7 +1676,7 @@ object EmbedQueries {
 
   private def whitenGateSql: String = whitenGateSqlFor(WhitenGateThr)
 
-  private def whitenGateSqlFor(thr: String, shard: Option[Long] = None) = {
+  private def whitenGateSqlFor(thr: String) = {
     val K = PcaPower.NumComponents
     val sh = PcaPower.RayShift
     val lam =
@@ -1708,16 +1685,11 @@ object EmbedQueries {
       " / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE))"
     val resCos = s"CAST(${Similarity.duckdbDot("a.r", "b.r")} AS DOUBLE)" +
       " / sqrt(CAST(a.nr AS DOUBLE) * CAST(b.nr AS DOUBLE))"
-    // Sharded form (see [[shardedOracleSql]]): the gate's share (and
-    // everything the PCA prefix feeds it) stays CORPUS-GLOBAL — only
-    // the two branch pair joins and the residual chain restrict to the
-    // shard's label cell, so union-over-shards equals the full query.
-    val shardPred = shard.map(l => s"\n  AND a.label = $l").getOrElse("")
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |$gramCompCte,
        |$gramUpperCte,
        |${pcaTopkCtes(K)},
-       |${abttResidualCtes(K, shard)},
+       |${abttResidualCtes(K)},
        |shr AS MATERIALIZED (
        |  SELECT (($lam) * CAST(gs0.gd AS DOUBLE)) / CAST(trace AS DOUBLE) AS share
        |  FROM ray0 CROSS JOIN gs0 CROSS JOIN trc),
@@ -1730,13 +1702,13 @@ object EmbedQueries {
        |SELECT 'raw' AS mode, a.label AS cell,
        |  a.vec_id AS a_id, b.vec_id AS b_id, $rawCos AS cos
        |FROM qv a JOIN qv b ON a.label = b.label AND a.vec_id < b.vec_id, shr
-       |WHERE shr.share < CAST($thr AS DOUBLE)$shardPred
+       |WHERE shr.share < CAST($thr AS DOUBLE)
        |  AND $rawCos >= CAST(0.35 AS DOUBLE)
        |UNION ALL
        |SELECT 'abtt' AS mode, a.label AS cell,
        |  a.vec_id AS a_id, b.vec_id AS b_id, $resCos AS cos
        |FROM rv a JOIN rv b ON a.label = b.label AND a.vec_id < b.vec_id, shr
-       |WHERE shr.share >= CAST($thr AS DOUBLE)$shardPred
+       |WHERE shr.share >= CAST($thr AS DOUBLE)
        |  AND a.nr > 0 AND b.nr > 0
        |  AND $resCos >= CAST($AbttTau AS DOUBLE)""".stripMargin
   }
@@ -2484,105 +2456,6 @@ object EmbedQueries {
        |SELECT bucket, COUNT(*) AS n_pairs,
        |  CAST(bucket AS DOUBLE) / 20 AS cos_lo
        |FROM kept GROUP BY bucket""".stripMargin
-
-  /** One shard of a decomposed oracle replay: `shardSql(l)` is the full
-    * oracle restricted to label cell `l`; `sliceSql` extracts the same
-    * cell's rows from the Spark dump (`__DUMP__` = dump glob,
-    * `__L__` = label). */
-  case class ShardedOracle(sliceSql: String, shardSql: Long => String)
-
-  /** Label-sharded replays for the four pair-family queries whose FULL
-    * DuckDB mirror is `oracle-bound` at the 100× surrogate (r16 ledger:
-    * whiten_gate/whiten_gate_force spilled >56 GB, abtt_pairs >2400 s,
-    * dedup_embed a single 32 GiB allocation) — the engine side ran all
-    * four at sf10; only the one-query replay is the bound.
-    *
-    * Decomposition is EXACT because every one of these plans blocks on
-    * the label cell — the same key the Spark side partitions the pair
-    * join by:
-    *  - pair joins require `a.label = b.label`, so the output is a
-    *    disjoint union over cells;
-    *  - the ABTT residual chain is per-vector (only the PCA components
-    *    are global, and every shard recomputes those over the FULL
-    *    corpus — the linear prefix DuckDB handles at sf10);
-    *  - dedup_embed's edges are label-confined, so connected components
-    *    (and their min-label canonicals) never cross cells.
-    * The rollup (tools/sharded_ledger.py) additionally asserts
-    * Σ shard rows == total dump rows, so a row escaping every shard
-    * (e.g. a NULL label) would fail the ledger, not vanish. */
-  private[graft] val shardedOracleSql: Map[String, ShardedOracle] = {
-    val pairSlice = "SELECT * FROM __DUMP__ WHERE cell = __L__"
-    Map(
-      "abtt_pairs" -> ShardedOracle(pairSlice,
-        l => abttPairsSqlShard(Some(l))),
-      "whiten_gate" -> ShardedOracle(pairSlice,
-        l => whitenGateSqlFor(WhitenGateThr, Some(l))),
-      "whiten_gate_force" -> ShardedOracle(pairSlice,
-        l => whitenGateSqlFor(WhitenForceThr, Some(l))),
-      "dedup_embed" -> ShardedOracle(
-        "SELECT d.* FROM __DUMP__ d JOIN embeddings e ON e.vec_id = d.vec_id " +
-          "WHERE e.label = __L__",
-        l => dedupEmbedSqlShardIter(l)))
-  }
-
-  /** dedup_embed shard mirror by UNROLLED min-label propagation with a
-    * FIXPOINT CERTIFICATE, replacing the registered oracle's recursive
-    * `reach` closure for the sharded sf10 replay only. The closure
-    * materializes Σ component² (id, root) pairs — ~400M rows for one
-    * dense 20k-vector cell at the 100× surrogate, the exact 32 GiB
-    * allocation that made the one-shot replay oracle-bound. Min-label
-    * propagation is O(edges) per round instead, and needs no trust in
-    * the round count: the fixpoint of
-    *   l₀(v) = v;  lₖ₊₁(v) = min(lₖ(v), min over neighbors lₖ(u))
-    * is EXACTLY the component-minimum labeling, so the mirror emits
-    * rows only behind a guard that hard-errors — via DuckDB's
-    * `error()` function, which raises; integer `1//0` would NOT
-    * (DuckDB yields NULL for int division by zero, which would NULL
-    * the WHERE and silently emit an empty result) — when the last
-    * two rounds differ. A non-converged replay therefore surfaces as
-    * oracle-error in the ledger, never as a silent pass.
-    *
-    * `iters` defaults to 16 rounds, enough for graph diameter 16;
-    * override per replay with GRAFT_SHARD_ITERS (read when
-    * [[graft.tools.ShardedOracles]] emits the shard SQL) if a denser
-    * surrogate ever needs a deeper unroll — the certificate makes a
-    * too-small setting loud, not wrong. */
-  private def dedupEmbedSqlShardIter(
-      shard: Long,
-      iters: Int =
-        sys.env.getOrElse("GRAFT_SHARD_ITERS", "16").toInt): String = {
-    val prop = (0 until iters).map { k =>
-      s"""l${k + 1} AS MATERIALIZED (
-         |  SELECT l.id,
-         |    LEAST(l.lbl, COALESCE(MIN(nl.lbl), l.lbl)) AS lbl
-         |  FROM l$k l
-         |  LEFT JOIN edges e ON e.src = l.id
-         |  LEFT JOIN l$k nl ON nl.id = e.dst
-         |  GROUP BY l.id, l.lbl)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |pairs AS MATERIALIZED (
-       |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
-       |  FROM qv a JOIN qv b ON a.label = b.label AND a.vec_id < b.vec_id
-       |  WHERE a.label = $shard
-       |    AND CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) >= CAST(0.35 AS DOUBLE)),
-       |edges AS MATERIALIZED (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION ALL SELECT b_id, a_id FROM pairs),
-       |l0 AS MATERIALIZED (
-       |  SELECT DISTINCT src AS id, src AS lbl FROM edges),
-       |$prop,
-       |fix AS (
-       |  SELECT COUNT(*) AS changed
-       |  FROM l$iters a JOIN l${iters - 1} b
-       |    ON a.id = b.id AND a.lbl <> b.lbl)
-       |SELECT id AS vec_id, lbl AS canonical_id FROM l$iters
-       |WHERE (SELECT CASE WHEN changed = 0 THEN 1
-       |  ELSE error('min-label propagation not converged in $iters rounds')
-       |  END FROM fix) = 1
-       |""".stripMargin
-  }
 
   val all: Seq[QueryDef] = Seq(
     QueryDef("knn_topk", knnTopK, Some(knnTopKSql)),

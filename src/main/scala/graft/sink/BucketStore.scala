@@ -68,8 +68,8 @@ object BucketStore {
     * `resolves` counts per-bucket resolutions, `reProbes` the extra
     * loop iterations taken beyond the first live/old pass (0 on every
     * uncontended read), `maxReProbes` the deepest single resolution.
-    * Bench/ConcurrentBench publish these so the race fix's cost at
-    * scale is a recorded distribution, not a guess. */
+    * Bench and perfbench's `sink.reprobes` publish these so the race
+    * fix's cost at scale is a recorded distribution, not a guess. */
   private val resolveCount = new java.util.concurrent.atomic.AtomicLong
   private val reProbeCount = new java.util.concurrent.atomic.AtomicLong
   private val maxReProbe = new java.util.concurrent.atomic.AtomicLong

@@ -127,7 +127,8 @@ object StreamingCuration {
     // batch (store-probe bucket collects, the exact-stage checkpoint,
     // the final flag join) — without materializing, each action
     // re-reads the upstream source, measured 3× ingest I/O per
-    // micro-batch through the file-source deployment (StreamScale)
+    // micro-batch through a file-source deployment (SURVEY's
+    // "flagBatch single-read" row)
     val q = batch.select(col("doc_id"), col("source"), col("text"))
       // coalesce: a null text yields a null gate under ANSI semantics,
       // which would drop the doc from every stage yet count it in
@@ -238,12 +239,13 @@ object StreamingCuration {
     * drop every store row whose doc_id has fallen behind
     * `horizonMinId`. With a doc_id-ordered arrival stream this bounds
     * each store to the trailing horizon's rows, so per-bucket bytes
-    * PLATEAU instead of growing with the corpus (StreamScale measures
-    * it). Semantics under a horizon are dedup-within-horizon — a new
-    * doc no longer matches partners older than the horizon — the same
-    * trade [[graft.dedup.StreamingNearDup]]'s bounded MapState horizon
-    * makes, and the right one for a rolling crawl. Returns total rows
-    * kept across the stores. */
+    * PLATEAU instead of growing with the corpus (StreamingCurationSpec's
+    * "store retention" case pins it). Semantics under a horizon are
+    * dedup-within-horizon — a new doc no longer matches partners older
+    * than the horizon — the same trade
+    * [[graft.dedup.StreamingNearDup]]'s bounded MapState horizon makes,
+    * and the right one for a rolling crawl. Returns total rows kept
+    * across the stores. */
   def evictStores(spark: org.apache.spark.sql.SparkSession, root: String,
                   horizonMinId: Long,
                   numBuckets: Int = NumBuckets): Long = {
@@ -257,32 +259,6 @@ object StreamingCuration {
         Seq("doc_id"), numBuckets) +
       BucketStore.evict(spark, simPath(root), simSchema, keep,
         Seq("b", "v", "doc_id"), numBuckets, bucketCols = Seq("b", "v"))
-  }
-
-  /** Re-spread all four standing stores into a new bucket count at a
-    * fresh root — the ACT of the store_rebucket_gate decision
-    * ([[graft.sink.BucketStore.rebucketDecision]]), for a deployment
-    * whose retained set outgrew its creation-time bucket count. Run in
-    * a maintenance window (between micro-batches / at a restart seam —
-    * single writer, like eviction); the old root stays fully readable
-    * until the caller switches `storeRoot` and `numBuckets` on the
-    * next [[attach]]. Probe identity across the move is asserted by
-    * the caller (StreamScale prints the episode; BucketStoreSpec pins
-    * the mechanism). Returns total rows re-spread. */
-  def rebucketStores(spark: org.apache.spark.sql.SparkSession,
-                     root: String, newRoot: String,
-                     fromBuckets: Int, toBuckets: Int): Long = {
-    def move(path: String => String, schema: StructType,
-             keyCols: Seq[String], bucketCols: Seq[String]): Long = {
-      BucketStore.rebucket(spark, path(root), path(newRoot), schema,
-        keyCols, fromBuckets, toBuckets, bucketCols)
-      BucketStore.read(spark, path(newRoot), schema, toBuckets).count()
-    }
-    move(fpPath, fpSchema, Seq("fp"), Nil) +
-      move(bandPath, bandSchema, Seq("band", "bucket", "doc_id"),
-        Seq("band", "bucket")) +
-      move(shPath, shSchema, Seq("doc_id"), Nil) +
-      move(simPath, simSchema, Seq("b", "v", "doc_id"), Seq("b", "v"))
   }
 
   /** Per-source funnel rollup of a flag table — the dedup_funnel

@@ -114,6 +114,24 @@ class BenchLineSpec extends AnyFunSuite {
     assert(q.map(_._1) == Seq("q_a"))
   }
 
+  test("a prior at another scale, rep count or core count voids the diff") {
+    // the committed BENCH_DETAIL.json's header shape: sf0.1, 3 reps,
+    // 32 host cores; a 4-core single-pass sf0.001 run must not diff
+    // against it, whatever its per-query ratios say
+    val committed =
+      """{"metric":"total","queries":{"q_a":0.50},"sf":"testdata/sf0.1","sha":"ad5e9a4",""" +
+        """"load":{"start":0.1,"end":6.6,"host_cpus":32},"reps":3,"stat":"min"}"""
+    assert(Bench.diffVoid(committed, "testdata/sf0.001", 1, 4) ==
+      Seq("sf", "reps", "host_cpus"))
+    assert(Bench.diffVoid(committed, "testdata/sf0.1", 3, 4) == Seq("host_cpus"))
+    // an identical header keeps the 1.5x rule: a 2x query is flagged
+    assert(Bench.diffVoid(committed, "testdata/sf0.1", 3, 32).isEmpty)
+    val q = Bench.diffGt(Bench.priorSection(committed, "queries"), Seq("q_a" -> 1.0))
+    assert(q == Seq("q_a" -> 2.0))
+    // no prior file: nothing to void (and nothing to diff)
+    assert(Bench.diffVoid("", "testdata/sf0.001", 1, 4).isEmpty)
+  }
+
   test("degenerate case: even a single kept query renders within budget") {
     val results = (1 to 400).map(i =>
       (s"an_extremely_long_query_name_padding_padding_$i", i * 0.01))

@@ -11,9 +11,7 @@ import org.apache.spark.sql.DataFrame
   * interleaved corruption — and (2) the BucketStore write/read
   * protocol, whose documented contract is single-writer PER STORE with
   * recovery-safe readers. This spec pins both, plus end-to-end query
-  * parity when N tenants drive the same session simultaneously. The
-  * measured throughput curve lives in [[graft.tools.ConcurrentBench]]
-  * (BENCH_NOTES table); this spec is the correctness half.
+  * parity when N tenants drive the same session simultaneously.
   */
 class ConcurrentTenantsSpec extends SparkTestBase {
 
