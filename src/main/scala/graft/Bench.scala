@@ -98,21 +98,24 @@ object Bench {
 
   /** The header fields that make a prior's timings comparable with this
     * run: the scale (last path component of `sf`), the rep count
-    * (min-of-3 and a single pass are different statistics) and the host
-    * core count. Returns the fields that differ or are missing from the
-    * prior, in that order; an absent prior has nothing to compare. A
-    * 4-core sf0.001 single-pass run diffed against the committed sf0.1,
-    * 32-core, 3-rep BENCH_DETAIL.json flagged five queries at
-    * 1.6–2.4× that no code change caused. */
+    * (min-of-3 and a single pass are different statistics) and the
+    * cores Spark ran on (`local[cpus]`, [[GraftSession.defaultCpus]] —
+    * not the host's core count: a `SPARK_GRAFT_CPUS=2` run on a 4-core
+    * host is not comparable with an unpinned one). Returns the fields
+    * that differ or are missing from the prior, in that order; an
+    * absent prior has nothing to compare. A 4-core sf0.001 single-pass
+    * run diffed against the committed sf0.1, 32-core, 3-rep
+    * BENCH_DETAIL.json flagged five queries at 1.6–2.4× that no code
+    * change caused. */
   def diffVoid(priorTxt: String, sf: String, reps: Int,
-               hostCpus: Int): Seq[String] =
+               cpus: Int): Seq[String] =
     if (priorTxt.isEmpty) Nil
     else {
       def field(key: String): Option[String] =
         s""""$key":"?([^",}]*)""".r.findFirstMatchIn(priorTxt).map(_.group(1))
       def scale(dir: String): String = dir.split('/').last
       Seq("sf" -> scale(sf), "reps" -> reps.toString,
-        "host_cpus" -> hostCpus.toString).collect {
+        "cpus" -> cpus.toString).collect {
         case (k, v) if !field(k).map(scale).contains(v) => k
       }
     }
@@ -231,7 +234,8 @@ object Bench {
       try new String(java.nio.file.Files.readAllBytes(detailPath), "UTF-8")
       catch { case _: Throwable => "" }
     val hostCpus = Runtime.getRuntime.availableProcessors
-    val void = diffVoid(priorTxt, sfDir, reps, hostCpus)
+    val cpus = GraftSession.defaultCpus.toInt
+    val void = diffVoid(priorTxt, sfDir, reps, cpus)
     val prior = priorSection(priorTxt, "queries")
     val regressions = diffGt(prior, results)
     // Stage-build regressions flag themselves too (r19 verdict: a
@@ -288,9 +292,10 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // Box-occupancy stamp: 1-min load average at start/end plus the host
     // core count — "contended box or regression?" answerable from the
-    // artifact alone (idle box ⇒ load ≈ the bench's own threads).
+    // artifact alone (idle box ⇒ load ≈ the bench's own threads) — and
+    // the cores Spark ran on, which diffVoid compares.
     val loadJson =
-      s""","load":{"start":${dec(loadStart, 1)},"end":${dec(loadAvg(), 1)},"host_cpus":$hostCpus}"""
+      s""","load":{"start":${dec(loadStart, 1)},"end":${dec(loadAvg(), 1)},"host_cpus":$hostCpus,"cpus":$cpus}"""
     // readMany resolve-loop cost of the store-backed queries this run
     // (r18 race fix): 0 reprobes on an uncontended box — any nonzero
     // count here is the measured price of the re-probe, per VERDICT #5.

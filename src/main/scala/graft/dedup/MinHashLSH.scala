@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.text.TextFunctions
@@ -79,17 +79,22 @@ object MinHashLSH {
   private def portableModHashSparkSql(v: String): String =
     s"cast(conv(substring(md5($v), 1, 15), 16, 10) AS bigint) % $P"
 
+  /** The LSH band keys of a `sig` column: an array of [[Bands]]
+    * structs (band, bucket), bucket = the band's [[Rows]] signature
+    * entries joined by '_'. Exploded by [[candidatePairs]] and by the
+    * streaming funnel's standing band store. */
+  def bandKeys: Column = array((0 until Bands).map { b =>
+    val slice = (1 to Rows).map(r => s"element_at(sig, ${b * Rows + r})")
+    struct(lit(b).as("band"),
+      expr(s"concat_ws('_', ${slice.mkString(", ")})").as("bucket"))
+  }: _*)
+
   /** Candidate pairs from band-bucket collisions, with the minhash
     * similarity estimate (matching signature positions / k). One shuffle
     * on (band, bucket); the self-join is bucket-local. */
   def candidatePairs(sigs: DataFrame, idCol: String): DataFrame = {
-    val bandKeys = (0 until Bands).map { b =>
-      val slice = (1 to Rows).map(r => s"element_at(sig, ${b * Rows + r})")
-      struct(lit(b).as("band"),
-        expr(s"concat_ws('_', ${slice.mkString(", ")})").as("bucket"))
-    }
     val buckets = sigs
-      .select(col(idCol), col("sig"), explode(array(bandKeys: _*)).as("bk"))
+      .select(col(idCol), col("sig"), explode(bandKeys).as("bk"))
       .select(col(idCol), col("sig"), col("bk.band"), col("bk.bucket"))
     val a = buckets.select(col(idCol).as("a_id"), col("sig").as("a_sig"),
       col("band"), col("bucket"))

@@ -34,17 +34,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 case class AbttResidual(first: Expression, second: Expression,
                         third: Expression) extends TernaryExpression {
 
-  private def isLongArray(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult = {
     val pcsOk = second.dataType match {
-      case ArrayType(inner, _) => isLongArray(inner)
+      case ArrayType(inner, _) => IntDot.isLongArray(inner)
       case _ => false
     }
-    if (isLongArray(first.dataType) && pcsOk && third.dataType == LongType)
+    if (IntDot.isLongArray(first.dataType) && pcsOk && third.dataType == LongType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "abtt_residual requires (array<bigint>, array<array<bigint>>, bigint), got " +
@@ -69,9 +64,6 @@ case class AbttResidual(first: Expression, second: Expression,
 }
 
 object AbttResidual {
-  private def tdiv(x: Long, d: Long): Long =
-    if (x < 0) -((-x) / d) else x / d
-
   /** Shared by the interpreted path and the generated code. */
   def residual(q: ArrayData, pcs: ArrayData, cap: Long): ArrayData = {
     val d = q.numElements()
@@ -103,7 +95,7 @@ object AbttResidual {
       }
       val sh = math.max(m / cap, 1L)
       i = 0
-      while (i < n) { r(i) = tdiv(r(i), sh); i += 1 }
+      while (i < n) { r(i) = graft.embed.PcaPower.tdiv(r(i), sh); i += 1 }
       c += 1
     }
     new GenericArrayData(r)

@@ -1,5 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 /** The shared Hamming-band width ladder (the RpLsh.widthFor discipline
   * for banded Hamming-≤3 blocking, used by mm_phash_pairs and
   * simhash_pairs and their `*_width` oracle gates).
@@ -20,6 +23,12 @@ package graft.functions
   * unbounded stream — the StreamingEmbedDedup seam); the width is part
   * of any standing band store's layout and must not change across
   * restarts of one deployment.
+  *
+  * [[bandRows]] and [[pairs]] are the one banding + verify kernel:
+  * simhash_pairs, mm_phash_pairs and the two streaming twins
+  * (StreamingCuration's SimHash stage, StreamingMediaDedup's phash
+  * stage) each supply only their hash step and, when streaming, the
+  * standing band store they probe.
   */
 object BandLadder {
   val Bands = 4
@@ -27,4 +36,41 @@ object BandLadder {
   val Tier16MaxN = 1L << 17
 
   def bitsFor(n: Long): Int = if (n <= Tier16MaxN) 16 else 32
+
+  /** Appends band index `b` and band value `v` (width `bandBits`) to a
+    * table carrying its fingerprint as `lo`/`hi` — a 64-bit hash in
+    * `lo` with hi = 0, or a 128-bit hash across both. Band b reads lo
+    * while b·w < 64, hi above; map-only, [[Bands]] rows per input row. */
+  def bandRows(hashed: DataFrame, bandBits: Int): DataFrame = {
+    val mask = (1L << bandBits) - 1
+    hashed
+      .withColumn("b", explode(expr(s"sequence(0, ${Bands - 1})")))
+      .withColumn("v",
+        when(col("b") * bandBits < 64,
+          expr(s"shiftright(lo, CAST(b * $bandBits AS INT)) & ${mask}L"))
+        .otherwise(
+          expr(s"shiftright(hi, CAST(b * $bandBits - 64 AS INT)) & ${mask}L")))
+  }
+
+  /** Distinct (a_id, b_id, hamming) pairs with Hamming ≤ [[HammingMax]]
+    * over popcount(lo⊕lo) + popcount(hi⊕hi), between the band rows of
+    * `as` and `bs` (each (b, v, `id`, lo, hi)) that collide in a band
+    * with a_id < b_id. A self-join passes one table twice; a store
+    * probe passes the standing store as `as`. The join is keyed on
+    * (b, v); the popcount verify runs BEFORE distinct, so the
+    * distinct's exchange carries only true near-dup pairs, not every
+    * band collision. */
+  def pairs(as: DataFrame, bs: DataFrame, id: String): DataFrame = {
+    val a = as.select(col("b"), col("v"), col(id).as("a_id"),
+      col("lo").as("a_lo"), col("hi").as("a_hi"))
+    val b = bs.select(col("b"), col("v"), col(id).as("b_id"),
+      col("lo").as("b_lo"), col("hi").as("b_hi"))
+    a.join(b, Seq("b", "v"))
+      .filter(col("a_id") < col("b_id"))
+      .withColumn("hamming",
+        expr("CAST(bit_count(a_lo ^ b_lo) + bit_count(a_hi ^ b_hi) AS INT)"))
+      .filter(col("hamming") <= HammingMax)
+      .select(col("a_id"), col("b_id"), col("hamming"))
+      .distinct()
+  }
 }

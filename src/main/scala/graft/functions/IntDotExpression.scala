@@ -27,13 +27,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 case class IntDot(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def isLongArray(t: DataType): Boolean = t match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
+    if (IntDot.isLongArray(left.dataType) && IntDot.isLongArray(right.dataType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"int_dot requires two array<bigint> arguments, got " +
@@ -66,6 +61,12 @@ case class IntDot(left: Expression, right: Expression)
 }
 
 object IntDot {
+  /** `array<bigint>` — the input type of int_dot and abtt_residual. */
+  private[functions] def isLongArray(t: DataType): Boolean = t match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+
   /** Interpreted twin of the generated loop. */
   def dot(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())

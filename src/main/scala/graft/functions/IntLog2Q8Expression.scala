@@ -46,9 +46,9 @@ case class IntLog2Q8(child: Expression) extends UnaryExpression {
 }
 
 object IntLog2Q8 {
-  /** Interpreted twin of the generated call — the identical algorithm
-    * to [[graft.text.UnigramTrain.ilog2q8]] minus its domain require
-    * (total: x ≤ 0 → 0). */
+  /** The algorithm itself — the generated call, the interpreted path
+    * and [[graft.text.UnigramTrain.ilog2q8]] (which adds its domain
+    * require) all run it. Total: x ≤ 0 → 0. */
   def ilog2q8(x: Long): Long = {
     if (x <= 0L) return 0L
     val e = 63 - java.lang.Long.numberOfLeadingZeros(x)

@@ -38,11 +38,14 @@ object KafkaTelemetrySource {
       .select((TelemetrySchema.telemetry.fieldNames.toSeq
         .map(f => col(s"t.$f")) :+ col("kafka_ts")): _*)
 
-  /** One-pass tagged form for dead-letter routing (O5 improvement — the
-    * reference logs-and-drops; we keep the raw bytes). PERMISSIVE
-    * from_json marks malformed input via columnNameOfCorruptRecord
-    * (`t.__corrupt` non-null ⇒ corrupt) rather than nulling the struct;
-    * split with filters inside a foreachBatch for single-pass semantics. */
+  /** The tagged parse [[parsedTelemetry]] filters: PERMISSIVE from_json
+    * marks malformed input via columnNameOfCorruptRecord (`t.__corrupt`
+    * non-null ⇒ corrupt) rather than nulling the struct, and the raw
+    * bytes ride along. What runs today drops corrupt records, as the
+    * reference logs-and-drops (O5): neither `demuxQuery` nor perfbench
+    * routes them anywhere. [[deadLetters]] selects them for a
+    * dead-letter sink, but no sink is wired; StreamingPipelineSpec is
+    * its only caller. */
   def taggedTelemetry(kafkaDf: DataFrame): DataFrame = {
     val base =
       if (kafkaDf.columns.contains("timestamp"))
@@ -63,7 +66,7 @@ object KafkaTelemetrySource {
   }
 
   /** Corrupt records only (non-blank input that failed the tolerant
-    * parse) — route to a dead-letter sink instead of silently dropping. */
+    * parse), for a dead-letter sink; see [[taggedTelemetry]]. */
   def deadLetters(tagged: DataFrame): DataFrame =
     tagged
       .filter(col("t.__corrupt").isNotNull && trim(col("raw")) =!= "")

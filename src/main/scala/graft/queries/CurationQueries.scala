@@ -829,9 +829,12 @@ object CurationQueries {
 
   /** Score ANY batch of documents (doc_id, text, source) against a
     * prebuilt lift table — the per-doc step is stateless given the
-    * broadcast model, which is what makes the streaming twin
-    * ([[graft.streaming.StreamingDsir]]) a plain foreachBatch of this
-    * same function. */
+    * broadcast model, so the streaming twin is a plain `foreachBatch`
+    * of this same function: train the importance model once, stream
+    * the selection (StreamingDsirSpec pins per-batch ≡ one-shot). A
+    * model refresh is a batch-side rebuild swapping the lift table
+    * between batches. A doc whose buckets the model never saw still
+    * scores at the add-1 floor (the left join below), never dropped. */
   private[graft] def dsirScore(docs: DataFrame, lift: DataFrame): DataFrame = {
     val grams = ngramRows(docs, "doc_id", "text", 2)
       .select(col("doc_id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedup.{MinHashLSH, SimHash}
+import graft.functions.BandLadder
 import graft.text.TextFunctions
 
 /** Deduplication operator family over `documents` (SURVEY §7.5): exact
@@ -354,17 +355,16 @@ object DedupQueries {
   // Hamming distance 3 agrees EXACTLY on at least one band, so the
   // band-bucket self-join is a LOSSLESS blocking for the ≤3 search.
   // Candidates come only from band collisions — never all-pairs — and
-  // the verify step is one xor + bit_count per candidate. Plan: the
-  // band expansion is map-only over the signature pass (4 rows per
-  // doc); the join is keyed on (band, value); distinct collapses
-  // multi-band collisions before the popcount filter. The 16-bit bands
+  // the verify step is one xor + bit_count per candidate: the
+  // BandLadder.bandRows/pairs kernel, shared with mm_phash_pairs and
+  // the two streaming funnels. The 16-bit bands
   // are the 100 TB shape: 65 536 bucket values per band keeps candidate
   // fan-out at O(n²/65 536) per band vs the O(n²/256) the former
   // 32-bit/8-bit layout allowed; the blocking guarantee is the same
   // pigeonhole argument at any width.
-  private val SimBands = graft.functions.BandLadder.Bands
-  private val SimHammingMax = graft.functions.BandLadder.HammingMax
-  private val SimTier16MaxN = graft.functions.BandLadder.Tier16MaxN
+  private val SimBands = BandLadder.Bands
+  private val SimHammingMax = BandLadder.HammingMax
+  private val SimTier16MaxN = BandLadder.Tier16MaxN
   // the cascade funnel's PINNED production width (see the rm3 note)
   private val SimBandBits = SimHash.Bits / SimBands
   private val SimBandMask = (1L << SimBandBits) - 1
@@ -380,7 +380,7 @@ object DedupQueries {
     * documented semantic of the tier, mirrored exactly in the oracle). */
   private[graft] def buildSimhashPairs(s: SparkSession, d: String): DataFrame =
     buildSimhashPairsAt(s, d,
-      graft.functions.BandLadder.bitsFor(graft.SharedStages.docCount(s, d)))
+      BandLadder.bitsFor(graft.SharedStages.docCount(s, d)))
 
   private[graft] def buildSimhashPairsAt(s: SparkSession, d: String,
                                          bandBits: Int): DataFrame = {
@@ -390,28 +390,8 @@ object DedupQueries {
         SimHash.simhash(docs, "doc_id", "text")
           .select(col("doc_id"), col("simhash").as("lo"), lit(0L).as("hi"))
       else SimHash.simhash128(docs, "doc_id", "text")
-    val mask = (1L << bandBits) - 1
-    val banded = hashed
-      .withColumn("b", explode(expr(s"sequence(0, ${SimBands - 1})")))
-      .withColumn("v",
-        when(col("b") * bandBits < 64,
-          expr(s"shiftright(lo, CAST(b * $bandBits AS INT)) & ${mask}L"))
-        .otherwise(
-          expr(s"shiftright(hi, CAST(b * $bandBits - 64 AS INT)) & ${mask}L")))
-    val a = banded.select(col("b"), col("v"), col("doc_id").as("a_id"),
-      col("lo").as("a_lo"), col("hi").as("a_hi"))
-    val bs = banded.select(col("b"), col("v"), col("doc_id").as("b_id"),
-      col("lo").as("b_lo"), col("hi").as("b_hi"))
-    // verify BEFORE distinct: the popcount is one codegen'd op per
-    // candidate row, and filtering at <=3 first shrinks the distinct's
-    // exchange from every band collision to only true near-dup pairs
-    a.join(bs, Seq("b", "v"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(a_lo ^ b_lo) + bit_count(a_hi ^ b_hi) AS INT)"))
-      .filter(col("hamming") <= SimHammingMax)
-      .select(col("a_id"), col("b_id"), col("hamming"))
-      .distinct()
+    val banded = BandLadder.bandRows(hashed, bandBits)
+    BandLadder.pairs(banded, banded, "doc_id")
   }
 
   // Tier guards replicate BandLadder.bitsFor on the same COUNT(*);

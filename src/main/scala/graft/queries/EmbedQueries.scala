@@ -1175,28 +1175,36 @@ object EmbedQueries {
   // linear-algebra scaffold under PCA / ZCA whitening / ABTT
   // post-processing and linear probes: every one of those starts from
   // exactly this d×d aggregation. Shape is the canonical outer-product
-  // reduction: component rows (vec, i, q_i) self-join ON THE VECTOR KEY
-  // (co-partitioned — never a cross join), upper triangle only, then
-  // ONE (i, j) aggregation whose map-side partials bound the exchange
-  // at d·(d+1)/2 = 2 080 cells per executor REGARDLESS of corpus size —
-  // X^T X is embarrassingly row-splittable, which is why it is the
-  // standard first distributed step of large-scale PCA. Exact 64-bit
-  // integer arithmetic end-to-end (quantized components are < 2^20, so
-  // a cell overflows only past ~2^23 vectors; at that scale the
-  // documented path is per-partition partial Grams over a sample, or a
+  // reduction, row-local: each vector expands its own upper-triangle
+  // component products (a double posexplode of q — no join, no
+  // exchange before the aggregation), then ONE (i, j) aggregation
+  // whose map-side partials bound the exchange at d·(d+1)/2 = 2 080
+  // cells per executor REGARDLESS of corpus size — X^T X is
+  // embarrassingly row-splittable, which is why it is the standard
+  // first distributed step of large-scale PCA. Exact 64-bit integer
+  // arithmetic end-to-end (quantized components are < 2^20, so a cell
+  // overflows only past ~2^23 vectors; at that scale the documented
+  // path is per-partition partial Grams over a sample, or a
   // DECIMAL(38) accumulator — same plan, wider cell).
 
-  private[graft] def gramMatrix(s: SparkSession, d: String): DataFrame = {
-    val comps = Similarity
-      .quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), posexplode(col("q")).as(Seq("i", "qi")))
-    val a = comps.select(col("vec_id"), col("i"), col("qi"))
-    val b = comps.select(col("vec_id"), col("i").as("j"), col("qi").as("qj"))
-    a.join(b, "vec_id")
-      .filter(col("i") <= col("j"))
+  /** (i, j, g) upper-triangle Gram of a frame carrying quantized
+    * `q: array<bigint>` ([[Similarity.quantized]]). The same kernel is
+    * the streaming twin: on a stream it is a Complete-mode aggregation
+    * whose state is the 2 080 cells regardless of stream length, and
+    * StreamingGramSpec pins that the streamed state equals the batch
+    * Gram after every micro-batch and that [[graft.embed.PcaPower]] on
+    * it gives the batch component — incremental PCA as "maintain the
+    * Gram online, re-run the driver-cheap eigen step on demand". */
+  private[graft] def gram(quantized: DataFrame): DataFrame =
+    quantized
+      .select(posexplode(col("q")).as(Seq("i", "qi")), col("q"))
+      .select(col("i"), col("qi"), posexplode(col("q")).as(Seq("j", "qj")))
+      .filter(col("j") >= col("i"))
       .groupBy(col("i"), col("j"))
       .agg(sum(col("qi") * col("qj")).as("g"))
-  }
+
+  private[graft] def gramMatrix(s: SparkSession, d: String): DataFrame =
+    gram(Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding"))
 
   // the component expansion derives its bound from len(q) — the SAME
   // source of truth the Spark side's posexplode uses — so a change in
@@ -1945,10 +1953,10 @@ object EmbedQueries {
 
   /** Per-vector probe scoring of an embeddings batch against FIXED
     * weights — the stateless per-batch kernel shared by probe_eval and
-    * the streaming twin ([[graft.streaming.StreamingProbe]]): scoring
-    * is map-only given the broadcast w, so the online form is a
-    * foreachBatch of exactly this function (the StreamingDsir
-    * discipline — train the model batch-side, stream the scoring). */
+    * the streaming twin: scoring is map-only given the broadcast w, so
+    * the online form is a `foreachBatch` of exactly this function
+    * (train the model batch-side, stream the scoring;
+    * StreamingProbeSpec pins per-batch ≡ one-shot). */
   private[graft] def probeScores(batch: DataFrame, w: Seq[Long]): DataFrame =
     Similarity.quantized(batch, "vec_id", "embedding")
       .withColumn("wv", typedLit(w))

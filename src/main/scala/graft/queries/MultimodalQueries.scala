@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.BandLadder
 import graft.multimodal.Multimodal
 
 /** Oracle exposure of the multimodal plumbing: documents.text bytes act
@@ -244,10 +245,7 @@ object MultimodalQueries {
     * (4 disjoint bands cover Hamming ≤ 3 at any width). The threshold
     * is an exact integer compare on COUNT(*), derived identically in
     * both engines — `mm_phash_width` is the oracle-gated decision. */
-  private val PhTier16MaxN = graft.functions.BandLadder.Tier16MaxN
-
-  private[graft] def phBandBitsFor(n: Long): Int =
-    graft.functions.BandLadder.bitsFor(n)
+  private val PhTier16MaxN = BandLadder.Tier16MaxN
 
   private def phashTable(s: SparkSession, d: String): DataFrame =
     Multimodal.perceptualHashes(
@@ -294,53 +292,27 @@ object MultimodalQueries {
     // session/dir — SharedStages.docCount — instead of one per
     // invocation); the +8 planted rows are excluded so both engines
     // derive the width from the same corpus COUNT(*)
-    mmPhashPairsAt(docs, phBandBitsFor(graft.SharedStages.docCount(s, d)))
+    mmPhashPairsAt(docs, BandLadder.bitsFor(graft.SharedStages.docCount(s, d)))
   }
 
-  /** Band-collision candidates at an explicit width — the pre-Hamming
-    * stage of [[mmPhashPairsAt]]. BENCH_NOTES.md's "mm_phash cost
-    * curve" table is the ACTUAL candidate mass each tier produced
-    * against the ladder's 4n budget (the BandLadder arithmetic is about
-    * random collisions; the measured mass includes the corpus's real
-    * near-dup structure). */
-  private def mmPhashCandAt(docs: DataFrame, bandBits: Int): DataFrame = {
+  /** Banded near-dup pairs at an explicit band width (16 → 64-cell
+    * hash in `lo`, hi = 0; 32 → 128-cell hash across lo/hi), through
+    * the shared [[graft.functions.BandLadder.pairs]] kernel — at the
+    * 16 tier the hi terms are constant 0 and fold away.
+    * BENCH_NOTES.md's "mm_phash cost curve" table is the ACTUAL
+    * candidate mass each tier produced against the ladder's 4n budget
+    * (the BandLadder arithmetic is about random collisions; the
+    * measured mass includes the corpus's real near-dup structure). */
+  private[graft] def mmPhashPairsAt(docs: DataFrame, bandBits: Int): DataFrame = {
     val hashed =
       if (bandBits == 16)
         Multimodal.perceptualHashes(docs, "doc_id", "blob").toDF()
           .select(col("id"), col("phash").as("lo"), lit(0L).as("hi"))
       else
         Multimodal.perceptualHashes128(docs, "doc_id", "blob").toDF()
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    val banded = hashed
-      .withColumn("b", explode(expr(s"sequence(0, ${PhBands - 1})")))
-      .withColumn("v",
-        when(col("b") * bandBits < 64,
-          expr(s"shiftright(lo, CAST(b * $bandBits AS INT)) & ${mask}L"))
-        .otherwise(
-          expr(s"shiftright(hi, CAST(b * $bandBits - 64 AS INT)) & ${mask}L")))
-    val a = banded.select(col("b"), col("v"), col("id").as("a_id"),
-      col("lo").as("a_lo"), col("hi").as("a_hi"))
-    val bs = banded.select(col("b"), col("v"), col("id").as("b_id"),
-      col("lo").as("b_lo"), col("hi").as("b_hi"))
-    // verify BEFORE distinct (the simhash_pairs discipline): popcount
-    // is one codegen'd op per candidate; the distinct's exchange then
-    // carries only true near-dup pairs
-    a.join(bs, Seq("b", "v"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming",
-        expr("CAST(bit_count(a_lo ^ b_lo) + bit_count(a_hi ^ b_hi) AS INT)"))
+    val banded = BandLadder.bandRows(hashed, bandBits)
+    BandLadder.pairs(banded, banded, "id")
   }
-
-  /** Banded near-dup pairs at an explicit band width (16 → 64-cell
-    * hash in `lo`, hi = 0; 32 → 128-cell hash across lo/hi). One code
-    * path: band b of width w reads lo while b·w < 64, hi above;
-    * Hamming is popcount(lo⊕lo) + popcount(hi⊕hi) — at the 16 tier the
-    * hi terms are constant 0 and fold away. */
-  private[graft] def mmPhashPairsAt(docs: DataFrame, bandBits: Int): DataFrame =
-    mmPhashCandAt(docs, bandBits)
-      .filter(col("hamming") <= PhHammingMax)
-      .select(col("a_id"), col("b_id"), col("hamming"))
-      .distinct()
 
   // ------------------------------------------------- mm_phash_width
   // The measure→act decision row for the band ladder (lsh_width's
@@ -431,7 +403,7 @@ object MultimodalQueries {
        |          SUM(cell) OVER (PARTITION BY doc_id) AS tot FROM ${p}cells)
        |  GROUP BY 1)""".stripMargin
 
-  // The tier guards replicate phBandBitsFor on the same COUNT(*); the
+  // The tier guards replicate BandLadder.bitsFor on the same COUNT(*); the
   // unchosen tier's branch is row-empty under its guard, so exactly one
   // hash table feeds the banding at any SF.
   // `blobs` = documents + the planted twin fixture (plantTwins above,

@@ -604,7 +604,7 @@ object TextQueries {
   /** The per-word encoding table under BOTH learned tokenizers:
     * (word, bpe_ids, bpe_np, uni_ids, uni_np) over the common gated
     * word set — the standing artifact a shard writer (and its
-    * streaming twin, [[graft.streaming.StreamingEncode]]) encodes
+    * streaming twin, a `foreachBatch` of [[encodeReceipts]]) encodes
     * against. Vocab-sized. */
   private[graft] def encodeWordTable(s: SparkSession, d: String): DataFrame = {
     val S = graft.text.BpeTrain.Sep
@@ -662,6 +662,23 @@ object TextQueries {
         array_join(expr(
           "transform(array_sort(collect_list(CASE WHEN uni_ids IS NOT NULL THEN struct(wpos, uni_ids) END)), x -> x.uni_ids)"),
           ",").as("uni_seq"))
+
+  /** Per-doc receipts (doc_id, n_words, n_oov, n_pieces, id_seq) of
+    * `docs` against a FIXED word table under the tokenizer `chosen`
+    * ("bpe" | "unigram", `tok_gate`'s pick) — what the shard writer
+    * carries per document, and the kernel a streaming encoder runs per
+    * micro-batch: stateless given the table, so periodic retraining is
+    * a batch-side rebuild swapping the table between batches. OOV
+    * words (outside the gated alphabet or length cap) are counted and
+    * skipped in the id stream, as in the batch path. */
+  private[graft] def encodeReceipts(docs: DataFrame, wordTable: DataFrame,
+                                    chosen: String): DataFrame =
+    encodeDocs(docs, wordTable).select(col("doc_id"), col("n_words"),
+      col("n_oov"),
+      when(lit(chosen) === "bpe", col("bpe_np"))
+        .otherwise(col("uni_np")).as("n_pieces"),
+      when(lit(chosen) === "bpe", col("bpe_seq"))
+        .otherwise(col("uni_seq")).as("id_seq"))
 
   private def encodeShards(s: SparkSession, d: String): DataFrame = {
     val wordTable = encodeWordTable(s, d)
@@ -1099,8 +1116,13 @@ object TextQueries {
     * (refBi, refUni, vsz) → per-(doc, bits) counts. The triple table
     * carries the joins and the log chain; one join back distributes
     * each triple's bits to the per-doc counts. Stateless given the
-    * model — the kernel both the batch stage and
-    * [[graft.streaming.StreamingPpl]] run. */
+    * model — the kernel both the batch stage and the streaming twin (a
+    * `foreachBatch` of [[lmDocScores]] or [[minkOf]] over it) run:
+    * CCNet's deployment shape, the LM trained once on the reference
+    * corpus and every arriving shard scored against it. An unseen
+    * bigram scores at the add-one floor (the left joins); a doc in a
+    * language the LM does not cover is excluded (the inner vsz join).
+    * The corpus-relative tercile stays batch-side. */
   private[graft] def lmScoreBits(occ: DataFrame, refBi: DataFrame,
       refUni: DataFrame, vsz: DataFrame): DataFrame = {
     val trip = occ.select(col("lang"), col("w1"), col("w2")).distinct()

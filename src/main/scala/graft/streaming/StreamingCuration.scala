@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.dedup.{MinHashLSH, SimHash}
+import graft.functions.BandLadder
 import graft.sink.BucketStore
 import graft.text.TextFunctions.tokens
 
@@ -62,17 +63,16 @@ object StreamingCuration {
 
   val JaccardTau = 0.5
   val NumBuckets = 32
-  private val SimBands = 4
-  private val SimBandBits = SimHash.Bits / SimBands
-  private val SimBandMask = (1L << SimBandBits) - 1
-  private val SimHammingMax = SimBands - 1
+  private val SimBandBits = SimHash.Bits / BandLadder.Bands
 
   private def fpPath(root: String) = s"$root/fp"
   private def bandPath(root: String) = s"$root/band"
   private def shPath(root: String) = s"$root/sh"
   private def simPath(root: String) = s"$root/sim"
 
-  private val fpSchema = StructType(Seq(
+  /** (fp, doc_id): the exact-stage store, shared with
+    * [[StreamingMediaDedup]]'s digest store. */
+  private[streaming] val fpSchema = StructType(Seq(
     StructField("fp", StringType), StructField("doc_id", LongType)))
   private val bandSchema = StructType(Seq(
     StructField("band", IntegerType), StructField("bucket", StringType),
@@ -84,27 +84,25 @@ object StreamingCuration {
     StructField("b", IntegerType), StructField("v", LongType),
     StructField("doc_id", LongType), StructField("simhash", LongType)))
 
-  /** LSH band rows (doc_id, band, bucket) of a signature table — the
-    * same banding as [[MinHashLSH.candidatePairs]]. */
-  private def bandRows(sigs: DataFrame): DataFrame = {
-    val bandKeys = (0 until MinHashLSH.Bands).map { b =>
-      val slice = (1 to MinHashLSH.Rows)
-        .map(r => s"element_at(sig, ${b * MinHashLSH.Rows + r})")
-      struct(lit(b).as("band"),
-        expr(s"concat_ws('_', ${slice.mkString(", ")})").as("bucket"))
-    }
-    sigs.select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.bucket").as("bucket"))
+  /** The exact keep-first stage of both streaming funnels: appends
+    * `rm_exact` = 1 to each (doc_id, fp, …) row for which a SMALLER-id
+    * row with the same `fp` exists in the batch (the batch
+    * `min(doc_id) over fp` window) or in the fp store at `path`, read
+    * only in the buckets the batch's fingerprints hash into. */
+  private[streaming] def keepFirst(fps: DataFrame, path: String,
+                                   numBuckets: Int): DataFrame = {
+    val stored = BucketStore.readBuckets(fps.sparkSession, path, fpSchema,
+        BucketStore.touchedBuckets(fps.select("fp"), Seq("fp"), numBuckets))
+      .withColumnRenamed("doc_id", "stored_id")
+    fps.withColumn("keep_id",
+        min(col("doc_id")).over(Window.partitionBy(col("fp"))))
+      .join(stored, Seq("fp"), "left")
+      .withColumn("rm_exact",
+        ((col("doc_id") =!= col("keep_id")) ||
+          (col("stored_id").isNotNull && col("stored_id") < col("doc_id")))
+          .cast("long"))
+      .drop("keep_id", "stored_id")
   }
-
-  /** SimHash band rows (doc_id, b, v, simhash). */
-  private def simBandRows(sims: DataFrame): DataFrame =
-    sims.withColumn("b", explode(expr(s"sequence(0, ${SimBands - 1})")))
-      .withColumn("v",
-        expr(s"shiftright(simhash, b * $SimBandBits) & ${SimBandMask}L"))
-      .select(col("doc_id"), col("b").cast("int").as("b"), col("v"),
-        col("simhash"))
 
   /** Flag one batch against the standing stores and advance them.
     * Input (doc_id, source, text); output one row per input doc:
@@ -141,17 +139,8 @@ object StreamingCuration {
     val q1 = q.filter(col("rm_quality") === 0)
 
     // ---- stage 1: exact fingerprint, keep-first by id
-    val fps = q1.withColumn("fp", md5(lower(trim(col("text")))))
-    val inBatch = fps.withColumn("keep_id",
-      min(col("doc_id")).over(Window.partitionBy(col("fp"))))
-    val fpStored = BucketStore.readBuckets(spark, fpPath(root), fpSchema,
-        BucketStore.touchedBuckets(fps.select("fp"), Seq("fp"), numBuckets))
-      .withColumnRenamed("doc_id", "stored_id")
-    val ex = inBatch.join(fpStored, Seq("fp"), "left")
-      .withColumn("rm_exact",
-        ((col("doc_id") =!= col("keep_id")) ||
-          (col("stored_id").isNotNull && col("stored_id") < col("doc_id")))
-          .cast("long"))
+    val ex = keepFirst(q1.withColumn("fp", md5(lower(trim(col("text"))))),
+        fpPath(root), numBuckets)
       .select(col("doc_id"), col("source"), col("text"), col("fp"),
         col("rm_exact"))
       .localCheckpoint()
@@ -159,7 +148,9 @@ object StreamingCuration {
 
     // ---- stage 2: MinHash LSH candidates + verified Jaccard
     val sigs = MinHashLSH.signatures(s1, "doc_id", "text").localCheckpoint()
-    val bands = bandRows(sigs)
+    val bands = sigs.select(col("doc_id"), explode(MinHashLSH.bandKeys).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"),
+        col("bk.bucket").as("bucket"))
     val candIn = MinHashLSH.candidatePairs(sigs, "doc_id")
       .select(col("a_id"), col("b_id"))
     val bandStored = BucketStore.readBuckets(spark, bandPath(root), bandSchema,
@@ -185,23 +176,19 @@ object StreamingCuration {
       .localCheckpoint()
     val s2 = s1f.filter(col("rm_minhash") === 0)
 
-    // ---- stage 3: SimHash banded Hamming
+    // ---- stage 3: SimHash banded Hamming — the simhash_pairs kernel
+    // at the 16-bit width, in-batch and against the band store
     val sims = SimHash.simhash(s2, "doc_id", "text").localCheckpoint()
-    val sBands = simBandRows(sims)
-    val sIn = sBands.as("x").join(sBands.as("y"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(expr("bit_count(x.simhash ^ y.simhash)") <= SimHammingMax)
-      .select(col("y.doc_id").as("doc_id"))
+    val sBands = BandLadder.bandRows(
+      sims.select(col("doc_id"), col("simhash").as("lo"), lit(0L).as("hi")),
+      SimBandBits)
     val simStored = BucketStore.readBuckets(spark, simPath(root), simSchema,
-      BucketStore.touchedBuckets(sBands, Seq("b", "v"), numBuckets))
-    val sX = sBands.as("x")
-      .join(simStored.as("st"),
-        col("x.b") === col("st.b") && col("x.v") === col("st.v") &&
-          col("st.doc_id") < col("x.doc_id"))
-      .filter(expr("bit_count(x.simhash ^ st.simhash)") <= SimHammingMax)
-      .select(col("x.doc_id").as("doc_id"))
-    val rm3 = sIn.unionByName(sX).distinct()
+        BucketStore.touchedBuckets(sBands, Seq("b", "v"), numBuckets))
+      .select(col("b"), col("v"), col("doc_id"), col("simhash").as("lo"),
+        lit(0L).as("hi"))
+    val rm3 = BandLadder.pairs(sBands, sBands, "doc_id")
+      .unionByName(BandLadder.pairs(simStored, sBands, "doc_id"))
+      .select(col("b_id").as("doc_id")).distinct()
       .withColumn("rm_simhash", lit(1L))
 
     val flagged = q.select(col("doc_id"), col("source"), col("rm_quality"))
@@ -228,7 +215,9 @@ object StreamingCuration {
           shPath(root), Seq("doc_id"), numBuckets)
       }
       if (!sims.isEmpty)
-        BucketStore.upsert(spark, sBands, simPath(root),
+        BucketStore.upsert(spark,
+          sBands.select(col("doc_id"), col("b"), col("v"),
+            col("lo").as("simhash")), simPath(root),
           Seq("b", "v", "doc_id"), numBuckets, bucketCols = Seq("b", "v"))
     }
     flagged

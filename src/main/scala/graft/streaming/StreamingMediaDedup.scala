@@ -1,11 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.functions.BandLadder
 import graft.multimodal.Multimodal
 import graft.sink.BucketStore
 
@@ -59,8 +59,6 @@ import graft.sink.BucketStore
 object StreamingMediaDedup {
 
   val NumBuckets = 32
-  private val Bands = 4
-  private val HammingMax = Bands - 1
 
   /** Band-store layout version. v1 stored only the tier's Hamming hash
     * and pinned the band width forever; v2 adds the wide 128-cell hash
@@ -76,8 +74,6 @@ object StreamingMediaDedup {
   private def pbPath(root: String, bandBits: Int) = s"$root/pb_w$bandBits"
   private def layoutPath(root: String) = s"$root/_layout"
 
-  private val dgSchema = StructType(Seq(
-    StructField("fp", StringType), StructField("doc_id", LongType)))
   private val pbSchema = StructType(Seq(
     StructField("b", IntegerType), StructField("v", LongType),
     StructField("doc_id", LongType),
@@ -126,19 +122,13 @@ object StreamingMediaDedup {
     }
 
   /** (doc_id, b, v, lo, hi, wlo, whi) band rows of a hash table at the
-    * deployment's band width — the mm_phash_pairs banding, carrying the
-    * wide hash for future [[migrateWidth]] rebuilds. */
-  private def bandRows(ph: DataFrame, bandBits: Int): DataFrame = {
-    val mask = (1L << bandBits) - 1
-    ph.withColumn("b", explode(expr(s"sequence(0, ${Bands - 1})")))
-      .withColumn("v",
-        when(col("b") * bandBits < 64,
-          expr(s"shiftright(lo, CAST(b * $bandBits AS INT)) & ${mask}L"))
-        .otherwise(
-          expr(s"shiftright(hi, CAST(b * $bandBits - 64 AS INT)) & ${mask}L")))
-      .select(col("id").as("doc_id"), col("b").cast("int").as("b"),
-        col("v"), col("lo"), col("hi"), col("wlo"), col("whi"))
-  }
+    * deployment's band width — the mm_phash_pairs banding
+    * ([[BandLadder.bandRows]]), carrying the wide hash for future
+    * [[migrateWidth]] rebuilds. */
+  private def bandRows(ph: DataFrame, bandBits: Int): DataFrame =
+    BandLadder.bandRows(ph, bandBits)
+      .select(col("id").as("doc_id"), col("b"), col("v"), col("lo"),
+        col("hi"), col("wlo"), col("whi"))
 
   /** Flag one batch of (doc_id, blob) against the standing stores and
     * advance them. Output one row per input blob:
@@ -150,17 +140,8 @@ object StreamingMediaDedup {
     val in = batch.select(col("doc_id"), col("blob")).localCheckpoint()
 
     // ---- stage 1: exact digest, keep-first by id (mm_dedup's key)
-    val fps = in.withColumn("fp", md5(col("blob")))
-    val inBatch = fps.withColumn("keep_id",
-      min(col("doc_id")).over(Window.partitionBy(col("fp"))))
-    val dgStored = BucketStore.readBuckets(spark, dgPath(root), dgSchema,
-        BucketStore.touchedBuckets(fps.select("fp"), Seq("fp"), NumBuckets))
-      .withColumnRenamed("doc_id", "stored_id")
-    val ex = inBatch.join(dgStored, Seq("fp"), "left")
-      .withColumn("rm_exact",
-        ((col("doc_id") =!= col("keep_id")) ||
-          (col("stored_id").isNotNull && col("stored_id") < col("doc_id")))
-          .cast("long"))
+    val ex = StreamingCuration.keepFirst(in.withColumn("fp", md5(col("blob"))),
+        dgPath(root), NumBuckets)
       .select(col("doc_id"), col("blob"), col("fp"), col("rm_exact"))
       .localCheckpoint()
     val s1 = ex.filter(col("rm_exact") === 0)
@@ -183,22 +164,12 @@ object StreamingMediaDedup {
           col("wlo"), col("whi")))
       .localCheckpoint()
     val bands = bandRows(hashed, bandBits)
-    val ham = expr(
-      s"bit_count(x.lo ^ y.lo) + bit_count(x.hi ^ y.hi) <= $HammingMax")
-    val inPairs = bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(ham)
-      .select(col("y.doc_id").as("doc_id"))
     val pbStored = BucketStore.readBuckets(spark, pbPath(root, bandBits),
       pbSchema,
       BucketStore.touchedBuckets(bands, Seq("b", "v"), NumBuckets))
-    val xPairs = bands.as("y").join(pbStored.as("x"),
-        col("x.b") === col("y.b") && col("x.v") === col("y.v") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(ham)
-      .select(col("y.doc_id").as("doc_id"))
-    val rm2 = inPairs.unionByName(xPairs).distinct()
+    val rm2 = BandLadder.pairs(bands, bands, "doc_id")
+      .unionByName(BandLadder.pairs(pbStored, bands, "doc_id"))
+      .select(col("b_id").as("doc_id")).distinct()
       .withColumn("rm_phash", lit(1L))
 
     val flagged = ex.select(col("doc_id"), col("rm_exact"))
@@ -228,7 +199,7 @@ object StreamingMediaDedup {
     val keep = col("doc_id") >= lit(horizonMinId)
     // the band store lives at the width the marker records
     val w = readLayout(spark, root).map(_._2).getOrElse(32)
-    BucketStore.evict(spark, dgPath(root), dgSchema, keep,
+    BucketStore.evict(spark, dgPath(root), StreamingCuration.fpSchema, keep,
       Seq("fp"), NumBuckets) +
       BucketStore.evict(spark, pbPath(root, w), pbSchema, keep,
         Seq("b", "v", "doc_id"), NumBuckets, bucketCols = Seq("b", "v"))

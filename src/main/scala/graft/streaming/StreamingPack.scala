@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * fixed token-budget training chunks the moment they arrive, by a
   * per-source running token offset held in keyed state
   * (`flatMapGroupsWithState` — the state-machine rung, like
-  * StreamFunnel, where StreamingDsir/StreamingProbe are the stateless
-  * rung).
+  * StreamFunnel, where a `foreachBatch` of a stateless kernel such as
+  * `dsirScore` or `probeScores` is the stateless rung).
   *
   * Semantics match the batch assignment under per-key ordered delivery
   * (docs arrive in doc_id order within a source — the keyed-partition

@@ -50,17 +50,7 @@ object UnigramTrain {
     * [[duckdbIlogCtes]] — keep in lockstep. */
   def ilog2q8(x: Long): Long = {
     require(x >= 1 && x < (1L << 54), s"ilog2q8 domain: $x")
-    val e = 63 - java.lang.Long.numberOfLeadingZeros(x)
-    var m = (x * Q8) / (1L << e) // mantissa in [256, 512)
-    var f = 0L
-    var step = 0
-    while (step < 8) {
-      m = (m * m) / Q8 // [256, 1024)
-      if (m >= 2 * Q8) { m = m / 2; f = 2 * f + 1 }
-      else f = 2 * f
-      step += 1
-    }
-    e * Q8 + f
+    graft.functions.IntLog2Q8.ilog2q8(x)
   }
 
   /** q8 log-prob scores from counts: score(p) = ilog2q8(c_p) −

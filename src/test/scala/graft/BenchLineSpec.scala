@@ -116,14 +116,18 @@ class BenchLineSpec extends AnyFunSuite {
 
   test("a prior at another scale, rep count or core count voids the diff") {
     // the committed BENCH_DETAIL.json's header shape: sf0.1, 3 reps,
-    // 32 host cores; a 4-core single-pass sf0.001 run must not diff
+    // Spark on 32 cores; a 4-core single-pass sf0.001 run must not diff
     // against it, whatever its per-query ratios say
     val committed =
       """{"metric":"total","queries":{"q_a":0.50},"sf":"testdata/sf0.1","sha":"ad5e9a4",""" +
-        """"load":{"start":0.1,"end":6.6,"host_cpus":32},"reps":3,"stat":"min"}"""
+        """"load":{"start":0.1,"end":6.6,"host_cpus":32,"cpus":32},"reps":3,"stat":"min"}"""
     assert(Bench.diffVoid(committed, "testdata/sf0.001", 1, 4) ==
-      Seq("sf", "reps", "host_cpus"))
-    assert(Bench.diffVoid(committed, "testdata/sf0.1", 3, 4) == Seq("host_cpus"))
+      Seq("sf", "reps", "cpus"))
+    assert(Bench.diffVoid(committed, "testdata/sf0.1", 3, 4) == Seq("cpus"))
+    // the same 4-core host, Spark pinned to 2 cores, against an
+    // unpinned prior: the host core count matches, the Spark cores do not
+    val unpinned = committed.replace("32", "4")
+    assert(Bench.diffVoid(unpinned, "testdata/sf0.1", 3, 2) == Seq("cpus"))
     // an identical header keeps the 1.5x rule: a 2x query is flagged
     assert(Bench.diffVoid(committed, "testdata/sf0.1", 3, 32).isEmpty)
     val q = Bench.diffGt(Bench.priorSection(committed, "queries"), Seq("q_a" -> 1.0))

@@ -96,10 +96,10 @@ class MmPhashSpec extends SparkTestBase with Matchers {
   }
 
   test("band-width ladder: exact threshold, mass bound at the seam") {
-    import graft.queries.MultimodalQueries
-    MultimodalQueries.phBandBitsFor(1L) shouldBe 16
-    MultimodalQueries.phBandBitsFor(1L << 17) shouldBe 16
-    MultimodalQueries.phBandBitsFor((1L << 17) + 1) shouldBe 32
+    import graft.functions.BandLadder
+    BandLadder.bitsFor(1L) shouldBe 16
+    BandLadder.bitsFor(1L << 17) shouldBe 16
+    BandLadder.bitsFor((1L << 17) + 1) shouldBe 32
     // at each tier's upper edge the random-collision candidate mass
     // 4·C(n,2)/2^bits stays within the 4n budget (the ladder's
     // invariant; BigInt — n² at the 32-bit tier edge exceeds a Long)

@@ -30,8 +30,9 @@ class StreamingDsirSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[DocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingDsir.start(input.toDF(), lift,
-      Files.createTempDirectory("dsir-ckpt").toString) { scored =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("dsir-ckpt").toString)(
+        graft.queries.CurationQueries.dsirScore(_, lift)) { scored =>
       collected.synchronized { collected ++= scored.collect() }
     }
     try {

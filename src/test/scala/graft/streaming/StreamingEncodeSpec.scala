@@ -32,8 +32,9 @@ class StreamingEncodeSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EncDocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingEncode.start(input.toDF(), wordTable, chosen,
-      Files.createTempDirectory("enc-ckpt").toString) { out =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("enc-ckpt").toString)(
+        TextQueries.encodeReceipts(_, wordTable, chosen)) { out =>
       collected.synchronized { collected ++= out.collect() }
     }
     try {
@@ -64,8 +65,9 @@ class StreamingEncodeSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EncDocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingEncode.start(input.toDF(), wordTable, "bpe",
-      Files.createTempDirectory("enc-oov-ckpt").toString) { out =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("enc-oov-ckpt").toString)(
+        TextQueries.encodeReceipts(_, wordTable, "bpe")) { out =>
       collected.synchronized { collected ++= out.collect() }
     }
     // "züp-9!" fails the alphabet gate; the 20-char word fails the

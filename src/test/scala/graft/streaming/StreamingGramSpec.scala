@@ -4,6 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkTestBase
+import graft.embed.Similarity
+import graft.queries.EmbedQueries
 
 /** Streaming Gram maintenance: the running (i, j, g) state after each
   * micro-batch must be BIT-equal to the batch gram_matrix over the
@@ -14,9 +16,13 @@ class StreamingGramSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  // the gram_matrix kernel over the quantized components, batch and
+  // streamed alike
+  private def gram(vecs: org.apache.spark.sql.DataFrame) =
+    EmbedQueries.gram(Similarity.quantized(vecs, "vec_id", "embedding"))
+
   private def batchGram(upTo: Long): Map[(Int, Int), Long] =
-    StreamingGram.gram(
-        graft.Tables.embeddings(spark, sf).filter($"vec_id" < upTo))
+    gram(graft.Tables.embeddings(spark, sf).filter($"vec_id" < upTo))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
 
   test("streamed gram equals the batch gram after every micro-batch; eigen step agrees") {
@@ -28,7 +34,7 @@ class StreamingGramSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Float])]
     val sink = s"gram_sink_${System.nanoTime()}"
-    val q = StreamingGram.gram(input.toDF()
+    val q = gram(input.toDF()
         .toDF("vec_id", "embedding"))
       .writeStream.outputMode(OutputMode.Complete)
       .format("memory").queryName(sink)

@@ -34,8 +34,9 @@ class StreamingPplSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PplDocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingPpl.start(input.toDF(), refBi, refUni, vsz,
-      Files.createTempDirectory("ppl-ckpt").toString) { scored =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("ppl-ckpt").toString)(
+        TextQueries.lmDocScores(_, refBi, refUni, vsz)) { scored =>
       collected.synchronized { collected ++= scored.collect() }
     }
     try {
@@ -82,10 +83,10 @@ class StreamingPplSpec extends SparkTestBase {
     }
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
     def runOnce(): Unit = {
-      val q = StreamingPpl.start(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").json(srcDir.toString),
-        refBi, refUni, vsz, ckpt) { scored =>
+      val q = foreachBatchOf(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").json(srcDir.toString), ckpt)(
+          TextQueries.lmDocScores(_, refBi, refUni, vsz)) { scored =>
         collected.synchronized { collected ++= scored.collect() }
       }
       try q.processAllAvailable() finally q.stop()
@@ -127,8 +128,9 @@ class StreamingPplSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PplDocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingPpl.start(input.toDF(), refBi, refUni, vsz,
-      Files.createTempDirectory("ppl-incr-ckpt").toString) { scored =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("ppl-incr-ckpt").toString)(
+        TextQueries.lmDocScores(_, refBi, refUni, vsz)) { scored =>
       collected.synchronized { collected ++= scored.collect() }
     }
     try {
@@ -157,8 +159,13 @@ class StreamingPplSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PplDocRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingPpl.startMink(input.toDF(), refBi, refUni, vsz,
-      Files.createTempDirectory("mink-ckpt").toString) { scored =>
+    // the Min-K% form: per micro-batch, each doc's top-20%
+    // least-likely-occurrence mean against the same fixed LM
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("mink-ckpt").toString) { batch =>
+      TextQueries.minkOf(TextQueries.lmScoreBits(
+        TextQueries.bigramCountsOf(batch), refBi, refUni, vsz))
+    } { scored =>
       collected.synchronized { collected ++= scored.collect() }
     }
     try {

@@ -29,8 +29,9 @@ class StreamingProbeSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[EmbedRow]
     val collected = scala.collection.mutable.ArrayBuffer.empty[Row]
-    val q = StreamingProbe.start(input.toDF(), w,
-      Files.createTempDirectory("probe-ckpt").toString) { scored =>
+    val q = foreachBatchOf(input.toDF(),
+        Files.createTempDirectory("probe-ckpt").toString)(
+        graft.queries.EmbedQueries.probeScores(_, w)) { scored =>
       collected.synchronized { collected ++= scored.collect() }
     }
     try {
