@@ -30,7 +30,7 @@ object GraftSession {
       // (Tables.events) — Spark has no nanosecond timestamp type.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Generated-class cache (static conf, default 100 entries): this
-      // library registers 131 distinct query plans — far more codegen
+      // library registers 190 distinct query plans — far more codegen
       // fragments than the default LRU holds, so cycling through the
       // registry (Verify, the interleaved Bench passes, any multi-query
       // pipeline) recompiles every fragment on every pass (~100-300 ms

@@ -574,35 +574,35 @@ object SharedStages {
   def probe(s: SparkSession, dir: String): graft.embed.ProbeTrain.Probe =
     stage(s, dir, "probe")(graft.queries.EmbedQueries.trainProbe(s, dir))
 
-  /** The iterated BPE vocabulary ([[graft.text.BpeTrain]]) — NMerges
-    * distributed top-1 rounds, shared by the merge-table report
-    * (bpe_train) and the learned-vocabulary report (bpe_tokenize). */
+  /** The iterated BPE vocabulary ([[graft.text.BpeTrain]]) — one
+    * corpus pass collects the gated word table, then NMerges
+    * driver-side argmax rounds; shared by the merge-table report
+    * (bpe_train), the learned-vocabulary report (bpe_tokenize), the
+    * shallow unigram trainer's word table and tok_compare. */
   def bpeTrained(s: SparkSession, dir: String): graft.text.BpeTrain.Trained =
     stage(s, dir, "bpeTrained")(graft.text.BpeTrain.train(s, dir))
 
   /** The realistic-depth BPE trainer ([[graft.text.BpeDeep]]): one
     * distributed corpus pass builds the capped candidate table, then
-    * DeepMerges driver-side argmax rounds — shared by bpe_train_deep and
-    * bpe_deep_encode. */
-  def bpeDeepTrained(s: SparkSession, dir: String): graft.text.BpeDeep.DeepTrained =
+    * DeepMerges driver-side argmax rounds of the same loop — shared by
+    * bpe_train_deep and bpe_deep_encode. */
+  def bpeDeepTrained(s: SparkSession, dir: String): graft.text.BpeTrain.Trained =
     stage(s, dir, "bpeDeepTrained")(graft.text.BpeDeep.train(s, dir))
 
   /** The EM-trained unigram tokenizer ([[graft.text.UnigramTrain]]) —
-    * two segmentation passes + vocab-sized collects, shared by
-    * unigram_train and unigram_tokenize. */
+    * driver-side over the words of [[bpeTrained]]'s final table (no
+    * corpus pass of its own), shared by unigram_train,
+    * unigram_tokenize, tok_compare and encode_shards. */
   def unigramTrained(s: SparkSession, dir: String): graft.text.UnigramTrain.Trained =
     stage(s, dir, "unigramTrained")(graft.text.UnigramTrain.train(s, dir))
 
   /** The depth-matched EM-trained unigram tokenizer
-    * ([[graft.text.UnigramDeep]]) — driver-side over the SAME capped
-    * chunk table [[bpeDeepTrained]] built (recovered from its
-    * finalWords, so the corpus pass is paid once), shared by
+    * ([[graft.text.UnigramDeep]]) — the same EM loop driver-side over
+    * the capped chunk table [[bpeDeepTrained]] built (recovered from
+    * its finalWords, so the corpus pass is paid once), shared by
     * unigram_train_deep / unigram_deep_encode / tok_deep_gate. */
-  def unigramDeepTrained(s: SparkSession, dir: String): graft.text.UnigramDeep.DeepTrained =
-    stage(s, dir, "unigramDeepTrained") {
-      graft.text.UnigramDeep.trainFromChunks(
-        graft.text.UnigramDeep.chunksFrom(bpeDeepTrained(s, dir)))
-    }
+  def unigramDeepTrained(s: SparkSession, dir: String): graft.text.UnigramTrain.Trained =
+    stage(s, dir, "unigramDeepTrained")(graft.text.UnigramDeep.train(s, dir))
 
   // ------------------------------------------------- on-disk scratch
   // Per-JVM scratch root for query-internal stores (the BucketStore

@@ -33,11 +33,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         AbttResidual(exprs.head, exprs(1), exprs(2))))
     ext.injectFunction((
-      new FunctionIdentifier("unigram_segment"),
-      new ExpressionInfo(classOf[UnigramSegment].getName, "unigram_segment"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        UnigramSegment(exprs.head, exprs(1), exprs(2))))
-    ext.injectFunction((
       new FunctionIdentifier("ilog2q8"),
       new ExpressionInfo(classOf[IntLog2Q8].getName, "ilog2q8"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>

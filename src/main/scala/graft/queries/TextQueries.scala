@@ -389,8 +389,8 @@ object TextQueries {
   // -------------------------------------------- bpe_train, bpe_tokenize
   // The iterated-BPE completion of the tokenizer family:
   // [[graft.text.BpeTrain]] learns NMerges merges over the
-  // distinct-word frequency table (one distributed pair-count + top-1
-  // per round, one row to the driver per round), then tokenizes the
+  // distinct-word frequency table (one corpus pass collects the table,
+  // the merge rounds run driver-side over it), then tokenizes the
   // corpus with the learned merges. bpe_train reports the learned
   // merge table (rank, pair, corpus count); bpe_tokenize the top-k
   // vocabulary under the learned segmentation. The oracle replays the
@@ -411,8 +411,11 @@ object TextQueries {
     s"WITH $ctes\n$sel"
   }
 
-  private def bpeTokenize(s: SparkSession, d: String): DataFrame =
+  private def bpeTokenize(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
     graft.text.BpeTrain.vocab(graft.SharedStages.bpeTrained(s, d))
+      .toDF("symbol", "n")
+  }
 
   private def bpeTokenizeSql = {
     val bt = graft.text.BpeTrain
@@ -426,8 +429,9 @@ object TextQueries {
   // ------------------------------------ unigram_train, unigram_tokenize
   // SentencePiece-style unigram-LM tokenizer training (Kudo 2018) —
   // the industry-standard BPE twin ([[graft.text.UnigramTrain]]): seed
-  // vocabulary from frequent substrings, hard-EM under native-codegen
-  // Viterbi segmentation, prune, re-estimate. Scores are exact q8
+  // vocabulary from frequent substrings, hard-EM under Viterbi
+  // segmentation, prune, re-estimate — driver-side over the words of
+  // the BPE trainer's gated table. Scores are exact q8
   // fixed-point log2 integers; the oracle replays the seed counts,
   // both ilog2 ladders, both unrolled DPs and the prune CTE-for-CTE.
   private def unigramTrain(s: SparkSession, d: String): DataFrame = {
@@ -446,7 +450,7 @@ object TextQueries {
   // the "is the tokenizer efficient where the mass is" report (≤ 16
   // rows at any corpus size)
   private def unigramTokenize(s: SparkSession, d: String): DataFrame =
-    graft.SharedStages.unigramTrained(s, d).segmented
+    uniSegmented(s, d)
       .withColumn("np", size(col("pieces")).cast("long"))
       .groupBy(length(col("word")).cast("long").as("wlen"))
       .agg(count(lit(1)).as("n_words"),
@@ -454,6 +458,23 @@ object TextQueries {
         sum(col("freq") * col("np")).as("total_pieces"))
       .withColumn("fertility",
         col("total_pieces").cast("double") / col("total_freq").cast("double"))
+
+  /** A trained segmentation (word, freq, pieces) as a DataFrame. */
+  private def segmentedDF(s: SparkSession,
+      rows: Seq[(String, Long, Seq[String])]): DataFrame = {
+    import s.implicits._
+    rows.toDF("word", "freq", "pieces")
+  }
+
+  /** BPE's learned segmentation of the common gated word set — the
+    * words ≤ MaxWordLen the unigram trainer trains on. */
+  private def bpeSegmented(s: SparkSession, d: String): DataFrame =
+    segmentedDF(s, graft.text.BpeTrain.segmented(graft.SharedStages.bpeTrained(s, d))
+      .filter(_._1.length <= graft.text.UnigramTrain.MaxWordLen))
+
+  /** The unigram trainer's final-pass segmentation of the same words. */
+  private def uniSegmented(s: SparkSession, d: String): DataFrame =
+    segmentedDF(s, graft.SharedStages.unigramTrained(s, d).segmented)
 
   private def unigramTokenizeSql =
     s"""WITH ${graft.text.UnigramTrain.duckdbTrainCtes(tokensSql("text"))}
@@ -468,24 +489,18 @@ object TextQueries {
   // under BOTH learned tokenizers on the COMMON gated word multiset
   // (alphabet + length ≤ MaxWordLen) — the report that decides which
   // trainer ships. Both sides come from the session-shared trained
-  // states; the per-wlen freq columns double as a cross-check (the two
-  // training pipelines count the same words independently, so
-  // bpe_freq = uni_freq per row). ≤ MaxWordLen output rows.
+  // states; the per-wlen freq columns double as a cross-check (the
+  // unigram trainer trains on the BPE table's words ≤ MaxWordLen, and
+  // the oracle counts both sides independently, so bpe_freq = uni_freq
+  // per row). ≤ MaxWordLen output rows.
   private def tokCompare(s: SparkSession, d: String): DataFrame = {
-    val S = graft.text.BpeTrain.Sep
-    val bpe = graft.SharedStages.bpeTrained(s, d).finalWords
-      .withColumn("word", translate(col("sym"), S, ""))
-      .filter(length(col("word")) <= graft.text.UnigramTrain.MaxWordLen)
-      .withColumn("np",
-        size(expr(s"filter(split(sym, '$S'), x -> x <> '')")).cast("long"))
-      .groupBy(length(col("word")).cast("long").as("wlen"))
-      .agg(sum(col("freq") * col("np")).as("bpe_pieces"),
-        sum(col("freq")).as("bpe_freq"))
-    val uni = graft.SharedStages.unigramTrained(s, d).segmented
-      .withColumn("np", size(col("pieces")).cast("long"))
-      .groupBy(length(col("word")).cast("long").as("wlen"))
-      .agg(sum(col("freq") * col("np")).as("uni_pieces"),
-        sum(col("freq")).as("uni_freq"))
+    def byLen(seg: DataFrame, pfx: String) =
+      seg.withColumn("np", size(col("pieces")).cast("long"))
+        .groupBy(length(col("word")).cast("long").as("wlen"))
+        .agg(sum(col("freq") * col("np")).as(s"${pfx}_pieces"),
+          sum(col("freq")).as(s"${pfx}_freq"))
+    val bpe = byLen(bpeSegmented(s, d), "bpe")
+    val uni = byLen(uniSegmented(s, d), "uni")
     bpe.join(uni, "wlen")
       .withColumn("bpe_fertility",
         col("bpe_pieces").cast("double") / col("bpe_freq").cast("double"))
@@ -607,16 +622,6 @@ object TextQueries {
     * streaming twin, a `foreachBatch` of [[encodeReceipts]]) encodes
     * against. Vocab-sized. */
   private[graft] def encodeWordTable(s: SparkSession, d: String): DataFrame = {
-    val S = graft.text.BpeTrain.Sep
-    val maxLen = graft.text.UnigramTrain.MaxWordLen
-    val bpeWords = graft.SharedStages.bpeTrained(s, d).finalWords
-      .withColumn("word", translate(col("sym"), S, ""))
-      .filter(length(col("word")) <= maxLen)
-      .withColumn("pieces", expr(s"filter(split(sym, '$S'), x -> x <> '')"))
-      .select(col("word"), col("freq"), col("pieces"))
-    val uniWords = graft.SharedStages.unigramTrained(s, d).segmented
-      .select(col("word"), col("freq"), col("pieces"))
-
     // (word, <pfx>_ids: comma-joined piece ids in order, <pfx>_np)
     def wordIds(words: DataFrame, pfx: String): DataFrame = {
       val occ = words.select(col("word"), col("freq"),
@@ -637,7 +642,8 @@ object TextQueries {
             ",").as(s"${pfx}_ids"),
           count(lit(1)).as(s"${pfx}_np"))
     }
-    wordIds(bpeWords, "bpe").join(wordIds(uniWords, "uni"), "word")
+    wordIds(bpeSegmented(s, d), "bpe")
+      .join(wordIds(uniSegmented(s, d), "uni"), "word")
   }
 
   /** Per-doc encoded receipt of `docs` (doc_id, text) against a FIXED

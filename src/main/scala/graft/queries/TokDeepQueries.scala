@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.text.{BpeDeep, UnigramDeep}
+import graft.text.{BpeDeep, BpeTrain, UnigramDeep}
 import graft.text.TextFunctions.{portableHashSql, tokensSql}
 
 /** Deep-tokenizer gates (SURVEY tokenizer family, realistic depth):
@@ -37,35 +37,10 @@ object TokDeepQueries {
     s"""WITH ${BpeDeep.duckdbDeepCtes(tokensSql("text"))}
        |SELECT merge_rank, a, b, pair_count FROM ${BpeDeep.duckdbMergeTree()}""".stripMargin
 
-  private def bpeDeepEncode(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val t = graft.SharedStages.bpeDeepTrained(s, d)
-    // vocab-sized post-processing of the trained state (≤ CapWords
-    // rows) — the corpus-scale pass already happened in cappedWords
-    val words = t.finalWords.map { case (sym, f) =>
-      (sym.replace(BpeDeep.Sep, ""),
-        sym.split(BpeDeep.Sep).filter(_.nonEmpty).toSeq, f)
-    }
-    val vocab = scala.collection.mutable.HashMap.empty[String, Long]
-    words.foreach { case (_, ps, f) =>
-      ps.foreach(p => vocab.update(p, vocab.getOrElse(p, 0L) + f))
-    }
-    val ids = vocab.toSeq.sortBy { case (p, n) => (-n, p) }.zipWithIndex
-      .map { case ((p, _), i) => p -> (i + 1).toLong }.toMap
-    def ph(str: String): Long = java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(str.getBytes("UTF-8"))
-        .map(b => f"$b%02x").mkString.substring(0, 15), 16)
-    val checksum = words.map { case (w, ps, _) =>
-      ph(w + ":" + ps.map(ids).mkString(",")) % 1000000007L
-    }.sum
-    val totalPieces = words.map { case (_, ps, f) => ps.length.toLong * f }.sum
-    val totalFreq = words.map(_._3).sum
-    Seq((words.size.toLong, vocab.size.toLong, totalFreq, totalPieces,
-        totalPieces.toDouble / totalFreq.toDouble, checksum))
-      .toDF("n_words", "vocab_size", "total_freq", "total_pieces",
-        "fertility", "ids_checksum")
-  }
+  // vocab-sized post-processing of the trained state (≤ CapWords
+  // rows) — the corpus-scale pass already happened in cappedWords
+  private def bpeDeepEncode(s: SparkSession, d: String): DataFrame =
+    encodeReceipt(s, BpeTrain.segmented(graft.SharedStages.bpeDeepTrained(s, d)))
 
   private val bpeDeepEncodeSql =
     s"""WITH ${BpeDeep.duckdbDeepCtes(tokensSql("text"))},
@@ -226,33 +201,38 @@ object TokDeepQueries {
       .digest(str.getBytes("UTF-8"))
       .map(b => f"$b%02x").mkString.substring(0, 15), 16)
 
+  /** The encode receipt of a trained segmentation (word, freq, pieces):
+    * piece ids by (corpus count DESC, piece), one portable checksum
+    * over every word's id sequence, and the corpus totals — one row. */
+  private def encodeReceipt(s: SparkSession,
+      words: Seq[(String, Long, Seq[String])]): DataFrame = {
+    import s.implicits._
+    val vocab = scala.collection.mutable.HashMap.empty[String, Long]
+    words.foreach { case (_, f, ps) =>
+      ps.foreach(p => vocab.update(p, vocab.getOrElse(p, 0L) + f))
+    }
+    val ids = vocab.toSeq.sortBy { case (p, n) => (-n, p) }.zipWithIndex
+      .map { case ((p, _), i) => p -> (i + 1).toLong }.toMap
+    val checksum = words.iterator.map { case (w, _, ps) =>
+      ph(w + ":" + ps.map(ids).mkString(",")) % 1000000007L
+    }.sum
+    val totalPieces = words.iterator
+      .map { case (_, f, ps) => ps.length.toLong * f }.sum
+    val totalFreq = words.iterator.map(_._2).sum
+    Seq((words.size.toLong, vocab.size.toLong, totalFreq, totalPieces,
+        totalPieces.toDouble / totalFreq.toDouble, checksum))
+      .toDF("n_words", "vocab_size", "total_freq", "total_pieces",
+        "fertility", "ids_checksum")
+  }
+
   // --------------------------------------------- unigram_deep_encode
   // The encode receipt on the deep unigram vocabulary — the
   // bpe_deep_encode twin: deterministic piece ids (final-pass usage
   // DESC, piece), per-chunk id sequences (ordered by piece start
   // position) folded into one portable checksum. A drift in ANY
   // chunk's segmentation or ANY piece's rank desyncs the row.
-  private def unigramDeepEncode(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val t = graft.SharedStages.unigramDeepTrained(s, d)
-    // capped-table-sized post-processing (≤ CapWords chunks)
-    val vocabCnt = scala.collection.mutable.HashMap.empty[String, Long]
-    t.segmented.foreach { case (_, f, ps) =>
-      ps.foreach(p => vocabCnt.update(p, vocabCnt.getOrElse(p, 0L) + f))
-    }
-    val ids = vocabCnt.toSeq.sortBy { case (p, n) => (-n, p) }.zipWithIndex
-      .map { case ((p, _), i) => p -> (i + 1).toLong }.toMap
-    val checksum = t.segmented.iterator.map { case (w, _, ps) =>
-      ph(w + ":" + ps.map(ids).mkString(",")) % 1000000007L
-    }.sum
-    val totalPieces = t.segmented.iterator
-      .map { case (_, f, ps) => ps.length.toLong * f }.sum
-    val totalFreq = t.segmented.iterator.map(_._2).sum
-    Seq((t.nChunks, vocabCnt.size.toLong, totalFreq, totalPieces,
-        totalPieces.toDouble / totalFreq.toDouble, checksum))
-      .toDF("n_words", "vocab_size", "total_freq", "total_pieces",
-        "fertility", "ids_checksum")
-  }
+  private def unigramDeepEncode(s: SparkSession, d: String): DataFrame =
+    encodeReceipt(s, graft.SharedStages.unigramDeepTrained(s, d).segmented)
 
   private val unigramDeepEncodeSql = {
     val fin = UnigramDeep.EmRounds
@@ -290,13 +270,12 @@ object TokDeepQueries {
   // overflow a 64-bit cross-product).
   private def tokDeepGate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val Sep = BpeDeep.Sep
     val bpeT = graft.SharedStages.bpeDeepTrained(s, d)
     val uniT = graft.SharedStages.unigramDeepTrained(s, d)
     var bpeP, bpeF = 0L
-    bpeT.finalWords.foreach { case (sym, f) =>
-      if (sym.replace(Sep, "").length <= UnigramDeep.MaxChunkLen) {
-        bpeP += f * sym.split(Sep).count(_.nonEmpty)
+    BpeTrain.segmented(bpeT).foreach { case (w, f, ps) =>
+      if (w.length <= UnigramDeep.MaxChunkLen) {
+        bpeP += f * ps.length
         bpeF += f
       }
     }

@@ -299,8 +299,12 @@ object StreamingCuration {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** Read every batch's flags back as one table. */
+  /** Read every batch's flags back as one table: `outDir` itself, so
+    * the `batch` partition column partition discovery adds is dropped
+    * (a `batch=*` glob reads the same rows, but the streaming-sink
+    * metadata probe stats the glob as a literal path and logs a
+    * FileNotFoundException on every call). */
   def readFlags(spark: org.apache.spark.sql.SparkSession,
                 outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/batch=*")
+    spark.read.parquet(outDir).drop("batch")
 }

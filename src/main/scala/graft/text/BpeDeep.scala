@@ -26,25 +26,20 @@ import graft.text.TextFunctions.tokens
   *     on the top-[[CapWords]] distinct chunks by (frequency DESC,
   *     chunk) — ONE distributed corpus pass (map-side-combined count
   *     + a distributed top-k), after which every training round is
-  *     candidate-table-sized, not corpus-sized. The Spark side then
-  *     runs the [[DeepMerges]]-round argmax loop driver-side over the
-  *     capped table (the repo's bounded-collect discipline:
-  *     ≤ CapWords · chunk-len bytes, the "prune-capped vocab" class) —
-  *     at 100 TB the corpus pass scales with the data, the loop does
-  *     not scale with the data AT ALL.
+  *     candidate-table-sized, not corpus-sized. The capped table then
+  *     goes through [[BpeTrain.trainFromWords]] — the ONE merge loop,
+  *     the shallow trainer's — for [[DeepMerges]] rounds driver-side
+  *     (the repo's bounded-collect discipline: ≤ CapWords · chunk-len
+  *     bytes, the "prune-capped vocab" class): the corpus pass scales
+  *     with the data, the loop does not scale with the data AT ALL.
   *
-  * Semantics per round are IDENTICAL to [[BpeTrain]] (argmax pair by
-  * (count DESC, a, b); two literal left-to-right `replace` passes on
-  * the delimited form — Java `String.replace`, Spark `replace`, and
-  * DuckDB `replace` all share literal non-overlapping left-to-right
-  * matching, and ASCII-alnum symbols make JVM and byte-wise string
-  * ordering agree). The DuckDB oracle replays ALL [[DeepMerges]]
-  * rounds as unrolled MATERIALIZED CTEs over the same capped table —
-  * linear cost per round at a CapWords-bounded table, which is what
-  * un-bounds the round count the corpus-sized replay was stuck at
-  * (measured: ~0.1 s/round corpus-sized vs ~0.01 s/round capped).
-  * BpeDeepSpec additionally drives the trainer to 1024 merges against
-  * an independent reference implementation.
+  * The DuckDB oracle replays ALL [[DeepMerges]] rounds as unrolled
+  * MATERIALIZED CTEs over the same capped table — linear cost per
+  * round at a CapWords-bounded table, which is what un-bounds the
+  * round count the corpus-sized replay was stuck at (measured:
+  * ~0.1 s/round corpus-sized vs ~0.01 s/round capped). BpeDeepSpec
+  * additionally drives the loop to 1024 merges against an independent
+  * reference implementation.
   */
 object BpeDeep {
   val DeepMerges = 256
@@ -59,14 +54,6 @@ object BpeDeep {
   /** SentencePiece's ▁ word-start marker, spelled as an ASCII char the
     * corpus alphabet ([a-z0-9 ]) cannot collide with. */
   val Marker = "_"
-  val Sep: String = BpeTrain.Sep
-
-  final case class DeepTrained(
-      merges: Seq[(Int, String, String, Long)], // (rank, a, b, pair_count)
-      finalWords: Seq[(String, Long)], // delimited sym, freq — capped table
-      // Σ freq·pieces of the capped table after each DepthLadder rank
-      // (only ranks ≤ nMerges appear) — the depth gate's evidence.
-      depthPieces: Seq[(Int, Long)] = Nil)
 
   /** The depth gate's decision rule (`bpe_depth_gate`): smallest
     * DepthLadder rung whose piece total is within 5% of the deepest
@@ -78,10 +65,6 @@ object BpeDeep {
     DepthLadder.find(k => depthPieces(k) * 100 <= pMax * 105)
       .getOrElse(deepest)
   }
-
-  /** Delimited character-symbol form: "low" → "␟l␟o␟w␟". */
-  private[text] def delimit(word: String): String =
-    word.map(ch => s"$Sep$ch").mkString + Sep
 
   /** The capped candidate table: marker-joined [[ChunkWords]]-word
     * chunks ("_the_fast_key_order" — the SentencePiece sentence-unit
@@ -100,61 +83,10 @@ object BpeDeep {
       .orderBy(col("freq").desc, col("word"))
       .limit(CapWords)
       .collect()
-      .map(r => (delimit(r.getString(0)), r.getLong(1))).toSeq
+      .map(r => (BpeTrain.delimit(r.getString(0)), r.getLong(1))).toSeq
 
-  /** The in-memory training loop over a capped delimited word table —
-    * BpeTrain.trainFromWords semantics, vocabulary-sized per round. */
-  def trainFromWords(words0: Seq[(String, Long)],
-                     nMerges: Int): DeepTrained = {
-    var words = words0.toArray
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    val depthPieces = Seq.newBuilder[(Int, Long)]
-    def totalPieces: Long = {
-      var s = 0L
-      var i = 0
-      while (i < words.length) {
-        s += words(i)._2 * words(i)._1.split(Sep).count(_.nonEmpty)
-        i += 1
-      }
-      s
-    }
-    for (rank <- 1 to nMerges) {
-      val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
-      var i = 0
-      while (i < words.length) {
-        val parts = words(i)._1.split(Sep).filter(_.nonEmpty)
-        val freq = words(i)._2
-        var j = 0
-        while (j < parts.length - 1) {
-          val k = (parts(j), parts(j + 1))
-          cnt.update(k, cnt.getOrElse(k, 0L) + freq)
-          j += 1
-        }
-        i += 1
-      }
-      require(cnt.nonEmpty,
-        s"deep BPE pair table dried up at rank $rank — corpus too small for $nMerges merges")
-      var bk: (String, String) = null
-      var bc = Long.MinValue
-      cnt.foreach { case (k, c) =>
-        if (bk == null || c > bc ||
-          (c == bc && (k._1 < bk._1 || (k._1 == bk._1 && k._2 < bk._2)))) {
-          bk = k; bc = c
-        }
-      }
-      merges += ((rank, bk._1, bk._2, bc))
-      val pat = s"$Sep${bk._1}$Sep${bk._2}$Sep"
-      val rep = s"$Sep${bk._1}${bk._2}$Sep"
-      words = words.map { case (sym, f) =>
-        (sym.replace(pat, rep).replace(pat, rep), f)
-      }
-      if (DepthLadder.contains(rank)) depthPieces += ((rank, totalPieces))
-    }
-    DeepTrained(merges.result(), words.toSeq, depthPieces.result())
-  }
-
-  def train(s: SparkSession, d: String): DeepTrained =
-    trainFromWords(cappedWords(s, d), DeepMerges)
+  def train(s: SparkSession, d: String): BpeTrain.Trained =
+    BpeTrain.trainFromWords(cappedWords(s, d), DeepMerges, DepthLadder)
 
   // ------------------------------------------------------------ oracle
 

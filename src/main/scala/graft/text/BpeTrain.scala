@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.text.TextFunctions.tokens
@@ -17,27 +17,27 @@ import graft.text.TextFunctions.tokens
   * pair (ties: lexicographically smallest), and rewrites every
   * non-overlapping occurrence into the merged symbol.
   *
-  * Scale shapes, in order of importance at 100 TB:
-  *   - Training runs on the DISTINCT-word frequency table, not the
-  *     token stream — the classic BPE trick: pair-counting volume is
-  *     Σ|distinct words|, independent of corpus repetition.
-  *   - Each round is one map-side-combining aggregation plus a top-1
-  *     (TakeOrderedAndProject); only ONE row crosses to the driver per
-  *     round. The merge rewrite is a map-only string `replace`.
-  *   - The word table's lineage is cut every [[CheckpointEvery]]
-  *     rounds (localCheckpoint) so the replay plan stays shallow.
+  * Shape: training runs on the DISTINCT-word frequency table, not the
+  * token stream — the classic BPE trick: pair-counting volume is
+  * Σ|distinct words|, independent of corpus repetition. One
+  * distributed pass builds the table and one collect brings it to the
+  * driver (31 rows at sf0.001–sf0.1); [[trainFromWords]] is the ONE
+  * merge loop, shared with [[BpeDeep]], which runs it over its capped
+  * chunk table at depth.
   *
   * Determinism/oracle discipline: the merge rewrite is TWO passes of
-  * literal left-to-right `replace` on the delimited form — both
-  * engines' `replace` is non-overlapping left-to-right, and two passes
-  * make the matching inclusion-maximal (a single pass misses every
-  * second occurrence in a chain because adjacent matches share the
-  * delimiter). On runs of self-pairs (`aaaa…`) this picks a
-  * different — still maximal, still deterministic — matching than
-  * textbook greedy-left; documented rather than hidden. The DuckDB
-  * oracle replays every round as unrolled MATERIALIZED CTEs (the
-  * IvfTrain discipline), so the learned merges are hash-gated, not
-  * trusted.
+  * literal left-to-right `replace` on the delimited form — Java
+  * `String.replace` and DuckDB `replace` are both non-overlapping
+  * left-to-right, and two passes make the matching inclusion-maximal
+  * (a single pass misses every second occurrence in a chain because
+  * adjacent matches share the delimiter). On runs of self-pairs
+  * (`aaaa…`) this picks a different — still maximal, still
+  * deterministic — matching than textbook greedy-left; documented
+  * rather than hidden. ASCII-alnum symbols make JVM and byte-wise
+  * string ordering agree, so the argmax tie-break is the oracle's
+  * `ORDER BY c DESC, a, b`. The DuckDB oracle replays every round as
+  * unrolled MATERIALIZED CTEs (the IvfTrain discipline), so the
+  * learned merges are hash-gated, not trusted.
   *
   * The alphabet gate (`[A-Za-z0-9]+`) keeps symbol splitting to ASCII
   * — the standard pre-tokenizer alphabet restriction — and dodges the
@@ -46,75 +46,107 @@ import graft.text.TextFunctions.tokens
 object BpeTrain {
   val NMerges = 12
   val VocabK = 40 // bpe_tokenize: top-k learned-vocabulary report
-  val CheckpointEvery = 4
   /** Symbol delimiter: U+001F (unit separator) — cannot appear in the
     * alphabet-gated words. */
   val Sep = "\u001f"
 
   final case class Trained(
       merges: Seq[(Int, String, String, Long)], // (rank, a, b, pair_count)
-      finalWords: DataFrame) // (sym, freq) after all merges
+      finalWords: Seq[(String, Long)], // (sym, freq) after all merges
+      // Σ freq·pieces of the table after each ladder rank ≤ nMerges —
+      // the depth gate's evidence (empty for an empty ladder)
+      depthPieces: Seq[(Int, Long)])
 
-  /** The alphabet-gated distinct-word frequency table with each word
-    * in its delimited character-symbol form ("low" → "␟l␟o␟w␟"). */
-  private[graft] def wordTable(s: SparkSession, d: String): DataFrame =
+  /** Delimited character-symbol form: "low" → "␟l␟o␟w␟". */
+  private[text] def delimit(word: String): String =
+    word.map(ch => s"$Sep$ch").mkString + Sep
+
+  /** The alphabet-gated distinct-word frequency table, each word in its
+    * delimited form — one distributed pass, one collect. */
+  private[graft] def wordTable(s: SparkSession, d: String): Seq[(String, Long)] =
     graft.Tables.parallelize(graft.Tables.documents(s, d))
       .select(explode(tokens(col("text"))).as("word"))
       .filter(col("word").rlike("^[A-Za-z0-9]+$"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      .withColumn("sym",
-        concat(regexp_replace(col("word"), "(.)", Sep + "$1"), lit(Sep)))
-      .select(col("sym"), col("freq"))
+      .collect()
+      .map(r => (delimit(r.getString(0)), r.getLong(1))).toSeq
+      .sorted
 
-  /** Adjacent-symbol pair counts of a delimited word table. */
-  private def pairCounts(wf: DataFrame): DataFrame =
-    wf.withColumn("s", expr(s"filter(split(sym, '$Sep'), x -> x <> '')"))
-      .filter(size(col("s")) >= 2)
-      .select(col("freq"), explode(expr(
-        "transform(sequence(0, size(s) - 2), i -> struct(s[i] AS a, s[i + 1] AS b))"))
-        .as("p"))
-      .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-      .agg(sum(col("freq")).as("c"))
-
-  /** Learn [[NMerges]] merges. One distributed top-1 job per round;
-    * the rewritten word table stays distributed throughout. */
+  /** Learn [[NMerges]] merges over the gated word table. */
   def train(s: SparkSession, d: String): Trained =
-    trainFromWords(wordTable(s, d), NMerges)
+    trainFromWords(wordTable(s, d), NMerges, Nil)
 
-  /** Training core over any delimited word table (sym, freq) —
-    * the seam BpeTrainSpec drives with hand-built fixtures. */
-  private[graft] def trainFromWords(wf0: DataFrame, nMerges: Int): Trained = {
-    var wf = wf0
+  /** The BPE merge loop over a delimited word table (sym, freq):
+    * `nMerges` argmax rounds, each a pair count over the table, the
+    * (count DESC, a, b) argmax, and the two-pass rewrite. `ladder`
+    * names the ranks whose piece totals are recorded. */
+  def trainFromWords(words0: Seq[(String, Long)], nMerges: Int,
+                     ladder: Seq[Int]): Trained = {
+    var words = words0.toArray
     val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (rank <- 1 to nMerges) {
-      val top = pairCounts(wf)
-        .orderBy(col("c").desc, col("a"), col("b"))
-        .limit(1).collect()
-      require(top.nonEmpty,
-        s"BPE pair table dried up at rank $rank — corpus too small for $nMerges merges")
-      val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-      merges += ((rank, a, b, c))
-      // two literal passes = inclusion-maximal non-overlapping rewrite
-      // (alphabet-gated symbols are SQL-literal-safe: [A-Za-z0-9] only)
-      val pat = s"$Sep$a$Sep$b$Sep"
-      val rep = s"$Sep$a$b$Sep"
-      wf = wf.withColumn("sym",
-        expr(s"replace(replace(sym, '$pat', '$rep'), '$pat', '$rep')"))
-      if (rank % CheckpointEvery == 0 && rank < nMerges)
-        wf = wf.localCheckpoint()
+    val depthPieces = Seq.newBuilder[(Int, Long)]
+    def totalPieces: Long = {
+      var s = 0L
+      var i = 0
+      while (i < words.length) {
+        s += words(i)._2 * words(i)._1.split(Sep).count(_.nonEmpty)
+        i += 1
+      }
+      s
     }
-    Trained(merges.result(), wf.localCheckpoint())
+    for (rank <- 1 to nMerges) {
+      val cnt = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      var i = 0
+      while (i < words.length) {
+        val parts = words(i)._1.split(Sep).filter(_.nonEmpty)
+        val freq = words(i)._2
+        var j = 0
+        while (j < parts.length - 1) {
+          val k = (parts(j), parts(j + 1))
+          cnt.update(k, cnt.getOrElse(k, 0L) + freq)
+          j += 1
+        }
+        i += 1
+      }
+      require(cnt.nonEmpty,
+        s"BPE pair table dried up at rank $rank — corpus too small for $nMerges merges")
+      var bk: (String, String) = null
+      var bc = Long.MinValue
+      cnt.foreach { case (k, c) =>
+        if (bk == null || c > bc ||
+          (c == bc && (k._1 < bk._1 || (k._1 == bk._1 && k._2 < bk._2)))) {
+          bk = k; bc = c
+        }
+      }
+      merges += ((rank, bk._1, bk._2, bc))
+      // two literal passes = inclusion-maximal non-overlapping rewrite
+      val pat = s"$Sep${bk._1}$Sep${bk._2}$Sep"
+      val rep = s"$Sep${bk._1}${bk._2}$Sep"
+      words = words.map { case (sym, f) =>
+        (sym.replace(pat, rep).replace(pat, rep), f)
+      }
+      if (ladder.contains(rank)) depthPieces += ((rank, totalPieces))
+    }
+    Trained(merges.result(), words.toSeq, depthPieces.result())
   }
 
+  /** The finished table as (word, freq, pieces) — the learned
+    * segmentation of every training word. */
+  def segmented(t: Trained): Seq[(String, Long, Seq[String])] =
+    t.finalWords.map { case (sym, f) =>
+      (sym.replace(Sep, ""), f, sym.split(Sep).filter(_.nonEmpty).toSeq)
+    }
+
   /** Corpus token frequencies under the learned segmentation: the
-    * learned-vocabulary head (symbol, weighted count), top [[VocabK]]. */
-  def vocab(t: Trained): DataFrame =
-    t.finalWords
-      .select(col("freq"), explode(
-        expr(s"filter(split(sym, '$Sep'), x -> x <> '')")).as("symbol"))
-      .groupBy(col("symbol")).agg(sum(col("freq")).as("n"))
-      .orderBy(col("n").desc, col("symbol"))
-      .limit(VocabK)
+    * learned-vocabulary head (symbol, weighted count), top [[VocabK]]
+    * by (count DESC, symbol). */
+  def vocab(t: Trained): Seq[(String, Long)] = {
+    val n = scala.collection.mutable.HashMap.empty[String, Long]
+    segmented(t).foreach { case (_, f, ps) =>
+      ps.foreach(p => n.update(p, n.getOrElse(p, 0L) + f))
+    }
+    n.toSeq.sortBy { case (p, c) => (-c, p) }.take(VocabK)
+  }
 
   // ------------------------------------------------------------ oracle
 

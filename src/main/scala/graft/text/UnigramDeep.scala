@@ -24,9 +24,9 @@ import org.apache.spark.sql.SparkSession
   *     bounded-collect discipline: ≤ CapWords · chunk-len bytes). ONE
   *     corpus pass builds the candidate table — and it is the SAME
   *     pass BPE-deep already paid ([[graft.SharedStages.bpeDeepTrained]]
-  *     memoizes it; the chunk table here is recovered by stripping the
-  *     delimiters from its `finalWords`, so the two trainers are
-  *     guaranteed the identical candidate set). At 100 TB the corpus
+  *     memoizes it; [[UnigramTrain.wordsFrom]] recovers the chunk table
+  *     by stripping the delimiters from its `finalWords`, so the two
+  *     trainers are guaranteed the identical candidate set). The corpus
   *     pass scales with the data; the EM loop does not scale with the
   *     data AT ALL.
   *
@@ -38,13 +38,10 @@ import org.apache.spark.sql.SparkSession
   * pass (SentencePiece prunes to its final vocab the same
   * measure-then-cut way).
   *
-  * Segmentation semantics are BIT-IDENTICAL to the shallow trainer's:
-  * every Viterbi pass calls the SAME
-  * [[graft.functions.UnigramSegment.segment]] kernel the native
-  * codegen expression runs (exact q8 integer scores from
-  * [[UnigramTrain.ilog2q8]], ties toward the smallest split point),
-  * and the DuckDB oracle replays every pass with the SAME parametrized
-  * CTE generators ([[UnigramTrain.duckdbScoreCtes]] /
+  * The training is [[UnigramTrain.trainFromWords]] — the ONE hard-EM
+  * loop and Viterbi kernel, the shallow trainer's, called with the
+  * deep constants — and the DuckDB oracle replays every pass with the
+  * SAME parametrized CTE generators ([[UnigramTrain.duckdbScoreCtes]] /
   * [[UnigramTrain.duckdbDpCtes]], prefix `ud`) the shallow oracle
   * certifies — one spelling of the DP on each engine, at both depths.
   */
@@ -67,85 +64,10 @@ object UnigramDeep {
     * (prune after) → passes 2..3 re-estimate → pass 4 final. */
   val EmRounds = 4
 
-  final case class DeepTrained(
-      vocab: Seq[(String, Long, Long)], // (piece, final usage, score_q8)
-      segmented: Seq[(String, Long, Seq[String])], // (chunk, freq, pieces)
-      nChunks: Long)
-
-  /** The deep training units: [[BpeDeep]]'s capped chunk table with
-    * the delimiters stripped, gated to [[MaxChunkLen]]. */
-  def chunksFrom(bpe: BpeDeep.DeepTrained): Seq[(String, Long)] =
-    bpe.finalWords.iterator
-      .map { case (sym, f) => (sym.replace(BpeDeep.Sep, ""), f) }
-      .filter(_._1.length <= MaxChunkLen)
-      .toSeq
-
-  private def toJavaMap(sc: collection.Map[String, Long])
-      : java.util.HashMap[String, java.lang.Long] = {
-    val m = new java.util.HashMap[String, java.lang.Long](sc.size * 2)
-    sc.foreach { case (p, v) => m.put(p, java.lang.Long.valueOf(v)) }
-    m
-  }
-
-  /** One Viterbi segmentation through the SAME kernel the native
-    * expression runs — the lockstep guarantee. */
-  private def segmentWith(word: String,
-      vocab: java.util.HashMap[String, java.lang.Long]): Seq[String] = {
-    val ad = graft.functions.UnigramSegment.segment(word, vocab, MaxPieceLenDeep)
-    (0 until ad.numElements()).map(i => ad.getUTF8String(i).toString)
-  }
-
-  /** Driver-side hard-EM over a capped chunk table. Mirrored CTE-for-
-    * pass by [[duckdbDeepCtes]] — keep in lockstep. */
-  def trainFromChunks(chunks: Seq[(String, Long)]): DeepTrained = {
-    require(chunks.nonEmpty, "deep unigram: empty capped chunk table")
-    // seed: occurrence-weighted substring counts, length 1..MaxPieceLenDeep
-    val sub = scala.collection.mutable.HashMap.empty[String, Long]
-    chunks.foreach { case (w, f) =>
-      var l = 1
-      while (l <= MaxPieceLenDeep) {
-        var i = 0
-        while (i + l <= w.length) {
-          val p = w.substring(i, i + l)
-          sub.update(p, sub.getOrElse(p, 0L) + f)
-          i += 1
-        }
-        l += 1
-      }
-    }
-    val chars = sub.iterator.filter(_._1.length == 1).toSeq.sortBy(_._1)
-    val multi = sub.iterator.filter(_._1.length >= 2).toSeq
-      .sortBy { case (p, c) => (-c, p) }.take(SeedDeep)
-    var sc: Map[String, Long] = UnigramTrain.scores(chars ++ multi)
-    var kept: Seq[String] = Nil
-    var usage: Map[String, Long] = Map.empty
-    var seg: Seq[(String, Long, Seq[String])] = Nil
-    for (pass <- 1 to EmRounds) {
-      val jm = toJavaMap(sc)
-      seg = chunks.map { case (w, f) => (w, f, segmentWith(w, jm)) }
-      val u = scala.collection.mutable.HashMap.empty[String, Long]
-      seg.foreach { case (_, f, ps) =>
-        ps.foreach(p => u.update(p, u.getOrElse(p, 0L) + f))
-      }
-      usage = u.toMap
-      if (pass == 1) {
-        // prune: every char survives (coverage); top-KeepDeep used multis
-        val keptMulti = multi.iterator.map(_._1)
-          .filter(p => usage.getOrElse(p, 0L) > 0L).toSeq
-          .sortBy(p => (-usage(p), p)).take(KeepDeep)
-        kept = chars.map(_._1) ++ keptMulti
-      }
-      // re-estimate with add-one smoothing (an absorbed piece has u = 0);
-      // after the final pass the scores feed the vocab report unchanged
-      if (pass < EmRounds)
-        sc = UnigramTrain.scores(kept.map(p => (p, usage.getOrElse(p, 0L) + 1L)))
-    }
-    val vocab = kept.sorted.map(p => (p, usage.getOrElse(p, 0L), sc(p)))
-    DeepTrained(vocab, seg, chunks.size.toLong)
-  }
-
-  def train(s: SparkSession, d: String): DeepTrained =
-    trainFromChunks(chunksFrom(graft.SharedStages.bpeDeepTrained(s, d)))
+  def train(s: SparkSession, d: String): UnigramTrain.Trained =
+    UnigramTrain.trainFromWords(
+      UnigramTrain.wordsFrom(graft.SharedStages.bpeDeepTrained(s, d), MaxChunkLen),
+      MaxPieceLenDeep, SeedDeep, KeepDeep, EmRounds)
 
   // ------------------------------------------------------------ oracle
 

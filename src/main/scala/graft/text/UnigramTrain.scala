@@ -1,9 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.text.TextFunctions.tokens
+import org.apache.spark.sql.SparkSession
 
 /** Unigram-LM tokenizer training (the SentencePiece trainer shape,
   * Kudo 2018) — the industry-standard twin of [[BpeTrain]]: seed a
@@ -17,19 +14,17 @@ import graft.text.TextFunctions.tokens
   *     score(p) = ilog2q8(count_p) − ilog2q8(Σ counts), where
   *     [[ilog2q8]] is an exact integer algorithm (msb + 8 rounds of
   *     mantissa squaring) replayed CTE-for-CTE by the oracle.
-  *   - Viterbi DP maximizes Σ score(piece) with exact 64-bit adds;
-  *     ties break toward the smallest split point. The Spark side
-  *     runs it as ONE native codegen pass per word
-  *     ([[graft.functions.UnigramSegment]], vocabulary broadcast as a
-  *     literal map); the oracle unrolls the DP over positions
-  *     1..[[MaxWordLen]] as join CTEs and hash-matches.
+  *   - Viterbi DP ([[segment]]) maximizes Σ score(piece) with exact
+  *     64-bit adds; ties break toward the smallest split point. The
+  *     oracle unrolls the DP over positions 1..[[MaxWordLen]] as join
+  *     CTEs and hash-matches.
   *
-  * Scale shapes (identical to BPE's): training runs on the DISTINCT
-  * gated word table — volume independent of corpus repetition; each
-  * EM round is one map-only segmentation pass plus one vocab-sized
-  * aggregation (≤ ~100 rows to the driver); the vocabulary itself is
-  * driver-sized by construction. At 100 TB nothing driver-side grows
-  * with the data.
+  * Shape: training runs on the words of the BPE trainer's final table
+  * ([[wordsFrom]]) — no second corpus pass, and both tokenizers of
+  * `tok_compare` count the identical word multiset. [[trainFromWords]]
+  * is the ONE hard-EM loop, shared with [[UnigramDeep]], which runs it
+  * over BPE-deep's capped chunk table with its own constants; it is
+  * driver-side and table-sized (≤ ~100 distinct pieces here).
   *
   * Gates (documented, the BpeTrain alphabet discipline): words are
   * `[A-Za-z0-9]+` with length ≤ [[MaxWordLen]] — ASCII keeps
@@ -42,6 +37,7 @@ object UnigramTrain {
   val MaxWordLen = 16
   val SeedMulti = 48 // seed multi-char candidates
   val KeepMulti = 32 // post-prune multi-char vocabulary
+  val EmRounds = 2 // Viterbi passes: seed scores → pass 1 (prune) → pass 2
   val Q8 = 256L // fixed-point scale of log2 scores
 
   /** Exact integer floor-ish log2 at q8: e·256 + f where e = msb(x)
@@ -60,69 +56,118 @@ object UnigramTrain {
     counts.iterator.map { case (p, c) => p -> (ilog2q8(c) - lt) }.toMap
   }
 
-  final case class Trained(
-      vocab: Seq[(String, Long, Long)], // (piece, final usage, score_q8)
-      segmented: DataFrame) // (word, freq, pieces) under the final scores
-
-  /** The gated distinct-word frequency table (word, freq). */
-  private[graft] def wordTable(s: SparkSession, d: String): DataFrame =
-    graft.Tables.parallelize(graft.Tables.documents(s, d))
-      .select(explode(tokens(col("text"))).as("word"))
-      .filter(col("word").rlike("^[A-Za-z0-9]+$") &&
-        length(col("word")) <= MaxWordLen)
-      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-
-  /** All substrings of length 1..[[MaxPieceLen]] with occurrence-
-    * weighted corpus counts — the seed-candidate pool. */
-  private def substrCounts(words: DataFrame): DataFrame =
-    words.select(col("freq"), explode(expr(
-        s"""flatten(transform(
-           |  filter(sequence(1, $MaxPieceLen), L -> length(word) >= L),
-           |  L -> transform(sequence(1, length(word) - L + 1),
-           |       p -> substring(word, p, L))))""".stripMargin)).as("p"))
-      .groupBy(col("p")).agg(sum(col("freq")).as("c"))
-
-  /** The literal-map segmentation column (SQL-literal-safe: pieces are
-    * alphabet-gated). Deterministic map order for a stable plan. */
-  private def segmentCol(sc: Seq[(String, Long)]) = {
-    val entries = sc.sortBy(_._1)
-      .map { case (p, v) => s"'$p', CAST($v AS BIGINT)" }.mkString(", ")
-    expr(s"unigram_segment(word, map($entries), $MaxPieceLen)")
+  /** Viterbi segmentation of `word` under `vocab` (piece → q8 score):
+    * dp[j] = max over i ∈ [j−L, j) of dp[i] + score(word[i..j)), ties
+    * broken toward the SMALLEST i (the oracle's ROW_NUMBER ... ORDER BY
+    * val DESC, bp ASC). Exact 64-bit integer adds — bit-identical
+    * across engines. Every character of a training word is in the
+    * vocabulary, so an unknown character is a CONTRACT violation and
+    * throws rather than silently diverging from the oracle's join-based
+    * DP (where the word would just drop). */
+  def segment(word: String, vocab: Map[String, Long],
+              maxPieceLen: Int): List[String] = {
+    val n = word.length
+    val NegInf = Long.MinValue / 4
+    val dp = Array.fill(n + 1)(NegInf)
+    val bp = Array.fill(n + 1)(-1)
+    dp(0) = 0L
+    var j = 1
+    while (j <= n) {
+      var best = NegInf
+      var bi = -1
+      var i = math.max(0, j - maxPieceLen)
+      while (i < j) {
+        if (dp(i) > NegInf) {
+          val sc = vocab.get(word.substring(i, j))
+          if (sc.isDefined) {
+            val v = dp(i) + sc.get
+            if (v > best) { best = v; bi = i } // strict: ties keep smallest i
+          }
+        }
+        i += 1
+      }
+      dp(j) = if (bi >= 0) best else NegInf
+      bp(j) = bi
+      j += 1
+    }
+    require(bp(n) >= 0 || n == 0,
+      s"unigram segment: no path for '$word' — a character is missing " +
+        "from the vocabulary (gate violation)")
+    var out = List.empty[String]
+    var cur = n
+    while (cur > 0) { out = word.substring(bp(cur), cur) :: out; cur = bp(cur) }
+    out
   }
 
-  /** Piece-usage counts of a segmentation pass — vocab-sized. */
-  private def usage(seg: DataFrame): Map[String, Long] =
-    seg.select(col("freq"), explode(col("pieces")).as("p"))
-      .groupBy(col("p")).agg(sum(col("freq")).as("u"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  final case class Trained(
+      vocab: Seq[(String, Long, Long)], // (piece, final usage, score_q8)
+      segmented: Seq[(String, Long, Seq[String])]) // (word, freq, pieces), final pass
 
-  def train(s: SparkSession, d: String): Trained = {
-    val words = wordTable(s, d).localCheckpoint()
-    val subs = substrCounts(words)
-    // chars: ALL single-char substrings (coverage set); multi: top-S
-    val chars = subs.filter(length(col("p")) === 1)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val multi = subs.filter(length(col("p")) >= 2)
-      .orderBy(col("c").desc, col("p")).limit(SeedMulti)
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val s0 = scores(chars ++ multi)
+  /** The training words of a BPE run: its final table with the
+    * delimiters stripped, gated to length ≤ `maxLen`. */
+  def wordsFrom(bpe: BpeTrain.Trained, maxLen: Int): Seq[(String, Long)] =
+    bpe.finalWords.iterator
+      .map { case (sym, f) => (sym.replace(BpeTrain.Sep, ""), f) }
+      .filter(_._1.length <= maxLen)
+      .toSeq
 
-    // EM round A: segment under seed scores, count piece usage
-    val u0 = usage(words.withColumn("pieces", segmentCol(s0.toSeq)))
-    // prune: every char survives (coverage), plus top-K used multis
-    val keptMulti = multi.map(_._1).filter(p => u0.getOrElse(p, 0L) > 0)
-      .sortBy(p => (-u0(p), p)).take(KeepMulti)
-    val kept = chars.map(_._1) ++ keptMulti
-    // re-estimate with add-one smoothing (an absorbed char has u = 0)
-    val s1 = scores(kept.map(p => (p, u0.getOrElse(p, 0L) + 1L)))
+  def train(s: SparkSession, d: String): Trained =
+    trainFromWords(wordsFrom(graft.SharedStages.bpeTrained(s, d), MaxWordLen),
+      MaxPieceLen, SeedMulti, KeepMulti, EmRounds)
 
-    // EM round B: final segmentation + usage under the pruned vocab
-    val seg1 = words.withColumn("pieces", segmentCol(s1.toSeq))
-      .localCheckpoint()
-    val u1 = usage(seg1)
-    val vocab = kept.sorted
-      .map(p => (p, u1.getOrElse(p, 0L), s1(p)))
-    Trained(vocab, seg1)
+  /** The hard-EM loop over a word table (word, freq): seed from the
+    * occurrence-weighted substrings of length 1..`maxPieceLen` (every
+    * char plus the top `seedMulti` multi-char ones by (count DESC, p)),
+    * then `emRounds` Viterbi passes; after pass 1 the vocabulary is
+    * pruned to the chars plus the top `keepMulti` used multis, and
+    * after every pass but the last the scores are re-estimated from
+    * usage + 1. Mirrored CTE-for-pass by [[duckdbTrainCtes]] and
+    * [[UnigramDeep.duckdbChainCtes]] — keep in lockstep. */
+  def trainFromWords(words: Seq[(String, Long)], maxPieceLen: Int,
+                     seedMulti: Int, keepMulti: Int,
+                     emRounds: Int): Trained = {
+    require(words.nonEmpty, "unigram: empty word table")
+    val sub = scala.collection.mutable.HashMap.empty[String, Long]
+    words.foreach { case (w, f) =>
+      var l = 1
+      while (l <= maxPieceLen) {
+        var i = 0
+        while (i + l <= w.length) {
+          val p = w.substring(i, i + l)
+          sub.update(p, sub.getOrElse(p, 0L) + f)
+          i += 1
+        }
+        l += 1
+      }
+    }
+    val chars = sub.iterator.filter(_._1.length == 1).toSeq.sortBy(_._1)
+    val multi = sub.iterator.filter(_._1.length >= 2).toSeq
+      .sortBy { case (p, c) => (-c, p) }.take(seedMulti)
+    var sc: Map[String, Long] = scores(chars ++ multi)
+    var kept: Seq[String] = Nil
+    var usage: Map[String, Long] = Map.empty
+    var seg: Seq[(String, Long, Seq[String])] = Nil
+    for (pass <- 1 to emRounds) {
+      seg = words.map { case (w, f) => (w, f, segment(w, sc, maxPieceLen)) }
+      val u = scala.collection.mutable.HashMap.empty[String, Long]
+      seg.foreach { case (_, f, ps) =>
+        ps.foreach(p => u.update(p, u.getOrElse(p, 0L) + f))
+      }
+      usage = u.toMap
+      if (pass == 1) {
+        // prune: every char survives (coverage); top-keepMulti used multis
+        val keptMulti = multi.iterator.map(_._1)
+          .filter(p => usage.getOrElse(p, 0L) > 0L).toSeq
+          .sortBy(p => (-usage(p), p)).take(keepMulti)
+        kept = chars.map(_._1) ++ keptMulti
+      }
+      // re-estimate with add-one smoothing (an absorbed piece has u = 0);
+      // after the final pass the scores feed the vocab report unchanged
+      if (pass < emRounds)
+        sc = scores(kept.map(p => (p, usage.getOrElse(p, 0L) + 1L)))
+    }
+    val vocab = kept.sorted.map(p => (p, usage.getOrElse(p, 0L), sc(p)))
+    Trained(vocab, seg)
   }
 
   // ------------------------------------------------------------ oracle
@@ -190,7 +235,7 @@ object UnigramTrain {
     * `${pfx}pc$r(word, freq, piece, bp)` (bp = piece start — the
     * deep encode receipt orders ids by it). Position j's candidates
     * join the accumulated dp table on split point bp ∈ [j−L, j); best
-    * split by ROW_NUMBER (val DESC, bp ASC) — the expression's
+    * split by ROW_NUMBER (val DESC, bp ASC) — [[segment]]'s
     * tie-break. `src(word, freq)` is the word table; `maxLen` bounds
     * the unroll (= the table's gated max word length). */
   private[text] def duckdbDpCtes(r: Int, pfx: String = "ug",
@@ -208,7 +253,7 @@ object UnigramTrain {
     // BPE-deep replay. The accumulated table carries each position's
     // winning (bp, pc) so the backtrace joins it directly (no separate
     // winners union). Semantics unchanged: best split by
-    // (val DESC, bp ASC) — the expression's tie-break.
+    // (val DESC, bp ASC) — `segment`'s tie-break.
     val sb = new StringBuilder
     sb.append(
       s"""${pfx}dp${r}a0 AS MATERIALIZED (

@@ -2,6 +2,9 @@ package graft
 
 /** Mirrors the driver's smoke check: entry() on sf0.001 yields rows. */
 class EntrySpec extends SparkTestBase {
+  /** md5 of the name-sorted oracle SQL map (see the registry case). */
+  private val OracleSqlMd5 = "46d6bd6b9eae1fffd509232dea27553a"
+
   test("entry: flagship violation derivation returns rows at sf0.001") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)
@@ -23,5 +26,16 @@ class EntrySpec extends SparkTestBase {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     val unoracled = names.toSet -- SparkEntry.oracleSql.keySet
     assert(unoracled.isEmpty, s"queries without an oracle: $unoracled")
+    // The oracle SQL text is pinned: md5 of the name-sorted map in
+    // Verify's JSON escaping. A refactor that drifts an oracle builder
+    // fails here; an intended oracle change updates the constant in the
+    // same commit and says why in CHANGES.md.
+    val json = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }
+      .mkString("{", ",", "}")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+    assert(md5 == OracleSqlMd5, s"oracle SQL text changed: md5 $md5")
   }
 }

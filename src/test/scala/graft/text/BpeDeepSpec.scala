@@ -4,18 +4,16 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.SparkTestBase
 
-/** Deep BPE training ([[BpeDeep]]): the driver-side loop must agree
-  * with the distributed [[BpeTrain]] trainer merge-for-merge (same
-  * argmax, same tie-breaks, same rewrite), the capped candidate table
-  * must be the exact (freq DESC, word) top-k, and a 1024-merge run
-  * must match an INDEPENDENT array-based reference that models the
-  * delimited-string replace semantics symbol-by-symbol — the evidence
-  * that realistic-depth training is correct, not just the first dozen
-  * rounds. */
+/** Deep BPE training ([[BpeDeep]]) through the one merge loop
+  * ([[BpeTrain.trainFromWords]]): the capped candidate table must be
+  * the exact (freq DESC, word) top-k, and both a 1024-merge run and the
+  * real shallow table at [[BpeTrain.NMerges]] must match an INDEPENDENT
+  * array-based reference that models the delimited-string replace
+  * semantics symbol-by-symbol — the evidence that the loop is correct
+  * at realistic depth and on the corpus, not just on fixtures. */
 class BpeDeepSpec extends SparkTestBase {
-  import spark.implicits._
 
-  private val S = BpeDeep.Sep
+  private val S = BpeTrain.Sep
 
   // deterministic synthetic vocabulary: 3000 pseudo-words with skewed
   // frequencies — enough pair mass for 1024 merges
@@ -32,17 +30,6 @@ class BpeDeepSpec extends SparkTestBase {
       (sb.toString, (i % 7 + 1).toLong)
     }.groupBy(_._1).map { case (w, g) => (w, g.map(_._2).sum) }.toSeq
       .sortBy(_._1)
-  }
-
-  test("driver-side deep loop == distributed BpeTrain on the same table") {
-    val words = synthWords(400).map { case (w, f) => (BpeDeep.delimit(w), f) }
-    val dist = BpeTrain.trainFromWords(words.toDF("sym", "freq"), 12)
-    val deep = BpeDeep.trainFromWords(words, 12)
-    assert(deep.merges == dist.merges,
-      s"merge tables diverge:\n  deep ${deep.merges}\n  dist ${dist.merges}")
-    val distWords = dist.finalWords.collect()
-      .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(deep.finalWords.sorted == distWords)
   }
 
   // Independent reference: symbol-ARRAY trainer modelling the
@@ -88,20 +75,29 @@ class BpeDeepSpec extends SparkTestBase {
 
   test("1024-merge deep run matches the independent array-based reference") {
     val raw = synthWords(3000)
-    val deep = BpeDeep.trainFromWords(
-      raw.map { case (w, f) => (BpeDeep.delimit(w), f) }, 1024)
+    val deep = BpeTrain.trainFromWords(
+      raw.map { case (w, f) => (BpeTrain.delimit(w), f) }, 1024, Nil)
     val ref = refTrain(
       raw.map { case (w, f) => (w.map(_.toString).toArray, f) }, 1024)
     assert(deep.merges.size == 1024)
     val firstDiff = deep.merges.zip(ref).indexWhere { case (x, y) => x != y }
     assert(firstDiff == -1,
       s"diverged at merge $firstDiff: deep=${deep.merges(math.max(firstDiff, 0))} ref=${ref(math.max(firstDiff, 0))}")
+    // the real sf0.001 shallow table, trained as bpe_train trains it
+    val table = BpeTrain.wordTable(spark, "/root/testdata/sf0.001")
+    val shallow = graft.SharedStages.bpeTrained(spark, "/root/testdata/sf0.001")
+    val refShallow = refTrain(
+      table.map { case (sym, f) => (sym.split(S).filter(_.nonEmpty), f) },
+      BpeTrain.NMerges)
+    assert(shallow.merges == refShallow,
+      s"shallow table diverges:\n  got ${shallow.merges}\n  ref $refShallow")
   }
 
   test("depthPieces: ladder checkpoints match an independent replay") {
     val raw = synthWords(3000)
-    val deep = BpeDeep.trainFromWords(
-      raw.map { case (w, f) => (BpeDeep.delimit(w), f) }, BpeDeep.DeepMerges)
+    val deep = BpeTrain.trainFromWords(
+      raw.map { case (w, f) => (BpeTrain.delimit(w), f) }, BpeDeep.DeepMerges,
+      BpeDeep.DepthLadder)
     assert(deep.depthPieces.map(_._1) == BpeDeep.DepthLadder)
     // independent replay: apply the reference rewrite and total symbols
     val want = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
@@ -155,14 +151,14 @@ class BpeDeepSpec extends SparkTestBase {
     }
     val want = cnt.toSeq.sortBy { case (w, f) => (-f, w) }
       .take(BpeDeep.CapWords)
-      .map { case (w, f) => (BpeDeep.delimit(w), f) }
+      .map { case (w, f) => (BpeTrain.delimit(w), f) }
     assert(got == want)
     // delimited shape: every char wrapped, trailing separator; chunks
     // start with the marker symbol
     assert(got.head._1.startsWith(S + BpeDeep.Marker) && got.head._1.endsWith(S))
     // and the corpus supports the full deep run (the reason chunks
     // exist: the 31-word lexicon dries word-level BPE at ~90 merges)
-    val deep = BpeDeep.trainFromWords(got, BpeDeep.DeepMerges)
+    val deep = BpeTrain.trainFromWords(got, BpeDeep.DeepMerges, Nil)
     assert(deep.merges.size == BpeDeep.DeepMerges)
   }
 }

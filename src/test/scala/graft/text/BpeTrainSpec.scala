@@ -7,13 +7,9 @@ import graft.SparkTestBase
   * training; THIS spec proves the training learns the RIGHT merges on
   * the classic hand-computable fixture (Sennrich et al. 2016 §3). */
 class BpeTrainSpec extends SparkTestBase {
-  import spark.implicits._
 
-  private val S = BpeTrain.Sep
-
-  private def delimited(words: Seq[(String, Long)]) =
-    words.map { case (w, f) => (S + w.map(_.toString).mkString(S) + S, f) }
-      .toDF("sym", "freq")
+  private def delimited(words: Seq[(String, Long)]): Seq[(String, Long)] =
+    words.map { case (w, f) => (BpeTrain.delimit(w), f) }
 
   test("learns the textbook merges on the low/lower/newest/widest corpus") {
     // pair counts by hand: (e,s)=9 and (s,t)=9 tie → lexicographic
@@ -21,7 +17,7 @@ class BpeTrainSpec extends SparkTestBase {
     // and (o,w)=7 tie → "lo"
     val wf = delimited(Seq(
       ("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L)))
-    val t = BpeTrain.trainFromWords(wf, 3)
+    val t = BpeTrain.trainFromWords(wf, 3, Nil)
     assert(t.merges == Seq(
       (1, "e", "s", 9L),
       (2, "es", "t", 9L),
@@ -31,9 +27,8 @@ class BpeTrainSpec extends SparkTestBase {
   test("vocab reports corpus frequencies under the learned segmentation") {
     val wf = delimited(Seq(
       ("low", 5L), ("lower", 2L), ("newest", 6L), ("widest", 3L)))
-    val t = BpeTrain.trainFromWords(wf, 3)
-    val v = BpeTrain.vocab(t).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val t = BpeTrain.trainFromWords(wf, 3, Nil)
+    val v = BpeTrain.vocab(t).toMap
     // after es/est/lo: newest = [n,e,w,est]×6, widest = [w,i,d,est]×3,
     // low = [lo,w]×5, lower = [lo,w,e,r]×2
     assert(v("est") == 9L)
@@ -44,17 +39,15 @@ class BpeTrainSpec extends SparkTestBase {
   }
 
   test("even self-pair chains merge fully (two-pass rewrite is maximal)") {
-    val t = BpeTrain.trainFromWords(delimited(Seq(("aaaa", 1L))), 1)
+    val t = BpeTrain.trainFromWords(delimited(Seq(("aaaa", 1L))), 1, Nil)
     assert(t.merges == Seq((1, "a", "a", 3L))) // 3 adjacent pairs
-    val v = BpeTrain.vocab(t).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val v = BpeTrain.vocab(t).toMap
     assert(v == Map("aa" -> 2L)) // [aa, aa] — no stray single 'a'
   }
 
   test("odd self-pair chains leave exactly one un-merged symbol") {
-    val t = BpeTrain.trainFromWords(delimited(Seq(("aaa", 1L))), 1)
-    val v = BpeTrain.vocab(t).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val t = BpeTrain.trainFromWords(delimited(Seq(("aaa", 1L))), 1, Nil)
+    val v = BpeTrain.vocab(t).toMap
     assert(v == Map("aa" -> 1L, "a" -> 1L))
   }
 

@@ -1,18 +1,18 @@
 package graft.text
 
-import org.apache.spark.sql.functions.{col, expr}
-
 import graft.SparkTestBase
 
-/** Deep unigram training ([[UnigramDeep]]): the driver-side EM loop
-  * must segment through the SAME kernel the native codegen expression
-  * runs (lockstep proof against a DataFrame `unigram_segment` call),
+/** Deep unigram training ([[UnigramDeep]]): the one EM loop
+  * ([[UnigramTrain.trainFromWords]]) run with the deep constants must
   * keep full character coverage, respect the KeepDeep capacity, and be
   * deterministic; and the depth-matched comparison against BpeDeep
   * must compare the identical chunk multiset (the tok_deep_gate
   * bpe_freq = uni_freq cross-check, pinned here at fixture scale). */
 class UnigramDeepSpec extends SparkTestBase {
-  import spark.implicits._
+
+  private def trainDeep(chunks: Seq[(String, Long)]): UnigramTrain.Trained =
+    UnigramTrain.trainFromWords(chunks, UnigramDeep.MaxPieceLenDeep,
+      UnigramDeep.SeedDeep, UnigramDeep.KeepDeep, UnigramDeep.EmRounds)
 
   // deterministic synthetic chunk table: marker-joined pseudo-chunks
   // with skewed frequencies, alphabet-gated like the capped table
@@ -36,8 +36,8 @@ class UnigramDeepSpec extends SparkTestBase {
 
   test("deep EM trains, covers every char, caps the multi vocab, deterministic") {
     val chunks = synthChunks(500)
-    val t1 = UnigramDeep.trainFromChunks(chunks)
-    val t2 = UnigramDeep.trainFromChunks(chunks)
+    val t1 = trainDeep(chunks)
+    val t2 = trainDeep(chunks)
     assert(t1.vocab == t2.vocab && t1.segmented == t2.segmented,
       "deep EM must be deterministic")
     val chars = chunks.flatMap(_._1.toSeq).distinct.map(_.toString).toSet
@@ -60,33 +60,13 @@ class UnigramDeepSpec extends SparkTestBase {
     }
   }
 
-  test("driver-side Viterbi is in lockstep with the native expression") {
-    val chunks = synthChunks(300)
-    val t = UnigramDeep.trainFromChunks(chunks)
-    // rebuild the final scores the trainer used (vocab carries them)
-    val entries = t.vocab.sortBy(_._1)
-      .map { case (p, _, sc) => s"'$p', CAST($sc AS BIGINT)" }
-      .mkString(", ")
-    val segged = chunks.toDF("word", "freq")
-      .withColumn("pieces",
-        expr(s"unigram_segment(word, map($entries), ${UnigramDeep.MaxPieceLenDeep})"))
-      .select(col("word"), col("pieces"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).toSeq)
-      .toMap
-    t.segmented.foreach { case (w, _, ps) =>
-      assert(segged(w) == ps,
-        s"native expression and driver loop diverge on $w: ${segged(w)} vs $ps")
-    }
-  }
-
   test("depth-matched gate compares the identical chunk multiset") {
     val chunks = synthChunks(400)
-    val delim = chunks.map { case (w, f) => (BpeDeep.delimit(w), f) }
-    val bpe = BpeDeep.trainFromWords(delim, 32)
-    val uni = UnigramDeep.trainFromChunks(UnigramDeep.chunksFrom(bpe))
+    val delim = chunks.map { case (w, f) => (BpeTrain.delimit(w), f) }
+    val bpe = BpeTrain.trainFromWords(delim, 32, Nil)
+    val uni = trainDeep(UnigramTrain.wordsFrom(bpe, UnigramDeep.MaxChunkLen))
     val bpeF = bpe.finalWords.iterator
-      .filter(_._1.replace(BpeDeep.Sep, "").length <= UnigramDeep.MaxChunkLen)
+      .filter(_._1.replace(BpeTrain.Sep, "").length <= UnigramDeep.MaxChunkLen)
       .map(_._2).sum
     val uniF = uni.segmented.iterator.map(_._2).sum
     assert(bpeF == uniF, s"gate cross-check: bpe_freq $bpeF != uni_freq $uniF")

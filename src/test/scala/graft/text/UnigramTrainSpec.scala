@@ -9,15 +9,8 @@ import graft.SparkTestBase
   * and the EM run on real data holds its structural invariants. */
 class UnigramTrainSpec extends SparkTestBase {
 
-  private def seg(word: String, vocab: Map[String, Long]): Seq[String] = {
-    val m = new java.util.HashMap[String, java.lang.Long]()
-    vocab.foreach { case (k, v) => m.put(k, java.lang.Long.valueOf(v)) }
-    graft.functions.UnigramSegment
-      .segment(word, m, UnigramTrain.MaxPieceLen)
-      .toArray[org.apache.spark.unsafe.types.UTF8String](
-        org.apache.spark.sql.types.StringType)
-      .map(_.toString).toSeq
-  }
+  private def seg(word: String, vocab: Map[String, Long]): Seq[String] =
+    UnigramTrain.segment(word, vocab, UnigramTrain.MaxPieceLen)
 
   test("ilog2q8 is exact on powers of two and within 1/128 elsewhere") {
     for (k <- 0 to 53)
@@ -77,13 +70,37 @@ class UnigramTrainSpec extends SparkTestBase {
     // to round-B competition (n >= 0 always; total usage > 0)
     assert(t.vocab.map(_._2).sum > 0L)
     // fertility sanity: pieces per word between 1 and word length
-    val segRows = t.segmented.collect()
-    segRows.foreach { r =>
-      val w = r.getString(0)
-      val np = r.getSeq[String](2).size
-      assert(np >= 1 && np <= w.length, s"'$w' segmented into $np pieces")
-      assert(r.getSeq[String](2).mkString("") == w, s"'$w' pieces don't concatenate back")
+    t.segmented.foreach { case (w, _, ps) =>
+      assert(ps.size >= 1 && ps.size <= w.length, s"'$w' segmented into ${ps.size} pieces")
+      assert(ps.mkString("") == w, s"'$w' pieces don't concatenate back")
     }
+  }
+
+  test("the shallow unigram trains on exactly the BPE table's words <= MaxWordLen") {
+    // tok_compare's bpe_freq = uni_freq cross-check, word by word,
+    // against an independent driver-side recount of the gated corpus
+    val d = "/root/testdata/sf0.001"
+    val cnt = scala.collection.mutable.HashMap.empty[String, Long]
+    graft.Tables.documents(spark, d).select("text").collect()
+      .flatMap(_.getString(0).trim.split("\\s+"))
+      .filter(w => w.matches("[A-Za-z0-9]+") && w.length <= UnigramTrain.MaxWordLen)
+      .foreach(w => cnt.update(w, cnt.getOrElse(w, 0L) + 1L))
+    val want = cnt.toSeq.sorted
+    val bpe = BpeTrain.segmented(graft.SharedStages.bpeTrained(spark, d))
+      .collect { case (w, f, _) if w.length <= UnigramTrain.MaxWordLen => (w, f) }
+    val uni = graft.SharedStages.unigramTrained(spark, d).segmented
+      .map { case (w, f, _) => (w, f) }
+    assert(bpe.sorted == want)
+    assert(uni.sorted == want)
+    // the length gate itself (no corpus word reaches it): a BPE table
+    // with a word one past MaxWordLen keeps the word AT the cap only
+    val edge = "b" * UnigramTrain.MaxWordLen
+    val long = "a" * (UnigramTrain.MaxWordLen + 1)
+    val t = BpeTrain.trainFromWords(
+      Seq((edge, 3L), (long, 2L), ("ab", 5L))
+        .map { case (w, f) => (BpeTrain.delimit(w), f) }, 2, Nil)
+    assert(UnigramTrain.wordsFrom(t, UnigramTrain.MaxWordLen).sorted ==
+      Seq(("ab", 5L), (edge, 3L)))
   }
 
   test("tok_gate: verdict matches the exact cross-multiplied fertility order") {
