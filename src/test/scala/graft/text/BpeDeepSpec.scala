@@ -12,7 +12,6 @@ import graft.SparkTestBase
   * semantics symbol-by-symbol — the evidence that the loop is correct
   * at realistic depth and on the corpus, not just on fixtures. */
 class BpeDeepSpec extends SparkTestBase {
-
   private val S = BpeTrain.Sep
 
   // deterministic synthetic vocabulary: 3000 pseudo-words with skewed

@@ -7,7 +7,6 @@ import graft.SparkTestBase
   * training; THIS spec proves the training learns the RIGHT merges on
   * the classic hand-computable fixture (Sennrich et al. 2016 §3). */
 class BpeTrainSpec extends SparkTestBase {
-
   private def delimited(words: Seq[(String, Long)]): Seq[(String, Long)] =
     words.map { case (w, f) => (BpeTrain.delimit(w), f) }
 

@@ -9,7 +9,6 @@ import graft.SparkTestBase
   * must compare the identical chunk multiset (the tok_deep_gate
   * bpe_freq = uni_freq cross-check, pinned here at fixture scale). */
 class UnigramDeepSpec extends SparkTestBase {
-
   private def trainDeep(chunks: Seq[(String, Long)]): UnigramTrain.Trained =
     UnigramTrain.trainFromWords(chunks, UnigramDeep.MaxPieceLenDeep,
       UnigramDeep.SeedDeep, UnigramDeep.KeepDeep, UnigramDeep.EmRounds)
