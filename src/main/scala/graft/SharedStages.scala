@@ -210,7 +210,8 @@ object SharedStages {
     stage(s, dir, "pairs05") {
       graft.dedup.MinHashLSH
         .verifiedPairs(candidatePairs(s, dir),
-          minhashSignatures(s, dir), "doc_id", 0.5)
+          minhashSignatures(s, dir), "doc_id",
+          graft.dedup.MinHashLSH.VerifyThreshold)
         .localCheckpoint()
     }
 

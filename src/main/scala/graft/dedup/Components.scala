@@ -208,4 +208,20 @@ object Components {
       .filter(col("src") =!= col("dst"))
       .distinct()
   }
+
+  // ------------------------------------------------------------ oracle
+
+  /** DuckDB mirror of the min-id labeling: the transitive closure of the
+    * pair CTE named `pairs` (a_id, b_id) as `edges(src, dst)` (both
+    * directions) and the recursive `reach(id, r)`; `MIN(r) GROUP BY id`
+    * is the (id, root) labeling. Callers open with `WITH RECURSIVE`. */
+  def duckdbClosureCte(pairs: String): String =
+    s"""edges AS (
+       |  SELECT a_id AS src, b_id AS dst FROM $pairs
+       |  UNION
+       |  SELECT b_id, a_id FROM $pairs),
+       |reach (id, r) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)""".stripMargin
 }

@@ -28,6 +28,9 @@ object MinHashLSH {
   val Bands     = 4
   val Rows      = 4 // per band; Bands * Rows == NumHashes
   val ShingleN  = 3
+  /** Jaccard floor of the shared verified-pair stage
+    * ([[graft.SharedStages.verifiedPairs]], [[duckdbVerifiedCte]]). */
+  val VerifyThreshold = 0.5
   /** Mersenne prime 2^31 − 1: (a*h + b) % P stays well inside Long. */
   val P = 2147483647L
 
@@ -183,4 +186,16 @@ object MinHashLSH {
        |    CAST($eqTerms AS DOUBLE) / $NumHashes AS est_sim
        |  FROM rawpairs)""".stripMargin
   }
+
+  /** DuckDB mirror of [[verifiedPairs]] at [[VerifyThreshold]] (needs
+    * [[duckdbSignatureCte]] and [[duckdbCandidateCte]] in scope).
+    * Exposes `verified(a_id, b_id)`. */
+  val duckdbVerifiedCte: String =
+    s"""verified AS (
+       |  SELECT c.a_id, c.b_id
+       |  FROM cands c
+       |  JOIN sigs a ON a.doc_id = c.a_id
+       |  JOIN sigs b ON b.doc_id = c.b_id
+       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
+       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= $VerifyThreshold)""".stripMargin
 }

@@ -90,4 +90,20 @@ object IvfTrain {
          |seeds AS (
          |  SELECT cid AS seed_id, cq AS sq, cnq AS snq FROM tc$iters)""".stripMargin
   }
+
+  /** The DuckDB mirror of the IVF cell ranking (needs `qv` and
+    * [[duckdbSeedsCte]]'s `seeds` in scope): `cellranked(vec_id,
+    * seed_id, q, nq, rn)` ranks every cell by cosine to the vector,
+    * `rn` = 1 the nearest (ties to the lowest seed id), and
+    * `assign(vec_id, cell, q, nq)` keeps that nearest cell. */
+  val duckdbAssignCte: String =
+    s"""cellranked AS (
+       |  SELECT v.vec_id, s.seed_id, v.q, v.nq,
+       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
+       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
+       |      s.seed_id) AS rn
+       |  FROM qv v CROSS JOIN seeds s),
+       |assign AS (
+       |  SELECT vec_id, seed_id AS cell, q, nq FROM cellranked WHERE rn = 1)""".stripMargin
 }

@@ -122,6 +122,23 @@ object Similarity {
        |      AS BIGINT) AS nq
        |  FROM embeddings)""".stripMargin
 
+  /** DuckDB mirror of the exact top-`k` of the probe queries
+    * `vec_id < 10` ([[knn]] as `EmbedQueries.buildKnnExact` calls it),
+    * over `qv`: `ex_pairs(query_id, neighbor_id, cos)` and
+    * `ex(query_id, neighbor_id)`, ranked by (cos DESC, neighbor_id). */
+  def duckdbExactTopKCte(k: Int): String =
+    s"""ex_pairs AS (
+       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+       |    CAST(${duckdbDot("a.q", "b.q")} AS DOUBLE)
+       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
+       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
+       |ex AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT query_id, neighbor_id,
+       |      ROW_NUMBER() OVER (PARTITION BY query_id
+       |                         ORDER BY cos DESC, neighbor_id) AS rk
+       |    FROM ex_pairs) WHERE rk <= $k)""".stripMargin
+
   /** DuckDB integer dot product of two quantized list columns. */
   def duckdbDot(a: String, b: String): String =
     s"CAST(list_sum(list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])) AS BIGINT)"

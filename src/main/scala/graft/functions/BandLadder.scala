@@ -73,4 +73,39 @@ object BandLadder {
       .select(col("a_id"), col("b_id"), col("hamming"))
       .distinct()
   }
+
+  // ------------------------------------------------------------ oracle
+
+  /** DuckDB mirror of [[bitsFor]] over the `documents` view:
+    * `nrow(n)` and `params(w)`, the band width chosen by the same exact
+    * integer comparison. */
+  val duckdbWidthCte: String =
+    s"""nrow AS (SELECT COUNT(*) AS n FROM documents),
+       |params AS (
+       |  SELECT CASE WHEN n <= $Tier16MaxN THEN 16 ELSE 32 END AS w
+       |  FROM nrow)""".stripMargin
+
+  /** DuckDB mirror of [[bandRows]] + [[pairs]] as a self-join: the
+    * `banded` and `cand` CTEs and the final distinct (a_id, b_id,
+    * hamming) select over a fingerprint CTE `ph(doc_id, lo, hi)` and
+    * [[duckdbWidthCte]]'s `params(w)`. */
+  val duckdbPairsQuery: String =
+    s"""banded AS (
+       |  SELECT doc_id, lo, hi, CAST(u.b AS INTEGER) AS b,
+       |    CASE WHEN u.b * p.w < 64
+       |      THEN (lo >> CAST(u.b * p.w AS INTEGER))
+       |        & ((CAST(1 AS BIGINT) << p.w) - 1)
+       |      ELSE (hi >> CAST(u.b * p.w - 64 AS INTEGER))
+       |        & ((CAST(1 AS BIGINT) << p.w) - 1) END AS v
+       |  FROM ph, params p,
+       |    LATERAL (SELECT unnest(range(0, $Bands)) AS b) u),
+       |cand AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+       |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
+       |      AS INTEGER) AS hamming
+       |  FROM banded a JOIN banded b ON a.b = b.b AND a.v = b.v
+       |    AND a.doc_id < b.doc_id
+       |  WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
+       |    <= $HammingMax)
+       |SELECT DISTINCT a_id, b_id, hamming FROM cand""".stripMargin
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.dedup.{MinHashLSH, SimHash}
+import graft.dedup.{Components, MinHashLSH, SimHash}
 import graft.functions.BandLadder
 import graft.text.TextFunctions
 
@@ -83,7 +83,7 @@ object DedupQueries {
        |  FROM cands c
        |  JOIN sigs a ON a.doc_id = c.a_id
        |  JOIN sigs b ON b.doc_id = c.b_id)
-       |SELECT a_id, b_id, jaccard FROM verified WHERE jaccard >= 0.5""".stripMargin
+       |SELECT a_id, b_id, jaccard FROM verified WHERE jaccard >= ${MinHashLSH.VerifyThreshold}""".stripMargin
 
   // ------------------------------------------------------- minhash_bbit
   // b-bit minwise hashing (Li & König, WWW'10): store only the LOWEST
@@ -160,21 +160,8 @@ object DedupQueries {
   private def dedupComponentsSql =
     s"""WITH RECURSIVE ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM verified
-       |  UNION
-       |  SELECT b_id, a_id FROM verified),
-       |reach (id, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)
+       |${MinHashLSH.duckdbVerifiedCte},
+       |${Components.duckdbClosureCte("verified")}
        |SELECT id AS doc_id, MIN(r) AS canonical_id
        |FROM reach GROUP BY id""".stripMargin
 
@@ -254,21 +241,8 @@ object DedupQueries {
   private def dedupKeepBestSql =
     s"""WITH RECURSIVE ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM verified
-       |  UNION
-       |  SELECT b_id, a_id FROM verified),
-       |reach (id, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+       |${MinHashLSH.duckdbVerifiedCte},
+       |${Components.duckdbClosureCte("verified")},
        |labeled AS (
        |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |lab AS (
@@ -369,19 +343,16 @@ object DedupQueries {
   private val SimBandBits = SimHash.Bits / SimBands
   private val SimBandMask = (1L << SimBandBits) - 1
 
-  /** The banded pair builder behind [[graft.SharedStages.simhashPairs]]
-    * — the registered query and the cascade funnel both read the
-    * materialized stage. ADAPTIVE band width (the mm_phash_pairs
+  /** The banded pair builder behind [[graft.SharedStages.simhashPairsAt]]
+    * — the registered query (`simhashPairs`, which picks `bandBits` with
+    * `BandLadder.bitsFor`) and the cascade funnel (pinned to 16) both
+    * read the materialized stage. ADAPTIVE band width (the mm_phash_pairs
     * ladder, [[graft.functions.BandLadder]]): 64-bit fingerprint /
     * 16-bit bands while 4·C(n,2)/2^16 stays within the 4n budget
     * (n ≤ 2^17), the 128-bit [[SimHash.simhash128]] / 32-bit bands past
     * it — `simhash_width` is the oracle-gated decision. At the wide
     * tier Hamming ≤ 3 is measured over 128 bits (finer votes — the
     * documented semantic of the tier, mirrored exactly in the oracle). */
-  private[graft] def buildSimhashPairs(s: SparkSession, d: String): DataFrame =
-    buildSimhashPairsAt(s, d,
-      BandLadder.bitsFor(graft.SharedStages.docCount(s, d)))
-
   private[graft] def buildSimhashPairsAt(s: SparkSession, d: String,
                                          bandBits: Int): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -397,10 +368,7 @@ object DedupQueries {
   // Tier guards replicate BandLadder.bitsFor on the same COUNT(*);
   // exactly one fingerprint table is row-live under its guard.
   private def simhashPairsSql =
-    s"""WITH nrow AS (SELECT COUNT(*) AS n FROM documents),
-       |params AS (
-       |  SELECT CASE WHEN n <= $SimTier16MaxN THEN 16 ELSE 32 END AS w
-       |  FROM nrow),
+    s"""WITH ${BandLadder.duckdbWidthCte},
        |${SimHash.duckdbCte},
        |${SimHash.duckdbCte128},
        |ph AS (
@@ -409,24 +377,7 @@ object DedupQueries {
        |  UNION ALL
        |  SELECT doc_id, lo, hi FROM sim128
        |  WHERE (SELECT w FROM params) = 32),
-       |banded AS (
-       |  SELECT doc_id, lo, hi, CAST(u.b AS INTEGER) AS b,
-       |    CASE WHEN u.b * p.w < 64
-       |      THEN (lo >> CAST(u.b * p.w AS INTEGER))
-       |        & ((CAST(1 AS BIGINT) << p.w) - 1)
-       |      ELSE (hi >> CAST(u.b * p.w - 64 AS INTEGER))
-       |        & ((CAST(1 AS BIGINT) << p.w) - 1) END AS v
-       |  FROM ph, params p,
-       |    LATERAL (SELECT unnest(range(0, $SimBands)) AS b) u),
-       |cand AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-       |      AS INTEGER) AS hamming
-       |  FROM banded a JOIN banded b ON a.b = b.b AND a.v = b.v
-       |    AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-       |    <= $SimHammingMax)
-       |SELECT DISTINCT a_id, b_id, hamming FROM cand""".stripMargin
+       |${BandLadder.duckdbPairsQuery}""".stripMargin
 
   // ------------------------------------------------------ simhash_width
   // The measure→act decision row for the simhash band ladder — same
@@ -774,14 +725,7 @@ object DedupQueries {
        |    THEN 1 ELSE 0 END AS rm_exact
        |  FROM fps),
        |s1 AS (SELECT doc_id FROM ex WHERE rm_exact = 0),
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-       |      >= CAST(0.5 AS DOUBLE)),
+       |${MinHashLSH.duckdbVerifiedCte},
        |rm2 AS (
        |  SELECT DISTINCT v.b_id AS doc_id
        |  FROM verified v
@@ -952,14 +896,7 @@ object DedupQueries {
   private def dupQualityMatrixSql =
     s"""WITH ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-       |      >= CAST(0.5 AS DOUBLE)),
+       |${MinHashLSH.duckdbVerifiedCte},
        |dup AS (
        |  SELECT DISTINCT doc_id FROM (
        |    SELECT a_id AS doc_id FROM verified

@@ -328,15 +328,7 @@ object EmbedQueries {
   private val ivfSearchSql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |cellranked AS (
-       |  SELECT v.vec_id, s.seed_id, v.q, v.nq,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, seed_id AS cell, q, nq FROM cellranked WHERE rn = 1),
+       |${graft.embed.IvfTrain.duckdbAssignCte},
        |probes AS (
        |  SELECT vec_id AS query_id, seed_id AS cell, q AS qq, nq AS qnq
        |  FROM cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
@@ -363,62 +355,37 @@ object EmbedQueries {
   // DuckDB-mirrored. Plan: the exact side is the guarded broadcast knn,
   // the approx side the cell-keyed IVF search; the final join/rollup
   // touches |Q|·k rows.
-  private def annRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = knnTopK(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = ivfSearch(s, d)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
+  private def annRecall(s: SparkSession, d: String): DataFrame =
+    recallVsExact(s, d, ivfSearch(s, d))
+
+  /** Recall@k per query of an approximate top-k (query_id,
+    * neighbor_id) against the exact top-k ([[knnTopK]]): the exact side
+    * left-joins the approximate one, then per query n_exact, n_hit and
+    * recall — the rollup of ann_recall and pq_recall. */
+  private def recallVsExact(s: SparkSession, d: String,
+                            approx: DataFrame): DataFrame =
+    knnTopK(s, d).select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"),
+        lit(1L).as("hit")), Seq("query_id", "neighbor_id"), "left")
       .groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-  }
 
-  private val annRecallSql =
+  /** DuckDB mirror of [[recallVsExact]] over the approximate top-k
+    * oracle `approxSql` (query_id, neighbor_id, …). */
+  private def recallVsExactSql(approxSql: String): String =
     s"""WITH ${Similarity.duckdbQuantizedCte},
-       |ex_pairs AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-       |ex AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM ex_pairs) WHERE rk <= $IvfK),
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |iv_cellranked AS (
-       |  SELECT v.vec_id, s.seed_id, v.q, v.nq,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
-       |iv_assign AS (
-       |  SELECT vec_id, seed_id AS cell, q, nq FROM iv_cellranked WHERE rn = 1),
-       |iv_probes AS (
-       |  SELECT vec_id AS query_id, seed_id AS cell, q AS qq, nq AS qnq
-       |  FROM iv_cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
-       |iv_scored AS (
-       |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("p.qq", "a.q")} AS DOUBLE)
-       |      / sqrt(CAST(p.qnq AS DOUBLE) * CAST(a.nq AS DOUBLE)) AS cos
-       |  FROM iv_probes p JOIN iv_assign a ON p.cell = a.cell
-       |  WHERE p.query_id <> a.vec_id),
-       |iv AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM iv_scored) WHERE rk <= $IvfK)
+       |${Similarity.duckdbExactTopKCte(IvfK)},
+       |approx AS (
+       |  SELECT query_id, neighbor_id FROM ($approxSql))
        |SELECT e.query_id, COUNT(*) AS n_exact,
-       |  CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
        |    AS BIGINT) AS n_hit,
-       |  CAST(SUM(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
+       |  CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
        |    AS DOUBLE) / COUNT(*) AS recall
-       |FROM ex e LEFT JOIN iv i
-       |  ON e.query_id = i.query_id AND e.neighbor_id = i.neighbor_id
+       |FROM ex e LEFT JOIN approx a
+       |  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
        |GROUP BY 1""".stripMargin
 
   // ---------------------------------------------------------- ann_frontier
@@ -478,15 +445,7 @@ object EmbedQueries {
   private val annFrontierSql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |cellranked AS (
-       |  SELECT v.vec_id, s.seed_id, v.q, v.nq,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, seed_id AS cell, q, nq FROM cellranked WHERE rn = 1),
+       |${graft.embed.IvfTrain.duckdbAssignCte},
        |probes AS (
        |  SELECT vec_id AS query_id, seed_id AS cell, q AS qq, nq AS qnq, rn
        |  FROM cellranked WHERE vec_id < 10 AND rn <= ${FrontierProbes.max}),
@@ -507,17 +466,7 @@ object EmbedQueries {
        |      ROW_NUMBER() OVER (PARTITION BY nprobe, query_id
        |                         ORDER BY cos DESC, neighbor_id) AS rk
        |    FROM scored) WHERE rk <= $IvfK),
-       |ex_pairs AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-       |ex AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM ex_pairs) WHERE rk <= $IvfK),
+       |${Similarity.duckdbExactTopKCte(IvfK)},
        |exn AS (
        |  SELECT n.nprobe, e.query_id, e.neighbor_id FROM np n CROSS JOIN ex e),
        |rec AS (
@@ -596,14 +545,7 @@ object EmbedQueries {
        |  FROM qv a JOIN qv b ON a.label = b.label AND a.vec_id < b.vec_id
        |  WHERE CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
        |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) >= CAST(0.35 AS DOUBLE)),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM pairs
-       |  UNION
-       |  SELECT b_id, a_id FROM pairs),
-       |reach (id, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)
+       |${graft.dedup.Components.duckdbClosureCte("pairs")}
        |SELECT id AS vec_id, MIN(r) AS canonical_id
        |FROM reach GROUP BY id""".stripMargin
 
@@ -783,46 +725,8 @@ object EmbedQueries {
   // directly measures what [[graft.embed.PqTrain]] training buys at
   // search time). Same composition shape as ann_recall: both sides
   // deterministic top-k, |Q|·k-row join + rollup.
-  private def pqRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = knnTopK(s, d).select(col("query_id"), col("neighbor_id"))
-    val approx = pqSearchDf(s, d)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast("double") / col("n_exact"))
-  }
-
-  private val pqRecallSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |ex_pairs AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-       |ex AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM ex_pairs) WHERE rk <= $IvfK),
-       |$duckdbPqCtes,
-       |$duckdbPqDistCtes,
-       |pq AS (
-       |  SELECT query_id, vec_id AS neighbor_id FROM (
-       |    SELECT query_id, vec_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY adist, vec_id) AS rk
-       |    FROM dists) WHERE rk <= $IvfK)
-       |SELECT e.query_id, COUNT(*) AS n_exact,
-       |  CAST(SUM(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_hit,
-       |  CAST(SUM(CASE WHEN p.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS DOUBLE) / COUNT(*) AS recall
-       |FROM ex e LEFT JOIN pq p
-       |  ON e.query_id = p.query_id AND e.neighbor_id = p.neighbor_id
-       |GROUP BY 1""".stripMargin
+  private def pqRecall(s: SparkSession, d: String): DataFrame =
+    recallVsExact(s, d, pqSearchDf(s, d))
 
   // ------------------------------------------------------------ pq_refine
   // Two-stage retrieval — the deployment shape of PQ search: stage 1
@@ -943,21 +847,13 @@ object EmbedQueries {
   private val ivfPqSearchSql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |iv_cellranked AS (
-       |  SELECT v.vec_id, s.seed_id,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
-       |iv_assign AS (
-       |  SELECT vec_id, seed_id AS cell FROM iv_cellranked WHERE rn = 1),
-       |iv_probes AS (
+       |${graft.embed.IvfTrain.duckdbAssignCte},
+       |probes AS (
        |  SELECT vec_id AS query_id, seed_id AS cell
-       |  FROM iv_cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
+       |  FROM cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
        |cand AS (
        |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-       |  FROM iv_probes p JOIN iv_assign a ON p.cell = a.cell
+       |  FROM probes p JOIN assign a ON p.cell = a.cell
        |  WHERE p.query_id <> a.vec_id),
        |$duckdbPqCtes,
        |$duckdbPqCodeAdcCtes,
@@ -1064,15 +960,7 @@ object EmbedQueries {
   private val clusterPuritySql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |cellranked AS (
-       |  SELECT v.vec_id, s.seed_id,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, seed_id AS cell FROM cellranked WHERE rn = 1),
+       |${graft.embed.IvfTrain.duckdbAssignCte},
        |cl AS (
        |  SELECT a.cell, CAST(e.label AS BIGINT) AS label, COUNT(*) AS n
        |  FROM assign a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -2501,14 +2389,14 @@ object EmbedQueries {
     QueryDef("ivf_assign", ivfAssign, Some(ivfAssignSql)),
     QueryDef("ann_cell_balance", annCellBalance, Some(annCellBalanceSql)),
     QueryDef("ivf_search", ivfSearch, Some(ivfSearchSql)),
-    QueryDef("ann_recall", annRecall, Some(annRecallSql)),
+    QueryDef("ann_recall", annRecall, Some(recallVsExactSql(ivfSearchSql))),
     QueryDef("ann_frontier", annFrontier, Some(annFrontierSql)),
     QueryDef("ivf_nprobe_gate", ivfNprobeGate, Some(ivfNprobeGateSql)),
     QueryDef("dedup_embed", dedupEmbed, Some(dedupEmbedSql)),
     QueryDef("pq_train", pqTrainDf, Some(pqTrainSql)),
     QueryDef("pq_assign", pqAssignDf, Some(pqAssignSql)),
     QueryDef("pq_search", pqSearchDf, Some(pqSearchSql)),
-    QueryDef("pq_recall", pqRecall, Some(pqRecallSql)),
+    QueryDef("pq_recall", pqRecall, Some(recallVsExactSql(pqSearchSql))),
     QueryDef("pq_refine", pqRefine, Some(pqRefineSql)),
     QueryDef("ivf_pq_search", ivfPqSearch, Some(ivfPqSearchSql)),
     QueryDef("cluster_purity", clusterPurity, Some(clusterPuritySql)))

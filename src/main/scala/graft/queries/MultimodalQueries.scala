@@ -229,8 +229,7 @@ object MultimodalQueries {
   // and `mm_phash_pairs` is the banded search over the corpus PLUS a
   // planted twin fixture (below), so the pair path produces real rows
   // at every SF instead of hash-matching empty sets below sf0.1.
-  private val PhBands = 4
-  private val PhHammingMax = PhBands - 1
+  private val PhBands = BandLadder.Bands
 
   /** ADAPTIVE BAND WIDTH (the mm_phash 100 TB lever, the RpLsh.widthFor
     * discipline applied to Hamming bands): with FIXED 16-bit bands the
@@ -410,10 +409,7 @@ object MultimodalQueries {
   // clause-for-clause). MATERIALIZED: the two tier CTEs both read it —
   // DuckDB re-inlines multi-consumer CTEs (the lex_df_gate lesson).
   private val mmPhashPairsSql =
-    s"""WITH nrow AS (SELECT COUNT(*) AS n FROM documents),
-       |params AS (
-       |  SELECT CASE WHEN n <= $PhTier16MaxN THEN 16 ELSE 32 END AS w
-       |  FROM nrow),
+    s"""WITH ${BandLadder.duckdbWidthCte},
        |seeds AS MATERIALIZED (
        |  SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT $PlantSeeds),
        |blobs AS MATERIALIZED (
@@ -428,24 +424,7 @@ object MultimodalQueries {
        |  SELECT * FROM t16ph WHERE (SELECT w FROM params) = 16
        |  UNION ALL
        |  SELECT * FROM t32ph WHERE (SELECT w FROM params) = 32),
-       |banded AS (
-       |  SELECT doc_id, lo, hi, CAST(u.b AS INTEGER) AS b,
-       |    CASE WHEN u.b * p.w < 64
-       |      THEN (lo >> CAST(u.b * p.w AS INTEGER))
-       |        & ((CAST(1 AS BIGINT) << p.w) - 1)
-       |      ELSE (hi >> CAST(u.b * p.w - 64 AS INTEGER))
-       |        & ((CAST(1 AS BIGINT) << p.w) - 1) END AS v
-       |  FROM ph, params p,
-       |    LATERAL (SELECT unnest(range(0, $PhBands)) AS b) u),
-       |cand AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-       |      AS INTEGER) AS hamming
-       |  FROM banded a JOIN banded b ON a.b = b.b AND a.v = b.v
-       |    AND a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-       |    <= $PhHammingMax)
-       |SELECT DISTINCT a_id, b_id, hamming FROM cand""".stripMargin
+       |${BandLadder.duckdbPairsQuery}""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
     QueryDef("mm_decode_meta", mmDecode, Some(mmDecodeSql)),

@@ -103,18 +103,7 @@ object PipelineQueries {
     Sessionize.bySessionWindow(Tables.events(s, d), "user_id", "ts")
 
   private val sessionizeSql =
-    """WITH flagged AS (
-      |  SELECT user_id, ts,
-      |    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-      |              > INTERVAL 300 SECOND
-      |         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events),
-      |numbered AS (
-      |  SELECT user_id, ts,
-      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-      |                           ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged)
+    s"""WITH ${Sessionize.duckdbSessionCtes}
       |SELECT user_id, MIN(ts) AS start_ts, MAX(ts) AS end_ts,
       |  COUNT(*) AS n_touches
       |FROM numbered

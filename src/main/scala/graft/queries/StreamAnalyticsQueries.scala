@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.derive.{Detectors, EventsAdapter}
+import graft.session.Sessionize
 
 /** Detector + stream-analytics operator exposure (SURVEY §7.5, §2.3
   * P-series JSON ops, tumbling windows, set ops). */
@@ -228,7 +229,7 @@ object StreamAnalyticsQueries {
   // count == event count — a self-checking property the oracle verifies.
   private def rangeJoin(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts"))
-    val sessions = graft.session.Sessionize
+    val sessions = Sessionize
       .bySessionWindow(Tables.events(s, d), "user_id", "ts")
     graft.plans.RangeJoin.pointInInterval(
       ev, sessions, "user_id", "ts", "start_ts", "end_ts")
@@ -237,18 +238,7 @@ object StreamAnalyticsQueries {
   }
 
   private val rangeJoinSql =
-    """WITH flagged AS (
-      |  SELECT user_id, ts,
-      |    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-      |              > INTERVAL 300 SECOND
-      |         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-      |         THEN 1 ELSE 0 END AS new_session
-      |  FROM events),
-      |numbered AS (
-      |  SELECT user_id, ts,
-      |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-      |                           ROWS UNBOUNDED PRECEDING) AS session_id
-      |  FROM flagged),
+    s"""WITH ${Sessionize.duckdbSessionCtes},
       |sessions AS (
       |  SELECT user_id, MIN(ts) AS start_ts, MAX(ts) AS end_ts,
       |    COUNT(*) AS n_touches

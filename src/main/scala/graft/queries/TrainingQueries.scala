@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.dedup.MinHashLSH
+import graft.dedup.{Components, MinHashLSH}
 import graft.embed.Similarity
 import graft.text.TextFunctions._
 
@@ -49,13 +49,7 @@ object TrainingQueries {
     }
     s"""WITH ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5)
+       |${MinHashLSH.duckdbVerifiedCte}
        |SELECT ${splitSql("a_id")} AS split_a,
        |  ${splitSql("b_id")} AS split_b,
        |  COUNT(*) AS n_pairs, MIN(a_id) AS example_a
@@ -89,13 +83,7 @@ object TrainingQueries {
   private val dupSourceMatrixSql =
     s"""WITH ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
+       |${MinHashLSH.duckdbVerifiedCte},
        |lab AS (
        |  SELECT v.a_id,
        |    LEAST(da.source, db.source) AS source_a,
@@ -282,21 +270,8 @@ object TrainingQueries {
   private val dupClusterSizesSql =
     s"""WITH RECURSIVE ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM verified
-       |  UNION
-       |  SELECT b_id, a_id FROM verified),
-       |reach (id, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+       |${MinHashLSH.duckdbVerifiedCte},
+       |${Components.duckdbClosureCte("verified")},
        |labeled AS (
        |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |clusters AS (
@@ -606,21 +581,8 @@ object TrainingQueries {
   private val dupInflationSql =
     s"""WITH RECURSIVE ${MinHashLSH.duckdbSignatureCte},
        |${MinHashLSH.duckdbCandidateCte},
-       |verified AS (
-       |  SELECT c.a_id, c.b_id
-       |  FROM cands c
-       |  JOIN sigs a ON a.doc_id = c.a_id
-       |  JOIN sigs b ON b.doc_id = c.b_id
-       |  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-       |    (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5),
-       |edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM verified
-       |  UNION
-       |  SELECT b_id, a_id FROM verified),
-       |reach (id, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+       |${MinHashLSH.duckdbVerifiedCte},
+       |${Components.duckdbClosureCte("verified")},
        |labels AS (
        |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |t AS (

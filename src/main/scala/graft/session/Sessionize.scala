@@ -137,4 +137,22 @@ object Sessionize {
     }
     closed.result().iterator
   }
+
+  /** DuckDB mirror of [[bySessionWindow]] over `events(user_id, ts)`:
+    * the lag/flag/cumsum assignment, `numbered(user_id, ts, session_id)`
+    * (a gap over [[GapSeconds]] opens a session, one of exactly
+    * [[GapSeconds]] extends it, as `session_window` does). */
+  val duckdbSessionCtes: String =
+    s"""flagged AS (
+       |  SELECT user_id, ts,
+       |    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+       |              > INTERVAL $GapSeconds SECOND
+       |         OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+       |         THEN 1 ELSE 0 END AS new_session
+       |  FROM events),
+       |numbered AS (
+       |  SELECT user_id, ts,
+       |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+       |                           ROWS UNBOUNDED PRECEDING) AS session_id
+       |  FROM flagged)""".stripMargin
 }

@@ -1,5 +1,6 @@
 package graft.sink
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -34,18 +35,40 @@ object BucketStore {
     * old and the new generation are unreachable: the live generation is
     * renamed aside to `path_old`, not deleted, until the new one is
     * live. Single writer per path; readers recover via [[readMany]]. */
-  private def promote(fs: org.apache.hadoop.fs.FileSystem, tmp: String,
-                      path: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
+  private def promote(fs: FileSystem, tmp: String, path: String): Unit = {
+    val dst = new Path(path)
+    val old = new Path(path + "_old")
     fs.delete(old, true) // stale backup from a completed promote
     if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.rename(new Path(tmp), dst)
     fs.delete(old, true)
   }
 
   private def bucketCol(keyCols: Seq[String], numBuckets: Int) =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets))
+
+  /** The placement hash columns: `bucketCols`, else the key. */
+  private def placement(keyCols: Seq[String], bucketCols: Seq[String]) =
+    if (bucketCols.isEmpty) keyCols else bucketCols
+
+  /** The one staged write of every bucket-promoting writer: `rows`
+    * (carrying `__bucket`) land partitioned by bucket under the staging
+    * root `tmpRoot` in one job, each staged bucket of `buckets`
+    * promotes into `dest` through [[promote]] (a bucket with no staged
+    * rows goes to `unstaged`), and the root is deleted last — a root
+    * left behind would keep [[readMany]] re-probing every unwritten
+    * bucket and [[isEmptyStore]] false. */
+  private def stageAndPromote(rows: DataFrame, tmpRoot: String, dest: String,
+                              buckets: Seq[Int])(unstaged: Int => Unit): Unit = {
+    val fs = FileSystem.get(rows.sparkSession.sparkContext.hadoopConfiguration)
+    rows.write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
+    buckets.foreach { b =>
+      val staged = s"$tmpRoot/__bucket=$b"
+      if (fs.exists(new Path(staged))) promote(fs, staged, bucketDir(dest, b))
+      else unstaged(b)
+    }
+    fs.delete(new Path(tmpRoot), true)
+  }
 
   /** Staging roots of EVERY writer that promotes buckets through the
     * rename-aside protocol on `path`: [[upsert]] stages at `_tmp`,
@@ -115,8 +138,7 @@ object BucketStore {
     * that vanishes after the listing fails the scan itself. */
   private def readMany(spark: SparkSession, path: String, buckets: Seq[Int],
                        schema: StructType): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def resolve(b: Int): Option[String] = {
       resolveCount.incrementAndGet()
       val live = bucketDir(path, b)
@@ -130,8 +152,8 @@ object BucketStore {
       }
       try {
         while (probe < 64) {
-          if (fs.exists(new org.apache.hadoop.fs.Path(live))) return Some(live)
-          if (fs.exists(new org.apache.hadoop.fs.Path(old))) return Some(old)
+          if (fs.exists(new Path(live))) return Some(live)
+          if (fs.exists(new Path(old))) return Some(old)
           // Neither generation visible. If NO bucket-promoting writer is
           // in flight (every staging root is gone — upsert's `_tmp` AND
           // evict's `_evt`, both via [[stagingRoots]]; each exists from
@@ -147,9 +169,9 @@ object BucketStore {
           // stale staging root: fall through to "unwritten", matching
           // the crash-recovery contract.
           if (!stagingRoots(path).exists(r =>
-              fs.exists(new org.apache.hadoop.fs.Path(r)))) {
-            if (fs.exists(new org.apache.hadoop.fs.Path(live))) return Some(live)
-            if (fs.exists(new org.apache.hadoop.fs.Path(old))) return Some(old)
+              fs.exists(new Path(r)))) {
+            if (fs.exists(new Path(live))) return Some(live)
+            if (fs.exists(new Path(old))) return Some(old)
             return None
           }
           probe += 1
@@ -158,7 +180,7 @@ object BucketStore {
         None
       } finally note()
     }
-    def dirOf(p: org.apache.hadoop.fs.Path) = fs.makeQualified(p).toUri.getPath
+    def dirOf(p: Path) = fs.makeQualified(p).toUri.getPath
     def scan(attempt: Int): DataFrame = {
       val dirs = buckets.flatMap(resolve)
       if (dirs.isEmpty)
@@ -167,8 +189,8 @@ object BucketStore {
       else {
         val df = spark.read.schema(schema).parquet(dirs: _*)
         val listed = df.inputFiles.map(f =>
-          dirOf(new org.apache.hadoop.fs.Path(new java.net.URI(f)).getParent)).toSet
-        val vanished = dirs.filterNot(d => listed(dirOf(new org.apache.hadoop.fs.Path(d))))
+          dirOf(new Path(new java.net.URI(f)).getParent)).toSet
+        val vanished = dirs.filterNot(d => listed(dirOf(new Path(d))))
         if (vanished.isEmpty) df
         else if (attempt < 3) scan(attempt + 1)
         else throw new IllegalStateException(
@@ -188,18 +210,15 @@ object BucketStore {
   def upsert(spark: SparkSession, batch: DataFrame, path: String,
              keyCols: Seq[String], numBuckets: Int = 64,
              bucketCols: Seq[String] = Nil): Unit = {
-    val bc = bucketCol(if (bucketCols.isEmpty) keyCols else bucketCols,
-      numBuckets)
-    // ≤ numBuckets ints — a driver-side list, never the data
-    val touched = batch.select(bc.as("__b")).distinct()
-      .collect().map(_.getInt(0)).sorted
+    val cols = placement(keyCols, bucketCols)
+    val touched = touchedBuckets(batch, cols, numBuckets)
     if (touched.isEmpty) return
 
-    val existing = readMany(spark, path, touched.toIndexedSeq, batch.schema)
+    val existing = readMany(spark, path, touched, batch.schema)
     val merged = existing
       .join(batch.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
       .unionByName(batch)
-      .withColumn("__bucket", bc)
+      .withColumn("__bucket", bucketCol(cols, numBuckets))
 
     // one job writes every touched bucket's new generation. Repartition
     // on the bucket column first: otherwise every shuffle partition that
@@ -207,19 +226,10 @@ object BucketStore {
     // bucket per batch — compounding small-files fragmentation that
     // every later read of the bucket pays for). One task per touched
     // bucket writes one coherent file; a bucket too big for one task is
-    // a numBuckets sizing problem, not a write-parallelism one.
-    val tmpRoot = upsertStaging(path)
-    merged.repartition(touched.length, col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
-    // ...then each bucket promotes independently via rename-aside
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    touched.foreach { b =>
-      val staged = s"$tmpRoot/__bucket=$b"
-      if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        promote(fs, staged, bucketDir(path, b))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
+    // a numBuckets sizing problem, not a write-parallelism one. Each
+    // bucket then promotes independently via rename-aside.
+    stageAndPromote(merged.repartition(touched.length, col("__bucket")),
+      upsertStaging(path), path, touched)(_ => ())
   }
 
   /** Whole-store read with per-bucket crash recovery. */
@@ -244,12 +254,11 @@ object BucketStore {
     * (a reader racing a store's FIRST write linearizes to reading
     * before it — the same outcome the per-bucket resolve loop gives). */
   def isEmptyStore(spark: SparkSession, path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     def stagingLive() = stagingRoots(path).exists(r =>
-      fs.exists(new org.apache.hadoop.fs.Path(r)))
+      fs.exists(new Path(r)))
     if (stagingLive()) return false
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val listedEmpty = !fs.exists(p) || fs.listStatus(p).isEmpty
     // check-staging, list, check-staging: a first write racing this
     // probe previously went unseen whenever its whole
@@ -305,10 +314,9 @@ object BucketStore {
   final case class BucketStat(bucket: Int, files: Int, bytes: Long)
   def stats(spark: SparkSession, path: String,
             numBuckets: Int = 64): Seq[BucketStat] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     (0 until numBuckets).flatMap { b =>
-      val dir = new org.apache.hadoop.fs.Path(bucketDir(path, b))
+      val dir = new Path(bucketDir(path, b))
       if (!fs.exists(dir)) None
       else {
         val parts = fs.listStatus(dir)
@@ -330,33 +338,23 @@ object BucketStore {
   def evict(spark: SparkSession, path: String, schema: StructType,
             keep: org.apache.spark.sql.Column, keyCols: Seq[String],
             numBuckets: Int = 64, bucketCols: Seq[String] = Nil): Long = {
-    val bc = bucketCol(if (bucketCols.isEmpty) keyCols else bucketCols,
-      numBuckets)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val live = (0 until numBuckets).filter { b =>
-      fs.exists(new org.apache.hadoop.fs.Path(bucketDir(path, b))) ||
-        fs.exists(new org.apache.hadoop.fs.Path(bucketDir(path, b) + "_old"))
+      fs.exists(new Path(bucketDir(path, b))) ||
+        fs.exists(new Path(bucketDir(path, b) + "_old"))
     }
     if (live.isEmpty) return 0L
     val survivors = readMany(spark, path, live, schema)
       .filter(keep)
-      .withColumn("__bucket", bc)
+      .withColumn("__bucket",
+        bucketCol(placement(keyCols, bucketCols), numBuckets))
       // one coherent file per surviving bucket (the upsert discipline)
       .repartition(live.length, col("__bucket"))
       .localCheckpoint() // one pass: the write below + the count
-    val tmpRoot = evictStaging(path)
-    survivors.write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
-    live.foreach { b =>
-      val staged = s"$tmpRoot/__bucket=$b"
-      if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        promote(fs, staged, bucketDir(path, b))
-      else {
-        fs.delete(new org.apache.hadoop.fs.Path(bucketDir(path, b)), true)
-        fs.delete(new org.apache.hadoop.fs.Path(bucketDir(path, b) + "_old"), true)
-      }
+    stageAndPromote(survivors, evictStaging(path), path, live) { b =>
+      fs.delete(new Path(bucketDir(path, b)), true)
+      fs.delete(new Path(bucketDir(path, b) + "_old"), true)
     }
-    fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
     survivors.count()
   }
 
@@ -388,20 +386,10 @@ object BucketStore {
                schema: StructType, keyCols: Seq[String],
                fromBuckets: Int, toBuckets: Int,
                bucketCols: Seq[String] = Nil): Unit = {
-    val bc = bucketCol(if (bucketCols.isEmpty) keyCols else bucketCols,
-      toBuckets)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = newPath + "_tmp"
-    read(spark, path, schema, fromBuckets)
-      .withColumn("__bucket", bc)
+    val rows = read(spark, path, schema, fromBuckets)
+      .withColumn("__bucket",
+        bucketCol(placement(keyCols, bucketCols), toBuckets))
       .repartition(toBuckets, col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket").parquet(tmpRoot)
-    (0 until toBuckets).foreach { b =>
-      val staged = s"$tmpRoot/__bucket=$b"
-      if (fs.exists(new org.apache.hadoop.fs.Path(staged)))
-        promote(fs, staged, bucketDir(newPath, b))
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmpRoot), true)
+    stageAndPromote(rows, newPath + "_tmp", newPath, 0 until toBuckets)(_ => ())
   }
 }

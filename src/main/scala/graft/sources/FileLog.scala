@@ -215,7 +215,7 @@ class FileLogMicroBatchStream(root: String, topic: String, n: Int,
                               maxOffsetsPerTrigger: Option[Long] = None)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
-  import org.apache.spark.sql.connector.read.streaming.{ReadAllAvailable, ReadLimit, ReadMaxRows}
+  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 
   override def initialOffset(): Offset = startingOffsets match {
     case "earliest" => FileLogOffset((0 until n).map(_ -> 0L).toMap)
@@ -227,8 +227,7 @@ class FileLogMicroBatchStream(root: String, topic: String, n: Int,
   override def getDefaultReadLimit: ReadLimit =
     maxOffsetsPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
-  override def reportLatestOffset(): Offset =
-    FileLogOffset.current(root, topic, n)
+  override def reportLatestOffset(): Offset = latestOffset()
 
   override def latestOffset(startOffset: Offset, limit: ReadLimit): Offset = {
     val start = startOffset.asInstanceOf[FileLogOffset]
@@ -256,7 +255,6 @@ class FileLogMicroBatchStream(root: String, topic: String, n: Int,
           FileLogOffset((0 until n).map(p =>
             p -> (start.parts.getOrElse(p, 0L) + admitted(p))).toMap)
         }
-      case _: ReadAllAvailable => avail
       case _ => avail
     }
   }
@@ -376,7 +374,7 @@ class FileLogWrite(options: CaseInsensitiveStringMap, schema: StructType,
 
   override def toStreaming: StreamingWrite = new StreamingWrite {
     override def createStreamingWriterFactory(i: PhysicalWriteInfo): StreamingDataWriterFactory =
-      new FileLogStreamingWriterFactory(spec)
+      new FileLogWriterFactory(spec)
     override def commit(epochId: Long, msgs: Array[WriterCommitMessage]): Unit = {
       // effectively-once: a replayed epoch is skipped wholesale
       val marker = new File(new File(FileLog.topicDir(spec.root, spec.topic),
@@ -401,14 +399,11 @@ case class FileLogWriteSpec(root: String, topic: String, numPartitions: Int,
 case class FileLogCommitMessage(parts: Seq[(Int, String, Long)])
     extends WriterCommitMessage // (partition, tmpPath, recordCount)
 
+/** One staging writer per task, for batch writes and streaming epochs. */
 class FileLogWriterFactory(spec: FileLogWriteSpec)
-    extends DataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new FileLogDataWriter(spec)
-}
-
-class FileLogStreamingWriterFactory(spec: FileLogWriteSpec)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new FileLogDataWriter(spec)

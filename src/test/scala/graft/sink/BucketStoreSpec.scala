@@ -163,6 +163,29 @@ class BucketStoreSpec extends SparkTestBase {
     assert(BucketStore.read(spark, dir32, rows.schema, 32).count() == 200)
   }
 
+  test("upsert, evict and rebucket leave no staging root; a fully evicted store is empty") {
+    // a leftover root keeps readMany re-probing every unwritten bucket
+    // and isEmptyStore false for good
+    val base = Files.createTempDirectory("bstage").toString
+    val (dir, dir16) = (s"$base/docs", s"$base/docs16")
+    val rows = (1 to 40).map(i => (s"dev-$i", i.toLong, 1L))
+      .toDF("dev", "end_ts", "v")
+    def leftovers() = Seq(s"${dir}_tmp", s"${dir}_evt", s"${dir16}_tmp")
+      .filter(p => new File(p).exists())
+    BucketStore.upsert(spark, rows, dir, Seq("dev"), N)
+    assert(leftovers().isEmpty)
+    BucketStore.rebucket(spark, dir, dir16, rows.schema, Seq("dev"), N, 16)
+    assert(leftovers().isEmpty)
+    assert(BucketStore.evict(spark, dir, rows.schema,
+      $"end_ts" > 20L, Seq("dev"), N) == 20L)
+    assert(leftovers().isEmpty)
+    assert(!BucketStore.isEmptyStore(spark, dir))
+    assert(BucketStore.evict(spark, dir, rows.schema,
+      lit(false), Seq("dev"), N) == 0L)
+    assert(leftovers().isEmpty)
+    assert(BucketStore.isEmptyStore(spark, dir))
+  }
+
   test("rebucketDecision: exact ladder, stays inside budget, minimal") {
     // inside budget -> stay
     assert(BucketStore.rebucketDecision(100L, 8, 500L) == 8)
