@@ -250,12 +250,8 @@ object SharedStages {
     * k×1 driver-local rows, so the memo holds the tiny table itself. */
   def ivfCentroids(s: SparkSession, dir: String): DataFrame =
     stage(s, dir, "ivfCentroids") {
-      import org.apache.spark.sql.functions.col
       graft.embed.IvfTrain.trainedCentroids(
-        graft.embed.Similarity
-          .quantized(Tables.embeddings(s, dir), "vec_id", "embedding")
-          .select(col("vec_id"), col("q"), col("nq")))
-        .localCheckpoint()
+        graft.queries.EmbedQueries.quantizedCorpus(s, dir)).localCheckpoint()
     }
 
   /** Lloyd-TRAINED per-subspace PQ codebook (j, cid, csub) —

@@ -213,8 +213,9 @@ object Components {
 
   /** DuckDB mirror of the min-id labeling: the transitive closure of the
     * pair CTE named `pairs` (a_id, b_id) as `edges(src, dst)` (both
-    * directions) and the recursive `reach(id, r)`; `MIN(r) GROUP BY id`
-    * is the (id, root) labeling. Callers open with `WITH RECURSIVE`. */
+    * directions) and the recursive `reach(id, r)`, then
+    * `labeled(id, root)` — every node's component minimum, the
+    * [[minLabel]] contract. Callers open with `WITH RECURSIVE`. */
   def duckdbClosureCte(pairs: String): String =
     s"""edges AS (
        |  SELECT a_id AS src, b_id AS dst FROM $pairs
@@ -223,5 +224,7 @@ object Components {
        |reach (id, r) AS (
        |  SELECT src, src FROM edges
        |  UNION
-       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id)""".stripMargin
+       |  SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.id),
+       |labeled AS (
+       |  SELECT id, MIN(r) AS root FROM reach GROUP BY id)""".stripMargin
 }

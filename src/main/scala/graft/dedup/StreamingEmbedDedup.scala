@@ -3,7 +3,7 @@ package graft.dedup
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.embed.{RpLsh, Similarity}
 
@@ -52,6 +52,7 @@ object StreamingEmbedDedup {
                          ts: Timestamp)
   case class EmbedPair(a_id: Long, b_id: Long, cos: Double, ts: Timestamp)
   case class StoredVec(q: Seq[Long], nq: Long, tsMs: Long)
+      extends HorizonBucket.Entry
 
   /** 2^20 integer quantization + self-norm, bit-identical to
     * [[Similarity.quantized]] (float → double → ·2^20 → floor). */
@@ -103,65 +104,25 @@ object StreamingEmbedDedup {
     dot.toDouble / math.sqrt(a.nq.toDouble * nq.toDouble)
   }
 
+  /** One bucket's bounded vector store ([[HorizonBucket]]): emits a
+    * pair per co-bucket vector whose exact quantized cosine clears
+    * `threshold`. */
   class Processor(threshold: Double, horizonMs: Long, capacity: Int)
-      extends StatefulProcessor[String, BucketedVec, EmbedPair] {
+      extends HorizonBucket[BucketedVec, StoredVec, EmbedPair](
+        "vecs", Encoders.product[StoredVec], horizonMs, capacity) {
 
-    @transient private var store: MapState[Long, StoredVec] = _
+    protected def id(r: BucketedVec): Long = r.vec_id
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      store = getHandle.getMapState[Long, StoredVec](
-        "vecs", Encoders.scalaLong, Encoders.product[StoredVec], TTLConfig.NONE)
+    protected def tsMs(r: BucketedVec): Long = r.ts.getTime
 
-    private def rearm(liveTs: Iterable[Long], timers: TimerValues): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (liveTs.nonEmpty)
-        getHandle.registerTimer(math.max(liveTs.min + horizonMs,
-          timers.getCurrentWatermarkInMs() + 1L))
-    }
+    protected def entry(r: BucketedVec): StoredVec =
+      StoredVec(r.q, r.nq, tsMs(r))
 
-    override def handleInputRows(
-        bk: String,
-        rows: Iterator[BucketedVec],
-        timers: TimerValues): Iterator[EmbedPair] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val m = scala.collection.mutable.Map.empty[Long, StoredVec]
-      store.iterator().foreach { case (id, v) => m(id) = v }
-      m.filterInPlace { (id, v) =>
-        val live = v.tsMs + horizonMs > wm
-        if (!live) store.removeKey(id)
-        live
-      }
-      val out = List.newBuilder[EmbedPair]
-      rows.toSeq.sortBy(r => (r.ts.getTime, r.vec_id)).foreach { r =>
-        if (!m.contains(r.vec_id)) {
-          m.foreach { case (id, v) =>
-            val c = cos(v, r.q, r.nq)
-            if (c >= threshold)
-              out += EmbedPair(math.min(id, r.vec_id),
-                math.max(id, r.vec_id), c, r.ts)
-          }
-          if (m.size < capacity) {
-            m(r.vec_id) = StoredVec(r.q, r.nq, r.ts.getTime)
-            store.updateValue(r.vec_id, m(r.vec_id))
-          }
-        }
-      }
-      rearm(m.values.map(_.tsMs), timers)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(
-        bk: String,
-        timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[EmbedPair] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val live = scala.collection.mutable.ArrayBuffer.empty[Long]
-      store.iterator().foreach { case (id, v) =>
-        if (v.tsMs + horizonMs > wm) live += v.tsMs
-        else store.removeKey(id)
-      }
-      rearm(live, timers)
-      Iterator.empty
+    protected def pair(sid: Long, v: StoredVec, r: BucketedVec): Option[EmbedPair] = {
+      val c = cos(v, r.q, r.nq)
+      if (c >= threshold)
+        Some(EmbedPair(math.min(sid, r.vec_id), math.max(sid, r.vec_id), c, r.ts))
+      else None
     }
   }
 

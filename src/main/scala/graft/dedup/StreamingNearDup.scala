@@ -3,7 +3,7 @@ package graft.dedup
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming MinHash/LSH near-duplicate detection — the ingest-time twin
   * of the batch `dedup_minhash_lsh` family: flag a document that is a
@@ -47,7 +47,7 @@ object StreamingNearDup {
     * watermarking) and the minhash similarity estimate. */
   case class CandidatePair(a_id: Long, b_id: Long, est_sim: Double, ts: Timestamp)
   /** Stored per-bucket signature entry (one MapState row per doc). */
-  case class Stored(sig: Seq[Long], tsMs: Long)
+  case class Stored(sig: Seq[Long], tsMs: Long) extends HorizonBucket.Entry
 
   /** Per-document minhash signature, bit-identical to
     * [[MinHashLSH.signatures]] (md5 first-15-hex-chars → mod P → k
@@ -87,76 +87,24 @@ object StreamingNearDup {
       s"$b:" + (0 until Rows).map(r => sig(b * Rows + r)).mkString("_")
     }
 
-  /** One bucket's bounded signature store. Emits a candidate pair per
-    * (stored, arriving) collision; purges by event-time timer. */
+  /** One bucket's bounded signature store ([[HorizonBucket]]): emits a
+    * candidate pair with its minhash estimate per (stored, arriving)
+    * collision. */
   class Processor(horizonMs: Long, capacity: Int)
-      extends StatefulProcessor[String, BucketedSig, CandidatePair] {
+      extends HorizonBucket[BucketedSig, Stored, CandidatePair](
+        "sigs", Encoders.product[Stored], horizonMs, capacity) {
 
-    @transient private var store: MapState[Long, Stored] = _
+    protected def id(r: BucketedSig): Long = r.doc_id
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      store = getHandle.getMapState[Long, Stored](
-        "sigs", Encoders.scalaLong, Encoders.product[Stored], TTLConfig.NONE)
+    protected def tsMs(r: BucketedSig): Long = r.ts.getTime
 
-    private def estSim(a: Seq[Long], b: Seq[Long]): Double = {
+    protected def entry(r: BucketedSig): Stored = Stored(r.sig, tsMs(r))
+
+    protected def pair(sid: Long, s: Stored, r: BucketedSig): Option[CandidatePair] = {
       var eq = 0; var i = 0
-      while (i < NumHashes) { if (a(i) == b(i)) eq += 1; i += 1 }
-      eq.toDouble / NumHashes
-    }
-
-    /** Re-arm the single per-bucket timer at the earliest entry expiry
-      * (clamped one ms past the watermark — at-or-below never fires). */
-    private def rearm(entries: Iterable[Long], timers: TimerValues): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      if (entries.nonEmpty)
-        getHandle.registerTimer(math.max(entries.min + horizonMs,
-          timers.getCurrentWatermarkInMs() + 1L))
-    }
-
-    override def handleInputRows(
-        bk: String,
-        rows: Iterator[BucketedSig],
-        timers: TimerValues): Iterator[CandidatePair] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val m = scala.collection.mutable.Map.empty[Long, Stored]
-      store.iterator().foreach { case (id, s) => m(id) = s }
-      // purge inline too (cheaper than waiting for the timer when the
-      // bucket is already being touched)
-      m.filterInPlace { (id, s) =>
-        val live = s.tsMs + horizonMs > wm
-        if (!live) store.removeKey(id)
-        live
-      }
-      val out = List.newBuilder[CandidatePair]
-      // deterministic fold order within the batch
-      rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id)).foreach { r =>
-        if (!m.contains(r.doc_id)) { // replayed id = exact-dedup's job
-          m.foreach { case (id, s) =>
-            out += CandidatePair(math.min(id, r.doc_id),
-              math.max(id, r.doc_id), estSim(s.sig, r.sig), r.ts)
-          }
-          if (m.size < capacity) {
-            m(r.doc_id) = Stored(r.sig, r.ts.getTime)
-            store.updateValue(r.doc_id, m(r.doc_id))
-          }
-        }
-      }
-      rearm(m.values.map(_.tsMs), timers)
-      out.result().iterator
-    }
-
-    override def handleExpiredTimer(
-        bk: String,
-        timers: TimerValues,
-        info: ExpiredTimerInfo): Iterator[CandidatePair] = {
-      val wm = timers.getCurrentWatermarkInMs()
-      val live = scala.collection.mutable.ArrayBuffer.empty[Long]
-      store.iterator().foreach { case (id, s) =>
-        if (s.tsMs + horizonMs > wm) live += s.tsMs
-        else store.removeKey(id)
-      }
-      rearm(live, timers)
-      Iterator.empty
+      while (i < NumHashes) { if (s.sig(i) == r.sig(i)) eq += 1; i += 1 }
+      Some(CandidatePair(math.min(sid, r.doc_id), math.max(sid, r.doc_id),
+        eq.toDouble / NumHashes, r.ts))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.embed
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Lloyd-TRAINED IVF coarse codebook — the round-9 closure of "KMeans
@@ -91,19 +92,72 @@ object IvfTrain {
          |  SELECT cid AS seed_id, cq AS sq, cnq AS snq FROM tc$iters)""".stripMargin
   }
 
-  /** The DuckDB mirror of the IVF cell ranking (needs `qv` and
+  /** The IVF cell ranking: every row of `qd` (vec_id, q, nq, …) scored
+    * against every centroid of `seeds` (seed_id, sq, snq) by quantized
+    * cosine, `rn` = 1 the nearest cell (ties to the lowest seed id). The
+    * codebook is broadcast (≤ k rows — a bounded nested loop, not an
+    * unguarded cross join), so the ranking is map-only over the vectors
+    * and the window runs over ≤ k scored rows per vector. The one
+    * definition behind ivf_assign, the probed cells of [[probedCandidates]],
+    * semdedup_prune's cells and kmeans_step (over its raw seeds). */
+  def cellRank(qd: DataFrame, seeds: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("vec_id"))
+      .orderBy(col("cos").desc, col("seed_id"))
+    qd.crossJoin(broadcast(seeds)) // bounded: ≤ k broadcast codebook rows
+      .withColumn("dot", Similarity.dotQ("q", "sq"))
+      .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
+      .withColumn("rn", row_number().over(w))
+  }
+
+  /** Probed-cell candidates: every probe query (`vec_id < 10`, the
+    * first 10 vectors as queries) against every other vector assigned
+    * to one of the query's `nprobe` nearest cells, scored by exact
+    * quantized cosine — (rn, query_id, neighbor_id, cos), `rn` the
+    * probed cell's rank for the query. The candidate join is keyed by
+    * cell, so cost ∝ probed-cell population, never the corpus. Shared
+    * by ivf_search, the ann_frontier sweep and ivf_pq_search. */
+  def probedCandidates(qd: DataFrame, seeds: DataFrame, nprobe: Int): DataFrame = {
+    val assign = cellRank(qd, seeds).filter(col("rn") === 1)
+      .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
+    val probes = cellRank(qd.filter(col("vec_id") < 10), seeds)
+      .filter(col("rn") <= nprobe)
+      .select(col("vec_id").as("query_id"), col("seed_id").as("cell"),
+        col("q").as("qq"), col("nq").as("qnq"), col("rn"))
+    probes.join(assign, "cell")
+      .filter(col("query_id") =!= col("vec_id"))
+      .withColumn("qdot", Similarity.dotQ("qq", "q"))
+      .withColumn("cos", Similarity.cosine(col("qdot"), col("qnq"), col("nq")))
+      .select(col("rn"), col("query_id"), col("vec_id").as("neighbor_id"),
+        col("cos"))
+  }
+
+  /** The DuckDB mirror of [[cellRank]] (needs `qv` and
     * [[duckdbSeedsCte]]'s `seeds` in scope): `cellranked(vec_id,
-    * seed_id, q, nq, rn)` ranks every cell by cosine to the vector,
-    * `rn` = 1 the nearest (ties to the lowest seed id), and
-    * `assign(vec_id, cell, q, nq)` keeps that nearest cell. */
+    * seed_id, q, nq, cos, rn)` ranks every cell by cosine to the
+    * vector, `rn` = 1 the nearest (ties to the lowest seed id), and
+    * `assign(vec_id, cell, q, nq, cos)` keeps that nearest cell. */
   val duckdbAssignCte: String =
     s"""cellranked AS (
-       |  SELECT v.vec_id, s.seed_id, v.q, v.nq,
-       |    ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
+       |  SELECT vec_id, seed_id, q, nq, cos,
+       |    ROW_NUMBER() OVER (PARTITION BY vec_id
+       |                       ORDER BY cos DESC, seed_id) AS rn
+       |  FROM (
+       |    SELECT v.vec_id, s.seed_id, v.q, v.nq,
        |      CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |      s.seed_id) AS rn
-       |  FROM qv v CROSS JOIN seeds s),
+       |        / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) AS cos
+       |    FROM qv v CROSS JOIN seeds s)),
        |assign AS (
-       |  SELECT vec_id, seed_id AS cell, q, nq FROM cellranked WHERE rn = 1)""".stripMargin
+       |  SELECT vec_id, seed_id AS cell, q, nq, cos
+       |  FROM cellranked WHERE rn = 1)""".stripMargin
+
+  /** The DuckDB mirror of [[probedCandidates]] (needs
+    * [[duckdbAssignCte]] in scope): `probed(rn, query_id, neighbor_id,
+    * cos)`. */
+  def duckdbProbedCte(nprobe: Int): String =
+    s"""probed AS (
+       |  SELECT p.rn, p.vec_id AS query_id, a.vec_id AS neighbor_id,
+       |    CAST(${Similarity.duckdbDot("p.q", "a.q")} AS DOUBLE)
+       |      / sqrt(CAST(p.nq AS DOUBLE) * CAST(a.nq AS DOUBLE)) AS cos
+       |  FROM cellranked p JOIN assign a ON p.seed_id = a.cell
+       |  WHERE p.vec_id < 10 AND p.rn <= $nprobe AND p.vec_id <> a.vec_id)""".stripMargin
 }

@@ -82,14 +82,20 @@ object Similarity {
       .withColumn("dot", dotQ("qa", "qb"))
       .withColumn("cos", cosine(col("dot"), col("na"), col("nb")))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
-    val top = graft.plans.TopK.perKey(scored, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), k)
+    val top = cosTopK(scored, Seq("query_id"), k)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     top.withColumn("rk", row_number().over(w))
       .select(col("query_id"), col("neighbor_id"), col("cos"),
         col("rk").cast("long").as("rk"))
   }
+
+  /** Top-`k` rows per `keys` by (cos DESC, neighbor_id) — the one exact
+    * ranking every k-NN, IVF and PQ search ends in — through the custom
+    * per-key top-k operator ([[graft.plans.TopK.perKey]]). */
+  def cosTopK(scored: DataFrame, keys: Seq[String], k: Int): DataFrame =
+    graft.plans.TopK.perKey(scored, keys,
+      Seq(("cos", false), ("neighbor_id", true)), k)
 
   /** All-pairs cosine ≥ threshold within a coarse-partition cell
     * (IVF-style blocking): candidates ∝ Σ cell², never n². */
@@ -125,7 +131,8 @@ object Similarity {
   /** DuckDB mirror of the exact top-`k` of the probe queries
     * `vec_id < 10` ([[knn]] as `EmbedQueries.buildKnnExact` calls it),
     * over `qv`: `ex_pairs(query_id, neighbor_id, cos)` and
-    * `ex(query_id, neighbor_id)`, ranked by (cos DESC, neighbor_id). */
+    * `ex(query_id, neighbor_id, cos, rk)`, ranked by (cos DESC,
+    * neighbor_id). */
   def duckdbExactTopKCte(k: Int): String =
     s"""ex_pairs AS (
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
@@ -133,11 +140,16 @@ object Similarity {
        |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
        |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
        |ex AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM ex_pairs) WHERE rk <= $k)""".stripMargin
+       |${duckdbCosTopK("ex_pairs", "query_id", k)})""".stripMargin
+
+  /** DuckDB mirror of [[cosTopK]] over the CTE named `src`: its rows
+    * with their rank `rk` within `keys` (a SQL column list), rk ≤ `k`. */
+  def duckdbCosTopK(src: String, keys: String, k: Int): String =
+    s"""SELECT * FROM (
+       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY $keys
+       |    ORDER BY cos DESC, neighbor_id) AS rk
+       |  FROM $src)
+       |WHERE rk <= $k""".stripMargin
 
   /** DuckDB integer dot product of two quantized list columns. */
   def duckdbDot(a: String, b: String): String =

@@ -162,8 +162,7 @@ object DedupQueries {
        |${MinHashLSH.duckdbCandidateCte},
        |${MinHashLSH.duckdbVerifiedCte},
        |${Components.duckdbClosureCte("verified")}
-       |SELECT id AS doc_id, MIN(r) AS canonical_id
-       |FROM reach GROUP BY id""".stripMargin
+       |SELECT id AS doc_id, root AS canonical_id FROM labeled""".stripMargin
 
   // --------------------------------------------------- components_star
   // The same canonicalization computed by the O(log n) scale path:
@@ -243,8 +242,6 @@ object DedupQueries {
        |${MinHashLSH.duckdbCandidateCte},
        |${MinHashLSH.duckdbVerifiedCte},
        |${Components.duckdbClosureCte("verified")},
-       |labeled AS (
-       |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |lab AS (
        |  SELECT l.id AS doc_id, l.root, d.n_chars
        |  FROM labeled l JOIN documents d ON d.doc_id = l.id),

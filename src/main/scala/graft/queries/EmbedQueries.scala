@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.embed.{PcaPower, RpLsh, Similarity}
+import graft.embed.{IvfTrain, PcaPower, RpLsh, Similarity}
 
 /** Similarity-search operator exposure over `embeddings` (SURVEY §7.5). */
 object EmbedQueries {
@@ -26,17 +26,8 @@ object EmbedQueries {
 
   private val knnTopKSql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
-       |pairs AS (
-       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rk
-       |  FROM pairs)
-       |SELECT query_id, neighbor_id, cos, rk FROM ranked WHERE rk <= 5""".stripMargin
+       |${Similarity.duckdbExactTopKCte(5)}
+       |SELECT query_id, neighbor_id, cos, rk FROM ex""".stripMargin
 
   // ---------------------------------------------------------- context_pack
   // RAG context assembly at retrieval time: for each query, walk its
@@ -188,41 +179,30 @@ object EmbedQueries {
   // k=8 Lloyd-TRAINED centroids ([[graft.embed.IvfTrain]] — 3 exact-
   // integer training rounds from the lowest-id seeds; round 8 used the
   // raw seeds directly) by integer-quantized cosine, ties to
-  // the lowest seed id. The codebook is broadcast (≤8 rows — a bounded
-  // nested-loop, not an unguarded cross join), so assignment is map-only
-  // over the vectors; the rank-1 window then runs over ≤8 scored
-  // rows per vector. At 100 TB this is THE cell-assignment pass that
+  // the lowest seed id ([[IvfTrain.cellRank]]). At 100 TB this is THE
+  // cell-assignment pass that
   // feeds blocked near-dup (embed_cosine_pairs) and IVF search: cells
   // replace the label column with a data-derived partitioner.
-  private def ivfAssign(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val seeds = graft.SharedStages.ivfCentroids(s, d)
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("seed_id"))
-    qd.crossJoin(broadcast(seeds)) // bounded: 8 broadcast seed rows
-      .withColumn("dot", Similarity.dotQ("q", "sq"))
-      .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-      .withColumn("rn", row_number().over(w))
+  private def ivfAssign(s: SparkSession, d: String): DataFrame =
+    IvfTrain.cellRank(quantizedCorpus(s, d), graft.SharedStages.ivfCentroids(s, d))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"), col("cos"))
-  }
+
+  /** The quantized corpus (vec_id, q, nq) every ANN stage scores. */
+  private[graft] def quantizedCorpus(s: SparkSession, d: String): DataFrame =
+    Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
+      .select(col("vec_id"), col("q"), col("nq"))
+
+  /** The oracle prefix of every IVF query: the quantized corpus, the
+    * trained codebook and the cell assignment. */
+  private val duckdbIvfCtes =
+    s"""${Similarity.duckdbQuantizedCte},
+       |${IvfTrain.duckdbSeedsCte()},
+       |${IvfTrain.duckdbAssignCte}""".stripMargin
 
   private val ivfAssignSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |scored AS (
-       |  SELECT v.vec_id, s.seed_id,
-       |    CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |      / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) AS cos
-       |  FROM qv v CROSS JOIN seeds s),
-       |ranked AS (
-       |  SELECT vec_id, seed_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                       ORDER BY cos DESC, seed_id) AS rn
-       |  FROM scored)
-       |SELECT vec_id, seed_id AS cell, cos FROM ranked WHERE rn = 1""".stripMargin
+    s"""WITH $duckdbIvfCtes
+       |SELECT vec_id, cell, cos FROM assign""".stripMargin
 
   // ------------------------------------------------------ ann_cell_balance
   // IVF cell-population balance: per cell, its vector count plus the
@@ -244,22 +224,9 @@ object EmbedQueries {
   }
 
   private val annCellBalanceSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |scored AS (
-       |  SELECT v.vec_id, s.seed_id,
-       |    CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |      / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) AS cos
-       |  FROM qv v CROSS JOIN seeds s),
-       |assigned AS (
-       |  SELECT vec_id, seed_id AS cell FROM (
-       |    SELECT vec_id, seed_id,
-       |      ROW_NUMBER() OVER (PARTITION BY vec_id
-       |        ORDER BY cos DESC, seed_id) AS rn
-       |    FROM scored)
-       |  WHERE rn = 1),
+    s"""WITH $duckdbIvfCtes,
        |counts AS (
-       |  SELECT cell, COUNT(*) AS n_vecs FROM assigned GROUP BY 1),
+       |  SELECT cell, COUNT(*) AS n_vecs FROM assign GROUP BY 1),
        |summ AS (
        |  SELECT MIN(n_vecs) AS min_n, MAX(n_vecs) AS max_n FROM counts)
        |SELECT c.cell, c.n_vecs, s.min_n, s.max_n,
@@ -286,64 +253,22 @@ object EmbedQueries {
   private def ivfSearch(s: SparkSession, d: String): DataFrame =
     graft.SharedStages.ivfSearchTopK(s, d)
 
-  /** The IVF coarse quantizer shared by ivf_search, the nprobe frontier
-    * and ivf_pq_search: the quantized corpus `(vec_id, q, nq)` and a
-    * ranker that scores rows of it against every centroid, `rn` = 1 for
-    * the nearest cell (ties to the lowest seed id). */
-  private def ivfCells(s: SparkSession, d: String)
-  : (DataFrame, DataFrame => DataFrame) = {
-    import org.apache.spark.sql.expressions.Window
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val seeds = graft.SharedStages.ivfCentroids(s, d)
-    def cellRank(df: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos").desc, col("seed_id"))
-      df.crossJoin(broadcast(seeds)) // bounded: ≤8 broadcast codebook rows
-        .withColumn("dot", Similarity.dotQ("q", "sq"))
-        .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-        .withColumn("rn", row_number().over(w))
-    }
-    (qd, cellRank)
-  }
-
   private[graft] def buildIvfSearch(s: SparkSession, d: String): DataFrame = {
-    val (qd, cellRank) = ivfCells(s, d)
-    val assign = cellRank(qd).filter(col("rn") === 1)
-      .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
-    val probes = cellRank(qd.filter(col("vec_id") < 10))
-      .filter(col("rn") <= IvfProbe)
-      .select(col("vec_id").as("query_id"), col("seed_id").as("cell"),
-        col("q").as("qq"), col("nq").as("qnq"))
-    val scored = probes.join(assign, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("qdot", Similarity.dotQ("qq", "q"))
-      .withColumn("cos", Similarity.cosine(col("qdot"), col("qnq"), col("nq")))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cos"))
+    val scored = IvfTrain.probedCandidates(quantizedCorpus(s, d),
+        graft.SharedStages.ivfCentroids(s, d), IvfProbe)
+      .select(col("query_id"), col("neighbor_id"), col("cos"))
       .distinct() // a neighbor can sit in both probed cells
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), IvfK)
+    Similarity.cosTopK(scored, Seq("query_id"), IvfK)
   }
 
   private val ivfSearchSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |${graft.embed.IvfTrain.duckdbAssignCte},
-       |probes AS (
-       |  SELECT vec_id AS query_id, seed_id AS cell, q AS qq, nq AS qnq
-       |  FROM cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
+    s"""WITH $duckdbIvfCtes,
+       |${IvfTrain.duckdbProbedCte(IvfProbe)},
        |scored AS (
-       |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("p.qq", "a.q")} AS DOUBLE)
-       |      / sqrt(CAST(p.qnq AS DOUBLE) * CAST(a.nq AS DOUBLE)) AS cos
-       |  FROM probes p JOIN assign a ON p.cell = a.cell
-       |  WHERE p.query_id <> a.vec_id),
+       |  SELECT DISTINCT query_id, neighbor_id, cos FROM probed),
        |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, cos FROM ranked WHERE rk <= $IvfK""".stripMargin
+       |${Similarity.duckdbCosTopK("scored", "query_id", IvfK)})
+       |SELECT query_id, neighbor_id, cos FROM ranked""".stripMargin
 
   // ------------------------------------------------------------ ann_recall
   // The ANN quality gate: recall@k of IVF search against exact
@@ -410,26 +335,15 @@ object EmbedQueries {
     * tunes from the stored table. */
   private[graft] def buildAnnFrontier(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (qd, cellRank) = ivfCells(s, d)
-    val assign = cellRank(qd).filter(col("rn") === 1)
-      .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
-    val probes = cellRank(qd.filter(col("vec_id") < 10))
-      .filter(col("rn") <= FrontierProbes.max)
-      .select(col("vec_id").as("query_id"), col("seed_id").as("cell"),
-        col("q").as("qq"), col("nq").as("qnq"), col("rn"))
     val np = FrontierProbes.toDF("nprobe")
-    val scored = probes.join(broadcast(np), col("rn") <= col("nprobe"))
-      .join(assign, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .withColumn("qdot", Similarity.dotQ("qq", "q"))
-      .withColumn("cos", Similarity.cosine(col("qdot"), col("qnq"), col("nq")))
-      .select(col("nprobe"), col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cos"))
+    val scored = IvfTrain.probedCandidates(quantizedCorpus(s, d),
+        graft.SharedStages.ivfCentroids(s, d), FrontierProbes.max)
+      .join(broadcast(np), col("rn") <= col("nprobe"))
+      .select(col("nprobe"), col("query_id"), col("neighbor_id"), col("cos"))
       .distinct() // a neighbor can sit in several probed cells
     val cand = scored.groupBy(col("nprobe"), col("query_id"))
       .agg(count(lit(1)).as("n_cand"))
-    val topk = graft.plans.TopK.perKey(scored, Seq("nprobe", "query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), IvfK)
+    val topk = Similarity.cosTopK(scored, Seq("nprobe", "query_id"), IvfK)
       .select(col("nprobe"), col("query_id"), col("neighbor_id"),
         lit(1L).as("hit"))
     val exact = knnTopK(s, d).select(col("query_id"), col("neighbor_id"))
@@ -443,29 +357,17 @@ object EmbedQueries {
   }
 
   private val annFrontierSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |${graft.embed.IvfTrain.duckdbAssignCte},
-       |probes AS (
-       |  SELECT vec_id AS query_id, seed_id AS cell, q AS qq, nq AS qnq, rn
-       |  FROM cellranked WHERE vec_id < 10 AND rn <= ${FrontierProbes.max}),
+    s"""WITH $duckdbIvfCtes,
+       |${IvfTrain.duckdbProbedCte(FrontierProbes.max)},
        |np AS (SELECT * FROM (VALUES (2), (4), (8)) AS t(nprobe)),
        |scored AS (
-       |  SELECT DISTINCT n.nprobe, p.query_id, a.vec_id AS neighbor_id,
-       |    CAST(${Similarity.duckdbDot("p.qq", "a.q")} AS DOUBLE)
-       |      / sqrt(CAST(p.qnq AS DOUBLE) * CAST(a.nq AS DOUBLE)) AS cos
-       |  FROM np n JOIN probes p ON p.rn <= n.nprobe
-       |  JOIN assign a ON p.cell = a.cell
-       |  WHERE p.query_id <> a.vec_id),
+       |  SELECT DISTINCT n.nprobe, p.query_id, p.neighbor_id, p.cos
+       |  FROM np n JOIN probed p ON p.rn <= n.nprobe),
        |cand AS (
        |  SELECT nprobe, query_id, COUNT(*) AS n_cand
        |  FROM scored GROUP BY 1, 2),
        |iv AS (
-       |  SELECT nprobe, query_id, neighbor_id FROM (
-       |    SELECT nprobe, query_id, neighbor_id,
-       |      ROW_NUMBER() OVER (PARTITION BY nprobe, query_id
-       |                         ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM scored) WHERE rk <= $IvfK),
+       |${Similarity.duckdbCosTopK("scored", "nprobe, query_id", IvfK)}),
        |${Similarity.duckdbExactTopKCte(IvfK)},
        |exn AS (
        |  SELECT n.nprobe, e.query_id, e.neighbor_id FROM np n CROSS JOIN ex e),
@@ -546,8 +448,7 @@ object EmbedQueries {
        |  WHERE CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
        |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) >= CAST(0.35 AS DOUBLE)),
        |${graft.dedup.Components.duckdbClosureCte("pairs")}
-       |SELECT id AS vec_id, MIN(r) AS canonical_id
-       |FROM reach GROUP BY id""".stripMargin
+       |SELECT id AS vec_id, root AS canonical_id FROM labeled""".stripMargin
 
   // ----------------------------------------------- pq_assign / pq_search
   // Product quantization — the MEMORY scale path for similarity search
@@ -653,9 +554,6 @@ object EmbedQueries {
        |  csub[CAST(t.i AS INT)] AS c
        |FROM cb, range(1, ${PqSub + 1}) t(i)""".stripMargin
 
-  /** ADC approximate distances for every (query, vector) pair — the
-    * shared stage 1 of pq_search (rank on adist directly) and
-    * pq_refine (shortlist → exact re-rank). */
   /** ADC approximate-distance table (query_id, neighbor_id, adist) —
     * consumed by pq_search's top-k, pq_recall's approx side AND
     * pq_refine's shortlist, each of which previously re-derived codes
@@ -663,16 +561,22 @@ object EmbedQueries {
   private def pqDists(s: SparkSession, d: String): DataFrame =
     graft.SharedStages.pqAdcDists(s, d)
 
-  private[graft] def buildPqDists(s: SparkSession, d: String): DataFrame = {
-    val subs = pqSubs(s, d)
-    val cb = pqCodebook(s, d)
+  /** PQ codes (vec_id, j, code) of every vector and the ADC lookup table
+    * (query_id, j, code, dd): the probe queries' sub-to-centroid
+    * distances (10 × 8 × 16 rows). Shared by the all-pairs distances and
+    * ivf_pq_search's candidate-restricted ones. */
+  private def pqCodesAdc(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val codes = pqAssignDf(s, d).select(col("vec_id"), col("j"), col("code"))
-    // ADC table: queries' sub-to-centroid distances (10 × 8 × 16 rows)
-    val adc = subs.filter(col("vec_id") < 10)
+    val adc = pqSubs(s, d).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("j"), col("sub").as("qsub"))
-      .join(cb, "j")
+      .join(pqCodebook(s, d), "j")
       .withColumn("dd", d2("qsub", "csub"))
       .select(col("query_id"), col("j"), col("seed_id").as("code"), col("dd"))
+    (codes, adc)
+  }
+
+  private[graft] def buildPqDists(s: SparkSession, d: String): DataFrame = {
+    val (codes, adc) = pqCodesAdc(s, d)
     codes.join(broadcast(adc), Seq("j", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
@@ -680,9 +584,21 @@ object EmbedQueries {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"))
   }
 
+  /** Top-`k` per query of an ADC distance table by (adist, neighbor_id). */
+  private def adcTop(dists: DataFrame, k: Int): DataFrame =
+    graft.plans.TopK.perKey(dists, Seq("query_id"),
+      Seq(("adist", true), ("neighbor_id", true)), k)
+
+  /** DuckDB mirror of [[adcTop]] over the distance CTE named `dists`. */
+  private def duckdbAdcTop(dists: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, adist FROM (
+       |  SELECT query_id, neighbor_id, adist,
+       |    ROW_NUMBER() OVER (PARTITION BY query_id
+       |                       ORDER BY adist, neighbor_id) AS rk
+       |  FROM $dists) WHERE rk <= $k""".stripMargin
+
   private def pqSearchDf(s: SparkSession, d: String): DataFrame =
-    graft.plans.TopK.perKey(pqDists(s, d), Seq("query_id"),
-      Seq(("adist", true), ("neighbor_id", true)), IvfK)
+    adcTop(pqDists(s, d), IvfK)
 
   /** DuckDB codes + per-query ADC lookup table — shared by the
     * all-pairs dists mirror below and the IVF-restricted ivf_pq_search
@@ -701,7 +617,8 @@ object EmbedQueries {
   private val duckdbPqDistCtes: String =
     s"""$duckdbPqCodeAdcCtes,
        |dists AS (
-       |  SELECT a.query_id, v.vec_id, CAST(SUM(a.dd) AS BIGINT) AS adist
+       |  SELECT a.query_id, v.vec_id AS neighbor_id,
+       |    CAST(SUM(a.dd) AS BIGINT) AS adist
        |  FROM codes v JOIN adc a ON v.j = a.j AND v.code = a.code
        |  WHERE a.query_id <> v.vec_id
        |  GROUP BY 1, 2)""".stripMargin
@@ -709,14 +626,8 @@ object EmbedQueries {
   private val pqSearchSql =
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |$duckdbPqCtes,
-       |$duckdbPqDistCtes,
-       |ranked AS (
-       |  SELECT query_id, vec_id, adist,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY adist, vec_id) AS rk
-       |  FROM dists)
-       |SELECT query_id, vec_id AS neighbor_id, adist
-       |FROM ranked WHERE rk <= $IvfK""".stripMargin
+       |$duckdbPqDistCtes
+       |${duckdbAdcTop("dists", IvfK)}""".stripMargin
 
   // ------------------------------------------------------------- pq_recall
   // Recall@k of PQ/ADC search against exact brute-force — the
@@ -744,11 +655,17 @@ object EmbedQueries {
   // lookups by neighbor_id, no shuffle of the embedding table.
   private val PqShort = 20
 
-  private def pqRefine(s: SparkSession, d: String): DataFrame = {
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val short = graft.plans.TopK.perKey(pqDists(s, d), Seq("query_id"),
-      Seq(("adist", true), ("neighbor_id", true)), PqShort)
+  private def pqRefine(s: SparkSession, d: String): DataFrame =
+    refine(quantizedCorpus(s, d), pqDists(s, d))
+
+  /** The two-stage refine of an ADC distance table (query_id,
+    * neighbor_id, adist): its top-PqShort shortlist ([[adcTop]]),
+    * re-ranked by exact quantized cosine to the top-IvfK by (cos DESC,
+    * neighbor_id). pq_refine refines every vector, ivf_pq_search the
+    * probed-cell candidates. `qd` is the quantized corpus (vec_id, q,
+    * nq); both stage-2 joins ride broadcasts of shortlist-sized tables. */
+  private def refine(qd: DataFrame, dists: DataFrame): DataFrame = {
+    val short = adcTop(dists, PqShort)
     val queries = qd.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("q").as("qq"),
         col("nq").as("qnq"))
@@ -759,20 +676,15 @@ object EmbedQueries {
       .withColumn("dot", Similarity.dotQ("qq", "q"))
       .withColumn("cos", Similarity.cosine(col("dot"), col("qnq"), col("nq")))
       .select(col("query_id"), col("neighbor_id"), col("adist"), col("cos"))
-    graft.plans.TopK.perKey(exact, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), IvfK)
+    Similarity.cosTopK(exact, Seq("query_id"), IvfK)
   }
 
-  private val pqRefineSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |$duckdbPqCtes,
-       |$duckdbPqDistCtes,
-       |short AS (
-       |  SELECT query_id, vec_id AS neighbor_id, adist FROM (
-       |    SELECT query_id, vec_id, adist,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY adist, vec_id) AS rk
-       |    FROM dists) WHERE rk <= $PqShort),
+  /** DuckDB mirror of [[refine]] over the distance CTE named `dists`:
+    * the `short` list, its exact-cosine `refined` rows, and the final
+    * top-IvfK select. */
+  private def duckdbRefineSql(dists: String): String =
+    s"""short AS (
+       |  ${duckdbAdcTop(dists, PqShort)}),
        |refined AS (
        |  SELECT s.query_id, s.neighbor_id, s.adist,
        |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
@@ -781,12 +693,14 @@ object EmbedQueries {
        |  JOIN qv a ON a.vec_id = s.query_id
        |  JOIN qv b ON b.vec_id = s.neighbor_id),
        |reranked AS (
-       |  SELECT query_id, neighbor_id, adist, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rk
-       |  FROM refined)
-       |SELECT query_id, neighbor_id, adist, cos
-       |FROM reranked WHERE rk <= $IvfK""".stripMargin
+       |${Similarity.duckdbCosTopK("refined", "query_id", IvfK)})
+       |SELECT query_id, neighbor_id, adist, cos FROM reranked""".stripMargin
+
+  private val pqRefineSql =
+    s"""WITH ${Similarity.duckdbQuantizedCte},
+       |$duckdbPqCtes,
+       |$duckdbPqDistCtes,
+       |${duckdbRefineSql("dists")}""".stripMargin
 
   // --------------------------------------------------------- ivf_pq_search
   // The full production ANN architecture (FAISS IVFPQ + refine, Jégou
@@ -803,24 +717,12 @@ object EmbedQueries {
   // broadcasts — the codes scan and the final point lookups stay
   // map-only; nothing corpus-sized shuffles.
   private def ivfPqSearch(s: SparkSession, d: String): DataFrame = {
-    val (qd, cellRank) = ivfCells(s, d)
-    val assign = cellRank(qd).filter(col("rn") === 1)
-      .select(col("vec_id"), col("seed_id").as("cell"))
-    val probes = cellRank(qd.filter(col("vec_id") < 10))
-      .filter(col("rn") <= IvfProbe)
-      .select(col("vec_id").as("query_id"), col("seed_id").as("cell"))
-    val cand = probes.join(assign, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
+    val qd = quantizedCorpus(s, d)
+    val cand = IvfTrain.probedCandidates(qd,
+        graft.SharedStages.ivfCentroids(s, d), IvfProbe)
+      .select(col("query_id"), col("neighbor_id"))
       .distinct() // a neighbor can sit in both probed cells
-    val subs = pqSubs(s, d)
-    val cb = pqCodebook(s, d)
-    val codes = pqAssignDf(s, d).select(col("vec_id"), col("j"), col("code"))
-    val adc = subs.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("j"), col("sub").as("qsub"))
-      .join(cb, "j")
-      .withColumn("dd", d2("qsub", "csub"))
-      .select(col("query_id"), col("j"), col("seed_id").as("code"), col("dd"))
+    val (codes, adc) = pqCodesAdc(s, d)
     // ADC restricted to probed-cell candidates: the codes scan joins the
     // broadcast candidate list (≤ |Q| × probed-cell pop) and the
     // broadcast ADC table — map-only, then one (query, neighbor) rollup
@@ -829,32 +731,14 @@ object EmbedQueries {
       .join(broadcast(adc), Seq("query_id", "j", "code"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(sum(col("dd")).as("adist"))
-    val short = graft.plans.TopK.perKey(dists, Seq("query_id"),
-      Seq(("adist", true), ("neighbor_id", true)), PqShort)
-    val queries = qd.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"),
-        col("nq").as("qnq"))
-    val exact = qd.select(col("vec_id").as("neighbor_id"), col("q"), col("nq"))
-      .join(broadcast(short), "neighbor_id") // shortlist ≤ |Q|×PqShort rows
-      .join(broadcast(queries), "query_id")  // ≤ |Q| rows
-      .withColumn("dot", Similarity.dotQ("qq", "q"))
-      .withColumn("cos", Similarity.cosine(col("dot"), col("qnq"), col("nq")))
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("cos"))
-    graft.plans.TopK.perKey(exact, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), IvfK)
+    refine(qd, dists)
   }
 
   private val ivfPqSearchSql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |${graft.embed.IvfTrain.duckdbAssignCte},
-       |probes AS (
-       |  SELECT vec_id AS query_id, seed_id AS cell
-       |  FROM cellranked WHERE vec_id < 10 AND rn <= $IvfProbe),
+    s"""WITH $duckdbIvfCtes,
+       |${IvfTrain.duckdbProbedCte(IvfProbe)},
        |cand AS (
-       |  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-       |  FROM probes p JOIN assign a ON p.cell = a.cell
-       |  WHERE p.query_id <> a.vec_id),
+       |  SELECT DISTINCT query_id, neighbor_id FROM probed),
        |$duckdbPqCtes,
        |$duckdbPqCodeAdcCtes,
        |rdists AS (
@@ -863,26 +747,7 @@ object EmbedQueries {
        |  JOIN codes v ON v.vec_id = x.neighbor_id
        |  JOIN adc a ON a.query_id = x.query_id AND a.j = v.j AND a.code = v.code
        |  GROUP BY 1, 2),
-       |short AS (
-       |  SELECT query_id, neighbor_id, adist FROM (
-       |    SELECT query_id, neighbor_id, adist,
-       |      ROW_NUMBER() OVER (PARTITION BY query_id
-       |                         ORDER BY adist, neighbor_id) AS rk
-       |    FROM rdists) WHERE rk <= $PqShort),
-       |refined AS (
-       |  SELECT s.query_id, s.neighbor_id, s.adist,
-       |    CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)
-       |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM short s
-       |  JOIN qv a ON a.vec_id = s.query_id
-       |  JOIN qv b ON b.vec_id = s.neighbor_id),
-       |reranked AS (
-       |  SELECT query_id, neighbor_id, adist, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rk
-       |  FROM refined)
-       |SELECT query_id, neighbor_id, adist, cos
-       |FROM reranked WHERE rk <= $IvfK""".stripMargin
+       |${duckdbRefineSql("rdists")}""".stripMargin
 
   // -------------------------------------------------------- hard_negatives
   // Contrastive-training negative mining: for each query vector the
@@ -904,8 +769,7 @@ object EmbedQueries {
       .withColumn("cos", Similarity.cosine(col("dot"), col("qnq"), col("nq")))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("label").cast("long").as("neg_label"), col("cos"))
-    graft.plans.TopK.perKey(scored, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), 1)
+    Similarity.cosTopK(scored, Seq("query_id"), 1)
   }
 
   private val hardNegativesSql =
@@ -920,12 +784,8 @@ object EmbedQueries {
        |      / sqrt(CAST(s.qnq AS DOUBLE) * CAST(v.nq AS DOUBLE)) AS cos
        |  FROM qv v JOIN qs s ON v.label <> s.q_label),
        |ranked AS (
-       |  SELECT query_id, neighbor_id, neg_label, cos,
-       |    ROW_NUMBER() OVER (PARTITION BY query_id
-       |                       ORDER BY cos DESC, neighbor_id) AS rk
-       |  FROM scored)
-       |SELECT query_id, neighbor_id, neg_label, cos
-       |FROM ranked WHERE rk = 1""".stripMargin
+       |${Similarity.duckdbCosTopK("scored", "query_id", 1)})
+       |SELECT query_id, neighbor_id, neg_label, cos FROM ranked""".stripMargin
 
   // -------------------------------------------------------- cluster_purity
   // Clustering quality vs ground truth — the evaluation gate an
@@ -958,9 +818,7 @@ object EmbedQueries {
   }
 
   private val clusterPuritySql =
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
-       |${graft.embed.IvfTrain.duckdbAssignCte},
+    s"""WITH $duckdbIvfCtes,
        |cl AS (
        |  SELECT a.cell, CAST(e.label AS BIGINT) AS label, COUNT(*) AS n
        |  FROM assign a JOIN embeddings e ON e.vec_id = a.vec_id
@@ -998,18 +856,7 @@ object EmbedQueries {
 
   private def semdedupPrune(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = Tables.embeddings(s, d)
-    val qd = Similarity.quantized(e, "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
-    val seeds = graft.SharedStages.ivfCentroids(s, d)
-    val aw = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("seed_id"))
-    val assign = qd.crossJoin(broadcast(seeds)) // bounded: ≤8 codebook rows
-      .withColumn("dot", Similarity.dotQ("q", "sq"))
-      .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-      .withColumn("rn", row_number().over(aw))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("seed_id").as("cell"))
+    val assign = ivfAssign(s, d).select(col("vec_id"), col("cell"))
     val pairs = graft.SharedStages.rpScored(s, d)
       .filter(col("cos") >= SemTau)
     val sameCell = pairs
@@ -1028,17 +875,8 @@ object EmbedQueries {
   private val semdedupPruneSql = {
     val cosAB = s"CAST(${Similarity.duckdbDot("a.q", "b.q")} AS DOUBLE)" +
       " / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE))"
-    s"""WITH ${Similarity.duckdbQuantizedCte},
-       |${graft.embed.IvfTrain.duckdbSeedsCte()},
+    s"""WITH $duckdbIvfCtes,
        |${RpLsh.duckdbCandidateCte},
-       |assigned AS (
-       |  SELECT vec_id, seed_id AS cell FROM (
-       |    SELECT v.vec_id, s.seed_id,
-       |      ROW_NUMBER() OVER (PARTITION BY v.vec_id ORDER BY
-       |        CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |          / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) DESC,
-       |        s.seed_id) AS rn
-       |    FROM qv v CROSS JOIN seeds s) WHERE rn = 1),
        |verified AS (
        |  SELECT c.a_id, c.b_id, $cosAB AS cos
        |  FROM rp_cand c
@@ -1049,8 +887,8 @@ object EmbedQueries {
        |incell AS (
        |  SELECT v.a_id, v.b_id, v.cos, ca.cell
        |  FROM verified v
-       |  JOIN assigned ca ON ca.vec_id = v.a_id
-       |  JOIN assigned cb ON cb.vec_id = v.b_id AND cb.cell = ca.cell)
+       |  JOIN assign ca ON ca.vec_id = v.a_id
+       |  JOIN assign cb ON cb.vec_id = v.b_id AND cb.cell = ca.cell)
        |SELECT b_id AS vec_id, cell, a_id AS witness_id, cos FROM (
        |  SELECT a_id, b_id, cos, cell,
        |    ROW_NUMBER() OVER (PARTITION BY b_id ORDER BY a_id) AS rn
@@ -1385,17 +1223,26 @@ object EmbedQueries {
   private val AbttTau = 0.2
   private val ResCap = 1L << 20
 
-  private def abttPairs(s: SparkSession, d: String): DataFrame = {
+  /** The k-component ABTT residual `r` of every quantized vector, with
+    * its norm `nr` — (vec_id, label, q, nq, pcs, r, nr), vectors with
+    * nr = 0 dropped (a vector inside the removed subspace has no
+    * residual direction). ONE native codegen pass
+    * ([[graft.functions.AbttResidual]]) — the equivalent chained
+    * zip_with/aggregate HOF form re-evaluates outer scalars per element
+    * (~d^k work per row) and is interpreted; see the expression's
+    * scaladoc for the measurement. Shared by abtt_pairs, whiten_check
+    * and the RP twins. */
+  private def abttResiduals(s: SparkSession, d: String): DataFrame = {
     val comps = graft.SharedStages.pcaTopK(s, d)
-    // ONE native codegen pass ([[graft.functions.AbttResidual]]) — the
-    // equivalent chained zip_with/aggregate HOF form re-evaluates outer
-    // scalars per element (~d^k work per row) and is interpreted; see
-    // the expression's scaladoc for the measurement.
-    val res = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
+    Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
       .withColumn("pcs", typedLit(comps.map(_.v.toSeq)))
       .withColumn("r", expr(s"abtt_residual(q, pcs, CAST($ResCap AS BIGINT))"))
       .withColumn("nr", expr("int_dot(r, r)"))
-      .filter(col("nr") > 0) // a vector inside the removed subspace has no residual direction
+      .filter(col("nr") > 0)
+  }
+
+  private def abttPairs(s: SparkSession, d: String): DataFrame = {
+    val res = abttResiduals(s, d)
       .select(col("label"), col("vec_id"), col("r").as("rs"), col("nr"))
     val a = res.select(col("label").as("cell"), col("vec_id").as("a_id"),
       col("rs").as("ra"), col("nr").as("na"))
@@ -1487,11 +1334,9 @@ object EmbedQueries {
   // Output: 2 rows at any corpus size.
   private def whitenCheck(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val comps = graft.SharedStages.pcaTopK(s, d)
-    val before = comps.head
-    val res = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .withColumn("pcs", typedLit(comps.map(_.v.toSeq)))
-      .withColumn("r", expr(s"abtt_residual(q, pcs, CAST($ResCap AS BIGINT))"))
+    val before = graft.SharedStages.pcaTopK(s, d).head
+    // an all-zero residual (nr = 0) adds nothing to the Gram
+    val res = abttResiduals(s, d)
       .select(col("vec_id"), posexplode(col("r")).as(Seq("i", "qi")))
     val b = res.select(col("vec_id"), col("i").as("j"), col("qi").as("qj"))
     val rg = res.join(b, "vec_id")
@@ -1631,23 +1476,13 @@ object EmbedQueries {
   // gate branches); recall at the whitened metric is partial BY
   // DESIGN, exactly like ann_rp_lsh's, and the oracle mirrors the
   // identical candidate generation so results hash-match.
-  private def abttResidualsDf(s: SparkSession, d: String): DataFrame = {
-    val comps = graft.SharedStages.pcaTopK(s, d)
-    Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .withColumn("pcs", typedLit(comps.map(_.v.toSeq)))
-      .withColumn("r", expr(s"abtt_residual(q, pcs, CAST($ResCap AS BIGINT))"))
-      .withColumn("nr", expr("int_dot(r, r)"))
-      .filter(col("nr") > 0)
-      .select(col("vec_id"), col("r"), col("nr"))
-  }
-
   /** Built once per (session, dir) via
     * [[graft.SharedStages.abttRpPairs]]; the raw-vector bucket
     * candidates come from the shared [[graft.SharedStages.rpCands]]
     * materialization (one bucket pass + self-join serves the raw AND
     * residual metrics). */
   private[graft] def buildAbttPairsRp(s: SparkSession, d: String): DataFrame = {
-    val res = abttResidualsDf(s, d)
+    val res = abttResiduals(s, d)
     val cands = graft.SharedStages.rpCands(s, d)
     cands
       .join(res.select(col("vec_id").as("a_id"), col("r").as("ra"),
@@ -1950,8 +1785,7 @@ object EmbedQueries {
         Similarity.cosine(Similarity.dotQ("qa", "qb"), col("na"), col("nb")))
       .select(col("query_id"), col("true_label"), col("n_label"),
         col("neighbor_id"), col("cos"))
-    val top = graft.plans.TopK.perKey(scored, Seq("query_id"),
-      Seq(("cos", false), ("neighbor_id", true)), KnnClassK)
+    val top = Similarity.cosTopK(scored, Seq("query_id"), KnnClassK)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
       .orderBy(col("c").desc, col("n_label"))
     top.groupBy(col("query_id"), col("true_label"), col("n_label"))
@@ -1978,11 +1812,7 @@ object EmbedQueries {
        |  JOIN qv a ON a.vec_id = c.query_id
        |  JOIN qv b ON b.vec_id = c.neighbor_id),
        |top5 AS (
-       |  SELECT * FROM (
-       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-       |      ORDER BY cos DESC, neighbor_id) AS rk
-       |    FROM scored)
-       |  WHERE rk <= $KnnClassK),
+       |${Similarity.duckdbCosTopK("scored", "query_id", KnnClassK)}),
        |votes AS (
        |  SELECT query_id, true_label, n_label, COUNT(*) AS c
        |  FROM top5 GROUP BY 1, 2, 3),
@@ -2020,8 +1850,7 @@ object EmbedQueries {
 
   private def mmrSelect(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
+    val qd = quantizedCorpus(s, d)
     val cent = qd.select(posexplode(col("q")).as(Seq("i", "qi")))
       .groupBy(col("i")).agg(sum(col("qi")).as("c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1).map(_._2)

@@ -109,18 +109,12 @@ object TrainingQueries {
   private val KmSeeds = 8
 
   private def kmeansStep(s: SparkSession, d: String): DataFrame = {
-    val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
-      .select(col("vec_id"), col("q"), col("nq"))
+    val qd = EmbedQueries.quantizedCorpus(s, d)
     // true k lowest ids (not `vec_id < k`) — robust to sparse/offset id
     // spaces, mirrored exactly in the oracle's ORDER BY … LIMIT
     val seeds = qd.orderBy(col("vec_id")).limit(KmSeeds)
       .select(col("vec_id").as("seed_id"), col("q").as("sq"), col("nq").as("snq"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("seed_id"))
-    val assigned = qd.crossJoin(broadcast(seeds)) // bounded: 8 seed rows
-      .withColumn("dot", Similarity.dotQ("q", "sq"))
-      .withColumn("cos", Similarity.cosine(col("dot"), col("nq"), col("snq")))
-      .withColumn("rn", row_number().over(w))
+    val assigned = graft.embed.IvfTrain.cellRank(qd, seeds) // 8 seed rows
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"), col("q"))
     assigned
@@ -139,24 +133,13 @@ object TrainingQueries {
        |seeds AS (
        |  SELECT vec_id AS seed_id, q AS sq, nq AS snq FROM qv
        |  ORDER BY vec_id LIMIT $KmSeeds),
-       |scored AS (
-       |  SELECT v.vec_id, v.q, s.seed_id,
-       |    CAST(${Similarity.duckdbDot("v.q", "s.sq")} AS DOUBLE)
-       |      / sqrt(CAST(v.nq AS DOUBLE) * CAST(s.snq AS DOUBLE)) AS cos
-       |  FROM qv v CROSS JOIN seeds s),
-       |assigned AS (
-       |  SELECT vec_id, q, seed_id AS cell
-       |  FROM (SELECT vec_id, q, seed_id, cos,
-       |          ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                             ORDER BY cos DESC, seed_id) AS rn
-       |        FROM scored)
-       |  WHERE rn = 1),
+       |${graft.embed.IvfTrain.duckdbAssignCte},
        |comps AS (
        |  -- constant 64-dim range: DuckDB's range() cannot take a lateral
        |  -- column argument; the embeddings table is fixed 64-dim
        |  SELECT a.cell, CAST(t.i - 1 AS BIGINT) AS dim,
        |    a.q[CAST(t.i AS INT)] AS qc
-       |  FROM assigned a, range(1, 65) t(i))
+       |  FROM assign a, range(1, 65) t(i))
        |SELECT cell, dim,
        |  COUNT(*) AS n_members,
        |  (CAST(CAST(SUM(qc) AS BIGINT) AS DOUBLE) / COUNT(*))
@@ -272,8 +255,6 @@ object TrainingQueries {
        |${MinHashLSH.duckdbCandidateCte},
        |${MinHashLSH.duckdbVerifiedCte},
        |${Components.duckdbClosureCte("verified")},
-       |labeled AS (
-       |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |clusters AS (
        |  SELECT root, COUNT(*) AS cluster_size FROM labeled GROUP BY root)
        |SELECT cluster_size, COUNT(*) AS n_clusters
@@ -583,15 +564,13 @@ object TrainingQueries {
        |${MinHashLSH.duckdbCandidateCte},
        |${MinHashLSH.duckdbVerifiedCte},
        |${Components.duckdbClosureCte("verified")},
-       |labels AS (
-       |  SELECT id, MIN(r) AS root FROM reach GROUP BY id),
        |t AS (
        |  SELECT d.doc_id, d.source, CAST(len(k.toks) AS BIGINT) AS n_tok
        |  FROM documents d JOIN tok k ON d.doc_id = k.doc_id),
        |j AS (
        |  SELECT t.source, t.n_tok,
        |    (l.root IS NULL OR l.root = t.doc_id) AS kept
-       |  FROM t LEFT JOIN labels l ON t.doc_id = l.id),
+       |  FROM t LEFT JOIN labeled l ON t.doc_id = l.id),
        |g AS (
        |  SELECT source, COUNT(*) AS n_docs,
        |    CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,

@@ -3,7 +3,7 @@ package graft
 /** Mirrors the driver's smoke check: entry() on sf0.001 yields rows. */
 class EntrySpec extends SparkTestBase {
   /** md5 of the name-sorted oracle SQL map (see the registry case). */
-  private val OracleSqlMd5 = "9b4cda7b01b3ee5c66a101abbe7e774a"
+  private val OracleSqlMd5 = "a4dc4caf5eb8abaae2827aa830d3a9ab"
 
   test("entry: flagship violation derivation returns rows at sf0.001") {
     val df = SparkEntry.entry(spark)

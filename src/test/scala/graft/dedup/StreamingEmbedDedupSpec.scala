@@ -29,14 +29,15 @@ class StreamingEmbedDedupSpec extends SparkTestBase {
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Seq[Float])].collect().toSeq
 
-  private def drive(batches: Seq[Seq[VecEvent]]): Seq[EmbedPair] = {
+  private def drive(batches: Seq[Seq[VecEvent]],
+                    horizonSec: Long): Seq[EmbedPair] = {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption(ProviderKey)
     spark.conf.set(ProviderKey, RocksDb)
     val sink = s"sembed_sink_${System.nanoTime()}"
     try {
       val input = MemoryStream[VecEvent]
-      val q = StreamingEmbedDedup.nearPairs(input.toDS(), Threshold)
+      val q = StreamingEmbedDedup.nearPairs(input.toDS(), Threshold, horizonSec)
         .writeStream.outputMode(OutputMode.Append)
         .option("checkpointLocation",
           Files.createTempDirectory("sembed-ckpt").toString)
@@ -126,12 +127,39 @@ class StreamingEmbedDedupSpec extends SparkTestBase {
     val events = vecs.zipWithIndex.map { case ((id, emb), i) =>
       VecEvent(id, emb, new Timestamp((1000L + i) * 1000L))
     }
-    val got = drive(events.grouped(40).toSeq) // three micro-batches
+    val got = drive(events.grouped(40).toSeq, 600) // three micro-batches
       .map(p => (p.a_id, p.b_id, p.cos)).toSet
     val want = RpLsh.annPairs(vecs.toDF("vec_id", "embedding"),
         "vec_id", "embedding", Threshold)
       .as[(Long, Long, Double)].collect().toSet
     assert(got == want, s"streaming $got != batch $want")
     assert(want.nonEmpty, "corpus slice produced no verified pairs — widen it")
+  }
+
+  test("state purges: a near-dup vector past the horizon is not paired") {
+    val (id, emb) = vecs.head
+    val filler = vecs.last._2
+    def at(v: Long, e: Seq[Float], sec: Long) =
+      VecEvent(v, e, new Timestamp(sec * 1000L))
+    // the copy (cos 1.0, same buckets) within the horizon pairs
+    val near = drive(Seq(Seq(at(id, emb, 1000)), Seq(at(9001L, emb, 1050))), 100)
+    assert(near.map(p => (p.a_id, p.b_id)) == Seq((id, 9001L)), s"$near")
+    // the filler advances the watermark to 5000 - 100 = 4900 > 1000 + 100,
+    // so the stored vector is purged before its copy arrives: by the
+    // timer in the no-data batch that follows the filler's
+    val far = Seq(
+      Seq(at(id, emb, 1000)),
+      Seq(at(9002L, filler, 5000)),
+      Seq(at(9001L, emb, 5001)))
+    val byTimer = drive(far, 100)
+    // with no-data batches off no timer fires before the copy's batch,
+    // whose rows are handled first: only the inline purge drops it
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(noData, "false")
+    val inline = try drive(far, 100) finally spark.conf.unset(noData)
+    Seq(byTimer, inline).foreach { got =>
+      assert(!got.exists(p => (p.a_id, p.b_id) == (id, 9001L)),
+        s"pair across a purged horizon: $got")
+    }
   }
 }

@@ -106,6 +106,31 @@ class StreamingNearDupSpec extends SparkTestBase {
       s"pair flagged across a purged horizon: $got")
   }
 
+  test("capacity: a full bucket pairs an arrival but does not store it") {
+    // doc 3 repeats doc 1's text, so every bucket doc 3 lands in already
+    // holds doc 1; doc 2 (a near-dup of both) shares some of them
+    val batches = Seq(
+      Seq(doc(1L, "the quick brown fox jumps over the lazy dog", 1000)),
+      Seq(doc(2L, "the quick brown fox jumps over the lazy cat", 1010)),
+      Seq(doc(3L, "the quick brown fox jumps over the lazy dog", 1020)))
+    def pairs(capacity: Int) =
+      run(batches, capacity = capacity).map(p => (p.a_id, p.b_id)).toSet
+    // uncapped, doc 2 is stored beside doc 1 and doc 3 pairs with both
+    assert(pairs(256) == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+    // capacity 1: doc 2 pairs with the stored doc 1 but is not stored,
+    // so doc 3 finds only doc 1 in the buckets it shares with doc 2
+    assert(pairs(1) == Set((1L, 2L), (1L, 3L)))
+  }
+
+  test("a batch folds in event-time order: the pair carries the later arrival's time") {
+    // the higher id arrives first, so id order and time order disagree
+    val got = run(Seq(Seq(
+      doc(5L, "the quick brown fox jumps over the lazy dog", 1000),
+      doc(2L, "the quick brown fox jumps over the lazy cat", 1001))))
+    assert(got.map(p => (p.a_id, p.b_id, p.ts.getTime)) ==
+      Seq((2L, 5L, 1001000L)), s"$got")
+  }
+
   test("checkpoint restart: MapState + timers resume; no lost or double pairs") {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption(ProviderKey)

@@ -110,4 +110,22 @@ class IvfRecallSpec extends SparkTestBase {
     val meanPurity = rows.map(_._5).sum / rows.length
     info(f"cells=${rows.length} mean purity=$meanPurity%.2f")
   }
+
+  test("every vector's IVF cell agrees across ivf_assign, cluster_purity, ann_cell_balance and semdedup_prune") {
+    def rows(name: String, cols: String*) =
+      SparkEntry.queries(name)(spark, sf).select(cols.head, cols.tail: _*)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val cell = rows("ivf_assign", "vec_id", "cell").toMap
+    assert(cell.size == graft.Tables.embeddings(spark, sf).count())
+    val sizes = cell.values.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    assert(rows("cluster_purity", "cell", "n_vecs").toMap == sizes)
+    assert(rows("ann_cell_balance", "cell", "n_vecs").toMap == sizes)
+    val pruned = SparkEntry.queries("semdedup_prune")(spark, sf)
+      .select("vec_id", "cell", "witness_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(pruned.nonEmpty, "no semantic duplicates to check cells on")
+    pruned.foreach { case (v, c, w) =>
+      assert(cell(v) == c && cell(w) == c, s"vec $v / witness $w vs cell $c")
+    }
+  }
 }
