@@ -167,7 +167,7 @@ object Bench {
     // round 4's artifact that no steady-state run reproduces).
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet")
+      try Tables.load(spark, sfDir, t)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         // stderr is outside the 2000-byte stdout tail budget — a cold

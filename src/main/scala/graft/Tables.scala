@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -10,8 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.select`/`.filter` and let the parquet scan prune.
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `spark.read.parquet` with the schema it would infer, read from the
+    * footer on the driver ([[FooterSchema]]): inference runs one Spark
+    * job per call, so a query that loads four tables ran four jobs
+    * before its plan existed. Every call reads the footer again (a few
+    * ms), so a rewritten table never gets a stale schema. Where no
+    * footer schema is found the plain read infers as before, with
+    * Spark's own errors. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    FooterSchema.of(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+  }
 
   /** Spread a DataFrame across the cluster before a CPU-bound stage.
     *

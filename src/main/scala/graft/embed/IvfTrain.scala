@@ -109,8 +109,8 @@ object IvfTrain {
       .withColumn("rn", row_number().over(w))
   }
 
-  /** Probed-cell candidates: every probe query (`vec_id < 10`, the
-    * first 10 vectors as queries) against every other vector assigned
+  /** Probed-cell candidates: every probe query
+    * ([[Similarity.isProbe]]) against every other vector assigned
     * to one of the query's `nprobe` nearest cells, scored by exact
     * quantized cosine — (rn, query_id, neighbor_id, cos), `rn` the
     * probed cell's rank for the query. The candidate join is keyed by
@@ -119,7 +119,7 @@ object IvfTrain {
   def probedCandidates(qd: DataFrame, seeds: DataFrame, nprobe: Int): DataFrame = {
     val assign = cellRank(qd, seeds).filter(col("rn") === 1)
       .select(col("vec_id"), col("seed_id").as("cell"), col("q"), col("nq"))
-    val probes = cellRank(qd.filter(col("vec_id") < 10), seeds)
+    val probes = cellRank(qd.filter(Similarity.isProbe), seeds)
       .filter(col("rn") <= nprobe)
       .select(col("vec_id").as("query_id"), col("seed_id").as("cell"),
         col("q").as("qq"), col("nq").as("qnq"), col("rn"))
@@ -159,5 +159,5 @@ object IvfTrain {
        |    CAST(${Similarity.duckdbDot("p.q", "a.q")} AS DOUBLE)
        |      / sqrt(CAST(p.nq AS DOUBLE) * CAST(a.nq AS DOUBLE)) AS cos
        |  FROM cellranked p JOIN assign a ON p.seed_id = a.cell
-       |  WHERE p.vec_id < 10 AND p.rn <= $nprobe AND p.vec_id <> a.vec_id)""".stripMargin
+       |  WHERE ${Similarity.duckdbIsProbe("p.vec_id")} AND p.rn <= $nprobe AND p.vec_id <> a.vec_id)""".stripMargin
 }

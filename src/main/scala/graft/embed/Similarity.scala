@@ -26,6 +26,14 @@ import org.apache.spark.sql.functions._
 object Similarity {
   val Scale = 1048576L // 2^20
 
+  /** The probe query set of every ANN query and of the exact side its
+    * recall is read against: the first `ProbeQueries` vectors by id.
+    * [[isProbe]] is its Spark predicate over a `vec_id` column and
+    * [[duckdbIsProbe]] its DuckDB one over the named id column. */
+  val ProbeQueries = 10
+  val isProbe: org.apache.spark.sql.Column = col("vec_id") < ProbeQueries
+  def duckdbIsProbe(vecId: String): String = s"$vecId < $ProbeQueries"
+
   /** (id, embedding: array<float>) → (id, q: array<bigint>, nq: bigint).
     * Both steps are native codegen expressions: the quantization is
     * [[graft.functions.IntQuantize]] (bit-identical to the
@@ -129,7 +137,7 @@ object Similarity {
        |  FROM embeddings)""".stripMargin
 
   /** DuckDB mirror of the exact top-`k` of the probe queries
-    * `vec_id < 10` ([[knn]] as `EmbedQueries.buildKnnExact` calls it),
+    * ([[isProbe]]; [[knn]] as `EmbedQueries.buildKnnExact` calls it),
     * over `qv`: `ex_pairs(query_id, neighbor_id, cos)` and
     * `ex(query_id, neighbor_id, cos, rk)`, ranked by (cos DESC,
     * neighbor_id). */
@@ -138,7 +146,7 @@ object Similarity {
        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
        |    CAST(${duckdbDot("a.q", "b.q")} AS DOUBLE)
        |      / sqrt(CAST(a.nq AS DOUBLE) * CAST(b.nq AS DOUBLE)) AS cos
-       |  FROM qv a JOIN qv b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
+       |  FROM qv a JOIN qv b ON ${duckdbIsProbe("a.vec_id")} AND a.vec_id <> b.vec_id),
        |ex AS (
        |${duckdbCosTopK("ex_pairs", "query_id", k)})""".stripMargin
 

@@ -31,10 +31,17 @@ object KafkaTelemetrySource {
 
   /** Kafka record → parsed telemetry rows. Carries the broker ingest
     * time (`kafka_ts`) for the monotonic latency variant (ST4/§7.6.7).
-    * Tolerant parse: unwrap double-encoding, PERMISSIVE, drop nulls. */
+    * Tolerant parse: unwrap double-encoding, PERMISSIVE, drop nulls.
+    *
+    * The P1 drop is a generator, not a Filter: the optimizer pushes a
+    * Filter on `t` below the parse Project by inlining `from_json` into
+    * the condition, so every record was parsed once in the Filter, again
+    * in the Project, and once more per deriver conjunct pushed after it.
+    * A generator's output cannot be inlined, so `from_json` runs once. */
   def parsedTelemetry(kafkaDf: DataFrame): DataFrame =
     taggedTelemetry(kafkaDf)
-      .filter(col("t").isNotNull && col("t.__corrupt").isNull) // P1 drop
+      .select(explode(filter(array(col("t")),
+        t => t.isNotNull && t("__corrupt").isNull)).as("t"), col("kafka_ts"))
       .select((TelemetrySchema.telemetry.fieldNames.toSeq
         .map(f => col(s"t.$f")) :+ col("kafka_ts")): _*)
 

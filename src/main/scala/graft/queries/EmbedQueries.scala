@@ -21,7 +21,7 @@ object EmbedQueries {
 
   private[graft] def buildKnnExact(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
-    Similarity.knn(e.filter(col("vec_id") < 10), e, "vec_id", "embedding", 5)
+    Similarity.knn(e.filter(Similarity.isProbe), e, "vec_id", "embedding", 5)
   }
 
   private val knnTopKSql =
@@ -567,7 +567,7 @@ object EmbedQueries {
     * ivf_pq_search's candidate-restricted ones. */
   private def pqCodesAdc(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val codes = pqAssignDf(s, d).select(col("vec_id"), col("j"), col("code"))
-    val adc = pqSubs(s, d).filter(col("vec_id") < 10)
+    val adc = pqSubs(s, d).filter(Similarity.isProbe)
       .select(col("vec_id").as("query_id"), col("j"), col("sub").as("qsub"))
       .join(pqCodebook(s, d), "j")
       .withColumn("dd", d2("qsub", "csub"))
@@ -610,7 +610,7 @@ object EmbedQueries {
        |  SELECT s.vec_id AS query_id, s.j, c.seed_id AS code,
        |    CAST(list_sum(list_transform(range(1, ${PqSub + 1}),
        |      i -> (s.sub[i] - c.csub[i]) * (s.sub[i] - c.csub[i]))) AS BIGINT) AS dd
-       |  FROM subs s JOIN cb c ON s.j = c.j WHERE s.vec_id < 10)""".stripMargin
+       |  FROM subs s JOIN cb c ON s.j = c.j WHERE ${Similarity.duckdbIsProbe("s.vec_id")})""".stripMargin
 
   /** The DuckDB mirror of [[pqDists]] (codes → ADC table → summed
     * approximate distances), shared by pq_search and pq_refine. */
@@ -666,7 +666,7 @@ object EmbedQueries {
     * nq); both stage-2 joins ride broadcasts of shortlist-sized tables. */
   private def refine(qd: DataFrame, dists: DataFrame): DataFrame = {
     val short = adcTop(dists, PqShort)
-    val queries = qd.filter(col("vec_id") < 10)
+    val queries = qd.filter(Similarity.isProbe)
       .select(col("vec_id").as("query_id"), col("q").as("qq"),
         col("nq").as("qnq"))
     val exact = qd.select(col("vec_id").as("neighbor_id"), col("q"),
@@ -761,7 +761,7 @@ object EmbedQueries {
   private def hardNegatives(s: SparkSession, d: String): DataFrame = {
     val qd = Similarity.quantized(Tables.embeddings(s, d), "vec_id", "embedding")
       .select(col("vec_id"), col("label"), col("q"), col("nq"))
-    val queries = qd.filter(col("vec_id") < 10)
+    val queries = qd.filter(Similarity.isProbe)
       .select(col("vec_id").as("query_id"), col("label").as("q_label"),
         col("q").as("qq"), col("nq").as("qnq"))
     val scored = qd.join(broadcast(queries), col("label") =!= col("q_label"))
@@ -776,7 +776,7 @@ object EmbedQueries {
     s"""WITH ${Similarity.duckdbQuantizedCte},
        |qs AS (
        |  SELECT vec_id AS query_id, label AS q_label, q AS qq, nq AS qnq
-       |  FROM qv WHERE vec_id < 10),
+       |  FROM qv WHERE ${Similarity.duckdbIsProbe("vec_id")}),
        |scored AS (
        |  SELECT s.query_id, v.vec_id AS neighbor_id,
        |    CAST(v.label AS BIGINT) AS neg_label,

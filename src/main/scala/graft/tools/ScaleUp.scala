@@ -43,14 +43,14 @@ object ScaleUp {
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")
 
     def copies(t: String)(tf: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = graft.Tables.load(spark, src, t)
       write((0 until factor).map(k => tf(base, k)).reduce(_ unionByName _), t)
     }
     def shift(df: DataFrame, k: Int, keys: String*): DataFrame =
       keys.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(k * Off)))
 
     Seq("region", "nation").foreach { t =>
-      write(spark.read.parquet(s"$src/$t.parquet"), t)
+      write(graft.Tables.load(spark, src, t), t)
     }
     copies("customer")(shift(_, _, "c_custkey"))
     copies("supplier")(shift(_, _, "s_suppkey"))
@@ -73,7 +73,7 @@ object ScaleUp {
     // vectors stay distinct for factor < 2d. The round-13 form rotated by
     // k unguarded — slice() threw on negative lengths for k ≥ d (= 64),
     // which silently killed the embeddings write at factor 100.
-    val dim = spark.read.parquet(s"$src/embeddings.parquet")
+    val dim = graft.Tables.load(spark, src, "embeddings")
       .selectExpr("size(embedding)").head().getInt(0)
     require(factor < 2 * dim,
       s"embedding isometries exhausted: factor $factor needs < ${2 * dim}")
