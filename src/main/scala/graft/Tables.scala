@@ -13,10 +13,9 @@ import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 object Tables {
   /** `spark.read.parquet` with the schema it would infer, read from the
     * footer on the driver ([[FooterSchema]]): inference runs one Spark
-    * job per call, so a query that loads four tables ran four jobs
-    * before its plan existed. Every call reads the footer again (a few
-    * ms), so a rewritten table never gets a stale schema. Where no
-    * footer schema is found the plain read infers as before, with
+    * job per call, before the query's plan exists. Every call reads the
+    * footer again (a few ms), so a rewritten table never gets a stale
+    * schema. Where no footer schema is found the plain read infers, with
     * Spark's own errors. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"

@@ -22,25 +22,30 @@ object FooterSchema {
 
   /** None for a missing path, a partitioned directory, a directory with
     * no parquet file, or an unreadable footer: the caller then infers as
-    * before, so Spark raises its own error for each. */
+    * before, so Spark raises its own error for each. None too when the
+    * session merges parquet schemas, since inference then reads every
+    * footer. */
   def of(spark: SparkSession, path: String): Option[StructType] = {
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val conf = session.sessionState.newHadoopConf()
     val p = new Path(path)
     try {
-      if (!p.getFileSystem(conf).exists(p)) None
+      if (session.sessionState.conf.isParquetSchemaMergingEnabled ||
+          !p.getFileSystem(conf).exists(p)) None
       else {
         val index = new InMemoryFileIndex(session, Seq(p), Map.empty, None)
-        val leaves = index.allFiles().sortBy(_.getPath.toString)
-        def named(n: String) = leaves.find(_.getPath.getName == n)
-        val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
-        val footer = named(PARQUET_COMMON_METADATA_FILE)
-          .orElse(named(PARQUET_METADATA_FILE))
-          .orElse(leaves.find(f => !summaries(f.getPath.getName)))
         if (index.partitionSchema.nonEmpty) None
-        else footer.flatMap(f => ParquetFileFormat.readSchema(
-          ParquetFileFormat.readParquetFootersInParallel(conf, Seq(f),
-            ignoreCorruptFiles = false), session))
+        else {
+          val leaves = index.allFiles().sortBy(_.getPath.toString)
+          def named(n: String) = leaves.find(_.getPath.getName == n)
+          val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+          named(PARQUET_COMMON_METADATA_FILE)
+            .orElse(named(PARQUET_METADATA_FILE))
+            .orElse(leaves.find(f => !summaries(f.getPath.getName)))
+            .flatMap(f => ParquetFileFormat.readSchema(
+              ParquetFileFormat.readParquetFootersInParallel(conf, Seq(f),
+                ignoreCorruptFiles = false), session))
+        }
       }
     } catch { case NonFatal(_) => None }
   }

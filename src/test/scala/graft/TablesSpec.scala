@@ -37,6 +37,18 @@ class TablesSpec extends SparkTestBase {
     }
   }
 
+  test("with schema merging on, the schema is the merge of every part's footer") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("tables-merge").toString
+    Seq(1L).toDF("a").write.parquet(s"$dir/t.parquet")
+    Seq("x").toDF("b").write.mode("append").parquet(s"$dir/t.parquet")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(plainSchema(dir, "t").fieldNames.sorted.toSeq == Seq("a", "b"))
+      assert(Tables.load(spark, dir, "t").schema == plainSchema(dir, "t"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
   test("a missing table fails exactly as the plain read does") {
     val plain = intercept[Exception](plainSchema("/nonexistent", "region"))
     val loaded = intercept[Exception](Tables.load(spark, "/nonexistent", "region"))
